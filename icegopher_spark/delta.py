@@ -552,15 +552,6 @@ def _mapped_schemas(schema_json: dict) -> tuple[dict, dict, bool]:
     return walk(schema_json, False), walk(schema_json, True), renamed
 
 
-def _physical_partition_name(meta: dict, logical: str) -> str:
-    """Physical name of a top-level column (partitionValues are keyed
-    by physical name under column mapping)."""
-    for f in json.loads(meta["schemaString"])["fields"]:
-        if f["name"] == logical:
-            return (f.get("metadata") or {}).get(_PHYSICAL_NAME_KEY, logical)
-    return logical
-
-
 def _commit_timestamp(table_path: str, version: int) -> int:
     """Commit time in ms, in the protocol's precedence order:
     `commitInfo.inCommitTimestamp` when the writer recorded one

@@ -587,13 +587,16 @@ def _changelog_df_impl(
             cols = inserts.columns
             # collision-free helper names (r13 ADVICE): a table whose
             # schema already contains _sgn/_net would make the
-            # groupBy/agg ambiguous — suffix until unique
-            sgn_c, net_c = "_sgn", "_net"
+            # groupBy/agg ambiguous, and a source column named like the
+            # explode alias would be dropped with it — suffix until unique
             taken = set(cols)
-            while sgn_c in taken:
-                sgn_c += "_x"
-            while net_c in taken or net_c == sgn_c:
-                net_c += "_x"
+            helpers = []
+            for name in ("_sgn", "_net", "_net_dup"):
+                while name in taken:
+                    name += "_x"
+                taken.add(name)
+                helpers.append(name)
+            sgn_c, net_c, dup_c = helpers
             sgn = inserts.select(*cols, F.lit(1).alias(sgn_c)).unionByName(
                 deletes.select(*cols, F.lit(-1).alias(sgn_c))
             )
@@ -616,9 +619,9 @@ def _changelog_df_impl(
                             F.lit(1).cast("long"),
                             F.abs(F.col(net_c)).cast("long"),
                         )
-                    ).alias(net_c + "_dup"),
+                    ).alias(dup_c),
                 )
-                .drop(net_c + "_dup")
+                .drop(dup_c)
             )
             out = netted if out is None else out.unionByName(netted)
             continue

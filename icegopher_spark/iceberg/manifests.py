@@ -10,6 +10,8 @@ the manifest only for ADDED entries or when the manifest's sequence is
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field as dfield
 from enum import IntEnum
 from typing import Any
@@ -335,6 +337,99 @@ def partition_avro_fields_for(spec, schema) -> list[dict]:
     return out
 
 
+# -- decode memo ------------------------------------------------------------
+
+# The memo's cap, in decoded items. A record weighs _RECORD_ITEMS for
+# its fixed fields plus one per item of its lists and maps, which are
+# mostly per-column stats, so a record's weight grows with the table's
+# width as its size does. Manifest entries of 1 to 100 columns take
+# 200-235 B per item once decoded, keys included, so the cap holds at
+# most ~56 MiB.
+DECODE_MEMO_MAX_ITEMS = 250_000
+_RECORD_ITEMS = 8
+
+
+class _DecodeMemo:
+    """Decoded OCF records keyed by the file's raw bytes, LRU-evicted by
+    total weight in items (see ``_weight``).
+
+    Manifests and manifest lists are write-once files under unique
+    names, so no entry is ever stale: a rewritten, torn or corrupted
+    file has different bytes, misses, and decodes (or fails) exactly as
+    without the memo. Only successful decodes are inserted. The cached
+    records are shared: callers must treat them as read-only and build
+    their own objects from them."""
+
+    def __init__(self, max_items: int):
+        self.max_items = max_items
+        self._lock = threading.Lock()
+        # key -> (records, weight)
+        self._records: OrderedDict[bytes, tuple[list[dict], int]] = OrderedDict()
+        self._n_items = 0
+        self._hits = self._misses = self._evictions = 0
+
+    def records(self, data: bytes) -> list[dict]:
+        key = bytes(data)
+        with self._lock:
+            held = self._records.get(key)
+            if held is not None:
+                self._records.move_to_end(key)
+                self._hits += 1
+                return held[0]
+            self._misses += 1
+        # decode outside the lock; two threads missing on the same file
+        # both decode it and the second insert is a no-op
+        _, _, records = read_ocf(key)
+        weight = _weight(records)
+        if weight > self.max_items:
+            return records
+        with self._lock:
+            if key not in self._records:
+                self._records[key] = (records, weight)
+                self._n_items += weight
+                while self._n_items > self.max_items:
+                    _, (_, old) = self._records.popitem(last=False)
+                    self._n_items -= old
+                    self._evictions += 1
+        return records
+
+    def stats(self) -> dict[str, int]:
+        with self._lock:
+            return {
+                "hits": self._hits,
+                "misses": self._misses,
+                "evictions": self._evictions,
+                "files": len(self._records),
+                "items": self._n_items,
+            }
+
+
+def _weight(records: list[dict]) -> int:
+    # an empty file still costs its key, so it weighs as one record
+    return sum(_RECORD_ITEMS + _items(r) for r in records) or _RECORD_ITEMS
+
+
+def _items(record: dict) -> int:
+    """Items in the lists and maps of a decoded record, through nested
+    records but not inside list elements."""
+    n = 0
+    for v in record.values():
+        if type(v) is list:
+            n += len(v)
+        elif type(v) is dict:
+            n += _items(v)
+    return n
+
+
+_DECODE_MEMO = _DecodeMemo(DECODE_MEMO_MAX_ITEMS)
+
+
+def decode_cache_stats() -> dict[str, int]:
+    """Hit/miss/eviction counts of the process-wide manifest decode
+    memo, plus the files it holds now and their weight in items."""
+    return _DECODE_MEMO.stats()
+
+
 # -- IO helpers -------------------------------------------------------------
 
 
@@ -342,6 +437,10 @@ def _to_int_map(entries: list[dict] | None) -> dict[int, Any] | None:
     if entries is None:
         return None
     return {e["key"]: e["value"] for e in entries}
+
+
+def _copy_list(values: list | None) -> list | None:
+    return None if values is None else list(values)
 
 
 def _from_int_map(m: dict[int, Any] | None) -> list[dict] | None:
@@ -353,7 +452,7 @@ def _from_int_map(m: dict[int, Any] | None) -> list[dict] | None:
 def read_manifest_list(data: bytes) -> list[ManifestFile]:
     """Decode a manifest-list Avro (V1 or V2 — missing V2 fields default,
     reference manifest.go:273-296)."""
-    _, _, records = read_ocf(data)
+    records = _DECODE_MEMO.records(data)
     out = []
     for r in records:
         out.append(
@@ -451,8 +550,10 @@ def read_manifest_entries(
     data: bytes, discard_deleted: bool = False
 ) -> list[ManifestEntry]:
     """Decode manifest entries WITHOUT inheritance applied; see
-    ``fetch_entries`` for the inherited view."""
-    _, _, records = read_ocf(data)
+    ``fetch_entries`` for the inherited view. Every call builds fresh
+    objects, copying the mutable values of the memoized records, so
+    inheritance and caller mutation never reach the memo."""
+    records = _DECODE_MEMO.records(data)
     out = []
     for r in records:
         status = ManifestEntryStatus(r["status"])
@@ -469,7 +570,7 @@ def read_manifest_entries(
                     file_path=df["file_path"],
                     file_format=df.get("file_format", FORMAT_PARQUET),
                     content=DataFileContent(df.get("content", 0) or 0),
-                    partition=df.get("partition", {}) or {},
+                    partition=dict(df.get("partition") or {}),
                     record_count=df.get("record_count", 0),
                     file_size_in_bytes=df.get("file_size_in_bytes", 0),
                     column_sizes=_to_int_map(df.get("column_sizes")),
@@ -480,8 +581,8 @@ def read_manifest_entries(
                     lower_bounds=_to_int_map(df.get("lower_bounds")),
                     upper_bounds=_to_int_map(df.get("upper_bounds")),
                     key_metadata=df.get("key_metadata"),
-                    split_offsets=df.get("split_offsets"),
-                    equality_ids=df.get("equality_ids"),
+                    split_offsets=_copy_list(df.get("split_offsets")),
+                    equality_ids=_copy_list(df.get("equality_ids")),
                     sort_order_id=df.get("sort_order_id"),
                     referenced_data_file=df.get("referenced_data_file"),
                     content_offset=df.get("content_offset"),

@@ -361,35 +361,6 @@ def minhash_band_entries(
     return band_entries_from_signatures(sigs, num_hashes, bands)
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-    max_doc_freq: int | None = STOP_SHINGLE_MAX_DF,
-) -> DataFrame:
-    """LSH candidate pairs: docs agreeing on ≥1 MinHash band.
-
-    rows = bands of size num_hashes/bands; band key = xxhash64 of the
-    band slice → explode → self-join on (band, key) → distinct pairs.
-    At scale the exploded frame is num_docs × bands rows of 3 longs.
-    """
-    band_entries = minhash_band_entries(df, text_col, id_col, num_hashes, bands, n, max_doc_freq)
-    a, b = band_entries.alias("a"), band_entries.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -938,37 +909,6 @@ def minhash_dedup_incremental(
     # drop): the candidate layer is the only approximation
     sh = shingle_hash_rows(needed, text_col, id_col, n)
     return exact_jaccard_verify(sh, cands, threshold)
-
-
-def simhash64(col: Column, n: int = 1) -> Column:
-    """64-bit SimHash over word shingles, fully vectorized JVM-side.
-
-    For each bit b: sum over shingles of ±1 by bit b of xxhash64(shingle);
-    bit set iff the sum is positive. Composed with F.aggregate (sequential
-    fold) — no UDF, no shuffle.
-    """
-    sh = word_shingles(col, n)
-    init = F.array_repeat(F.lit(0), 64)
-    # Constant per-bit masks (bit 63 = the bigint sign bit).
-    masks = F.array(
-        *[F.lit(2**b if b < 63 else -(2**63)).cast("bigint") for b in range(64)]
-    )
-
-    def step(acc: Column, s: Column) -> Column:
-        h = F.xxhash64(s)
-        bits = F.transform(
-            masks, lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)
-        )
-        return F.zip_with(acc, bits, lambda a, d: a + d)
-
-    counts = F.aggregate(sh, init, step)
-    # bit b of the result = sign(counts[b]); weights as constant array,
-    # with bit 63 mapped to long-min (two's complement sign bit).
-    weights = F.array(
-        *[F.lit(2**b if b < 63 else -(2**63)).cast("bigint") for b in range(64)]
-    )
-    signed = F.zip_with(counts, weights, lambda c, w: F.when(c > 0, w).otherwise(F.lit(0).cast("bigint")))
-    return F.aggregate(signed, F.lit(0).cast("bigint"), lambda acc, v: acc + v)
 
 
 def md5_hash32(c: Column) -> Column:

@@ -55,6 +55,25 @@ def test_cow_delete_nets_carryovers(spark, tmp_path):
     assert rows == {(3, "delete")}
 
 
+@pytest.mark.parametrize("extra", [("_net_dup",), ("_sgn", "_net", "_net_x_dup")])
+def test_cow_netting_keeps_source_columns_named_like_helpers(spark, tmp_path, extra):
+    """Netting adds _sgn, _net and an explode column named after _net;
+    a source column with any of those names must survive with its
+    values (a source _net_dup was dropped with the explode column)."""
+    fields = [NestedField(1, "k", LongType(), True)]
+    fields += [NestedField(2 + i, c, LongType(), False) for i, c in enumerate(extra)]
+    t = W.create_table(str(tmp_path / "helpers"), Schema(tuple(fields), schema_id=0))
+    ddl = ", ".join(["k long"] + [f"{c} long" for c in extra])
+    rows = [tuple([k] + [k * 10 + i for i in range(len(extra))]) for k in (1, 2, 3)]
+    t = W.append(t, spark.createDataFrame(rows, ddl).coalesce(1))
+    s1 = t.metadata.snapshots[0].snapshot_id
+    t = W.delete_where(t, spark, E.equal_to("k", 3))  # CoW rewrite: netted
+    ch = changelog_df(t, spark, from_snapshot_id=s1)
+    cols = ["k", *extra, "_change_type"]
+    assert set(cols) <= set(ch.columns)
+    assert [tuple(r[c] for c in cols) for r in ch.collect()] == [(*rows[2], "delete")]
+
+
 def test_replace_snapshot_skipped(spark, tmp_path):
     from icegopher_spark.iceberg.maintenance import compact_data_files
 

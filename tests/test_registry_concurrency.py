@@ -82,3 +82,70 @@ def test_concurrent_simhash_no_leak(spark):
     with ThreadPoolExecutor(max_workers=4) as ex:
         list(ex.map(run, range(8)))
     assert len(_SIMHASH_SIG_CACHE) == 1  # exactly the latest call's slot
+
+
+def test_concurrent_manifest_decode_memo_at_cap():
+    """8 threads over more manifests than the decode memo holds: it
+    never exceeds its cap, its record count matches what it holds,
+    every call is counted once as a hit or a miss, and every caller
+    gets the file's own entries."""
+    import random
+    import struct
+    import sys
+
+    from icegopher_spark.iceberg.manifests import (
+        DataFile,
+        ManifestEntry,
+        ManifestEntryStatus,
+        _DecodeMemo,
+        _weight,
+        write_manifest,
+    )
+
+    pfields = [{"name": "flag", "type": ["null", "string"], "field-id": 1000}]
+    files = [
+        write_manifest(
+            [
+                ManifestEntry(
+                    ManifestEntryStatus.ADDED,
+                    1,
+                    DataFile(
+                        file_path=f"/d/{m}-{i}.parquet",
+                        partition={"flag": str(m)},
+                        lower_bounds={1: struct.pack("<q", i)},
+                    ),
+                )
+                for i in range(1 + m % 4)
+            ],
+            pfields,
+        )
+        for m in range(16)
+    ]
+    cap = 100  # 2 to 10 of the 16 files, weighing 10 to 40 items each
+    memo = _DecodeMemo(max_items=cap)
+    calls_per_thread = 300
+
+    def run(seed: int) -> None:
+        rng = random.Random(seed)
+        for _ in range(calls_per_thread):
+            m = rng.randrange(len(files))
+            recs = memo.records(files[m])
+            assert [r["data_file"]["file_path"] for r in recs] == [
+                f"/d/{m}-{i}.parquet" for i in range(1 + m % 4)
+            ]
+            assert memo.stats()["items"] <= cap
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave threads inside the memo
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            list(ex.map(run, range(8), timeout=120))
+    finally:
+        sys.setswitchinterval(switch)
+
+    s = memo.stats()
+    assert s["hits"] + s["misses"] == 8 * calls_per_thread
+    assert s["evictions"] > 0 and s["hits"] > 0
+    assert s["items"] <= cap
+    assert s["items"] == sum(_weight(r) for r, _ in memo._records.values())
+    assert s["files"] == len(memo._records)

@@ -1,15 +1,26 @@
-"""Generate PLANS.md: annotated physical plans for flagship queries.
+"""Dump physical plans: the annotated PLANS.md tour, or before/after
+plan files for a round's change.
 
-Run: python tools/dump_plans.py  (writes PLANS.md at repo root)
+    python tools/dump_plans.py
+        writes PLANS.md at repo root
+    python tools/dump_plans.py --round r14 --suffix before|after [--out DIR] q1 q2 ...
+        writes plans/<round>/<query>_<suffix>.txt
 
-Each entry prints the `.explain("formatted")` (or simple) plan at
-sf0.001 with a short note on the scale-relevant property the plan
+Each PLANS.md entry prints the `.explain("formatted")` (or simple) plan
+at sf0.001 with a short note on the scale-relevant property the plan
 exhibits. Regenerate after any planner-visible change; the plan-shape
 tests in tests/test_plans.py assert the same properties mechanically.
+
+Round dumps take `.explain("formatted")` for the named queries: run once
+at the pre-change commit (--suffix before) and once at HEAD (--suffix
+after), then diff the two. Plan shape is scale-invariant, so sf0.001
+shows Exchange count, join strategy, PushedFilters/ReadSchema and
+codegen spans.
 """
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -201,8 +212,7 @@ def plan_of(df, mode: str) -> str:
     )
 
 
-def main() -> None:
-    spark = get_spark("plan-dump")
+def write_plans_md(spark) -> None:
     out = [
         "# PLANS — annotated physical plans (sf0.001, regenerate via "
         "`python tools/dump_plans.py`)",
@@ -221,6 +231,31 @@ def main() -> None:
         out += [f"## {name}", "", note, "", "```", plan, "```", ""]
     (Path(_REPO) / "PLANS.md").write_text("\n".join(out))
     print(f"wrote PLANS.md ({len(ENTRIES)} plans)")
+
+
+def write_round_plans(spark, out_dir: Path, suffix: str, names: list[str]) -> None:
+    out_dir.mkdir(parents=True, exist_ok=True)
+    for name in names:
+        txt = plan_of(QUERIES[name].fn(spark, SF), "formatted").rstrip() + "\n"
+        p = out_dir / f"{name}_{suffix}.txt"
+        p.write_text(txt)
+        print(f"wrote {p} ({len(txt.splitlines())} lines)")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--round", help="dump the named queries to plans/<round>/")
+    ap.add_argument("--suffix", default="after", help="before|after (default: after)")
+    ap.add_argument("--out", type=Path, help="output dir (default: plans/<round>)")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.round is None:
+        if args.queries or args.out:
+            ap.error("queries and --out need --round")
+        write_plans_md(get_spark("plan-dump"))
+        return
+    out_dir = args.out or Path(_REPO) / "plans" / args.round
+    write_round_plans(get_spark(f"plan-dump-{args.round}"), out_dir, args.suffix, args.queries)
 
 
 if __name__ == "__main__":
