@@ -58,6 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from . import session_cache
+
 __all__ = [
     "DeltaSnapshot",
     "load_delta",
@@ -872,18 +874,12 @@ def _mask_cardinality(payload) -> int:
     return mask_cardinality(payload)
 
 
-# Decoded-positions cache: DV blobs are immutable (content-addressed by
+# Decoded-positions memo: DV blobs are immutable (content-addressed by
 # the descriptor's uuid/offset or inline body, both inside the shipped
 # decode spec), so a decoded positions frame keyed by the full spec set
 # can persist across scans — the same in-memory DV caching delta-spark
-# does. Bounded FIFO (8 entries ≈ a few MB of positions each at most);
-# eviction unpersists. Keyed per SparkContext id so a restarted session
-# never serves frames from a dead one.
-_MASK_DF_CACHE: dict[tuple, DataFrame] = {}
-_MASK_DF_ORDER: list[tuple] = []
-_MASK_DF_MAX = 8
-
-
+# does. session_cache bounds persisted frames (8, a few MB of positions
+# each at most) and unpersists on eviction.
 def _mask_positions_df(spark: SparkSession, position_masks: dict) -> DataFrame:
     """(__delta_path, __delta_pos) rows for every masked file, decoded
     EXECUTOR-SIDE: the driver ships one small decode-spec row per file
@@ -900,18 +896,6 @@ def _mask_positions_df(spark: SparkSession, position_masks: dict) -> DataFrame:
         (_uri_path(p), json.dumps(_payload_jsonable(payload)))
         for p, (_, payload) in position_masks.items()
     ]
-    cache_key = (spark.sparkContext.applicationId, tuple(sorted(rows)))
-    hit = _MASK_DF_CACHE.get(cache_key)
-    if hit is not None:
-        return hit
-    # parallelize with exactly the slice count needed: createDataFrame
-    # on a local list defaults to defaultParallelism (32) partitions and
-    # a repartition adds a shuffle — ~0.4s of empty-task scheduling per
-    # scan on metadata-sized inputs (the r11→r12 delta-DML regression)
-    src = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, min(len(rows), 32)),
-        "mask_path string, mask_job string",
-    )
 
     def _explode(batches):
         import numpy as np
@@ -928,20 +912,20 @@ def _mask_positions_df(spark: SparkSession, position_masks: dict) -> DataFrame:
                     }
                 )
 
-    out = src.mapInPandas(
-        _explode, "__delta_path string, __delta_pos long"
-    ).persist()
-    _MASK_DF_CACHE[cache_key] = out
-    _MASK_DF_ORDER.append(cache_key)
-    while len(_MASK_DF_ORDER) > _MASK_DF_MAX:
-        old = _MASK_DF_ORDER.pop(0)
-        stale = _MASK_DF_CACHE.pop(old, None)
-        if stale is not None:
-            try:
-                stale.unpersist()
-            except Exception:
-                pass  # session already gone
-    return out
+    def build() -> DataFrame:
+        # parallelize with exactly the slice count needed: createDataFrame
+        # on a local list defaults to defaultParallelism (32) partitions and
+        # a repartition adds a shuffle — ~0.4s of empty-task scheduling per
+        # scan on metadata-sized inputs (the r11→r12 delta-DML regression)
+        src = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, min(len(rows), 32)),
+            "mask_path string, mask_job string",
+        )
+        return src.mapInPandas(
+            _explode, "__delta_path string, __delta_pos long"
+        ).persist()
+
+    return session_cache.memo(spark, ("dv_positions", tuple(sorted(rows))), build)
 
 
 def _scan_files(

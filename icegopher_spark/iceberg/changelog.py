@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session_cache
 from .manifests import (
     DataFileContent,
     ManifestContent,
@@ -46,22 +47,6 @@ from .table import Table, _maybe_broadcast_deletes, strip_file_scheme
 
 CHANGE_TYPE = "_change_type"
 COMMIT_SNAPSHOT = "_commit_snapshot_id"
-
-# Rotating registry of the previous changelog call's persisted
-# (path, pos) pair frames, KEYED PER TABLE LOCATION (r8 advice #3:
-# a module-global list let a call on table B unpersist table A's
-# in-flight caches, and a mid-loop raise grew the list unboundedly).
-# Unpersist is correctness-safe: a still-held old result merely
-# recomputes — the registry exists only to bound cached-block
-# residency. Mutations are lock-guarded (r9 verdict #8): without the
-# lock, two interleaved calls could orphan a frame list (persisted
-# blocks leaking for the session's lifetime). Concurrent calls on the
-# SAME table may still steal each other's warm cache — that costs a
-# recompute, never correctness or a leak.
-_PAIR_CACHES: dict[str, list] = {}
-_REG_LOCK = __import__("threading").Lock()
-
-
 
 def _lineage(table: Table, from_id: int, to_id: int | None) -> list:
     """Snapshots strictly after ``from_id`` up to ``to_id``, oldest first."""
@@ -245,23 +230,19 @@ def changelog_df(
 ) -> DataFrame:
     # release the PREVIOUS call's persisted pair frames for THIS table
     # (bounded residency; an old still-held result merely recomputes),
-    # and drain our own entries if the build raises mid-loop so a
-    # failed call can't leak cached blocks (r8 advice #3)
-    loc = table.location
-    with _REG_LOCK:
-        prev = _PAIR_CACHES.pop(loc, [])
-        _PAIR_CACHES[loc] = []
-    for df in prev:
-        df.unpersist()
+    # and release our own if the build raises mid-loop so a failed
+    # call can't leak cached blocks (r8 advice #3). The slot is keyed
+    # per table location, so a call on table B never releases table A's
+    # in-flight frames; concurrent calls on the SAME table may steal
+    # each other's warm cache — a recompute, never a leak.
+    slot = ("changelog", table.location)
+    session_cache.release(spark, slot)
     try:
         return _changelog_df_impl(
             table, spark, from_snapshot_id, to_snapshot_id, net
         )
     except BaseException:
-        with _REG_LOCK:
-            prev = _PAIR_CACHES.pop(loc, [])
-        for df in prev:
-            df.unpersist()
+        session_cache.release(spark, slot)
         raise
 
 
@@ -404,13 +385,12 @@ def _changelog_df_impl(
             # pairs — without the cache the Puffin DV decode + parent
             # delete-state reads + anti-join all executed twice per
             # snapshot (r8 review wave 6). Narrow (path, pos) rows; the
-            # emitted frames keep the cache in lineage, so the rotating
-            # registry below releases the PREVIOUS changelog call's
-            # caches (same bounded-residency contract as
-            # dedup._INC_PROBE_CACHE).
-            pairs = pairs.persist()
-            with _REG_LOCK:
-                _PAIR_CACHES.setdefault(table.location, []).append(pairs)
+            # emitted frames keep the cache in lineage, so the next
+            # changelog call on this table releases these caches
+            # (bounded residency).
+            pairs = session_cache.hold(
+                spark, ("changelog", table.location), pairs.persist()
+            )
             target_paths = {r["_del_path"] for r in pairs.select("_del_path").distinct().collect()}
             # entries for the targeted data files, read from the CHILD
             # snapshot's state (intended): MOR positional deletes target

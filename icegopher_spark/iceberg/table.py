@@ -20,6 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import session_cache
 from .evaluators import (
     InclusiveMetricsEvaluator,
     ManifestEvaluator,
@@ -878,47 +879,30 @@ class TableScan:
         return df
 
 
+# Session-scoped memo of resolved file-list readers (r14, guide §5):
+# `spark.read.schema(s).parquet(*paths)` costs ~80 ms of py4j/schema
+# resolution per call, and the bench re-plans every scan 3×. The memo
+# holds the UNRESOLVED reader plan only (metadata, never rows; every
+# action still reads the files), keyed on (session, format, schema,
+# exact file list). Sound because data files in both table formats are
+# write-once: a path set either still resolves identically or is never
+# re-requested (post-vacuum metadata no longer plans the removed file,
+# and rebuilt fixtures get fresh task-UUID file names).
+def _memo_reader(spark: SparkSession, read_schema, fmt: str, paths: list) -> DataFrame:
+    def build() -> DataFrame:
+        reader = spark.read.schema(read_schema)
+        return reader.format("orc").load(paths) if fmt == "ORC" else reader.parquet(*paths)
+
+    key = ("reader", fmt, read_schema.json(), tuple(paths))
+    return session_cache.memo(spark, key, build)
+
+
 # Broadcast the delete side of a MOR join only when the manifests bound
 # it small. file_size_in_bytes is the COMPRESSED parquet size; ~8×
 # in-memory expansion of a 32 MB cap stays well inside executor memory.
 # Above the cap the join is left unhinted: a table carrying GBs of
 # deletes would OOM every executor under a forced broadcast, while AQE
 # still picks broadcast at runtime when the distinct key set collapses.
-# Session-scoped memo of resolved file-list readers (r14, guide §5):
-# `spark.read.schema(s).parquet(*paths)` costs ~80 ms of py4j/schema
-# resolution per call, and the bench re-plans every scan 3×. The memo
-# holds the UNRESOLVED reader plan only (metadata, never rows; every
-# action still reads the files), keyed on (applicationId, format,
-# schema, exact file list). Sound because data files in both table
-# formats are write-once: a path set either still resolves identically
-# or is never re-requested (post-vacuum metadata no longer plans the
-# removed file, and rebuilt fixtures get fresh task-UUID file names).
-# FIFO-capped so a long session over many fixture states stays bounded.
-_READER_MEMO: dict = {}
-_READER_MEMO_CAP = 256
-
-
-def _memo_reader(spark: SparkSession, read_schema, fmt: str, paths: list) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        fmt,
-        read_schema.json(),
-        tuple(paths),
-    )
-    df = _READER_MEMO.get(key)
-    if df is None:
-        reader = spark.read.schema(read_schema)
-        df = (
-            reader.format("orc").load(paths)
-            if fmt == "ORC"
-            else reader.parquet(*paths)
-        )
-        if len(_READER_MEMO) >= _READER_MEMO_CAP:
-            _READER_MEMO.pop(next(iter(_READER_MEMO)))
-        _READER_MEMO[key] = df
-    return df
-
-
 _BROADCAST_DELETE_BYTES = 32 * 1024 * 1024
 
 

@@ -11,7 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from .. import session_cache
 from .text import token_count
 
 # Knuth multiplicative hash constant (2^32 / golden ratio), applied in
@@ -25,18 +27,9 @@ _HASH_MOD = 2**32
 # cached frames for the application's lifetime (r6 review). Rotating
 # bounds storage to one frame per site; unpersisting the previous one
 # merely degrades a still-held old plan to recompute (correct).
-_PERSISTED: dict[str, DataFrame] = {}
-
-
 def _persist_rotating(key: str, df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    old = _PERSISTED.get(key)
-    if old is not None:
-        old.unpersist(blocking=False)
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED[key] = df
-    return df
+    session_cache.release(df.sparkSession, key)
+    return session_cache.hold(df.sparkSession, key, df.persist(StorageLevel.MEMORY_AND_DISK))
 
 
 # Bucketing uses F.pmod so a negative id still lands in [0, 2^32) —

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import session_cache
 from .text import tokens
 
 
@@ -804,18 +805,6 @@ def minhash_dedup_from_index(
     return exact_jaccard_verify(sh, cands, threshold)
 
 
-# One-slot-PER-INDEX registry of the previous incremental probe's
-# persisted band entries, keyed by the index table's location (r8
-# advice #3: a single global slot let a probe against index B
-# unpersist index A's in-flight cache — correctness-safe but the perf
-# win silently vanished). Mutations are lock-guarded (r9 verdict #8)
-# so interleaved probes can't orphan a persisted frame; concurrent
-# probes against the SAME index may still steal each other's warm
-# cache — a recompute, never a leak. Tests reach entries via .values().
-_INC_PROBE_CACHE: dict = {}
-_REG_LOCK = __import__("threading").Lock()
-
-
 def minhash_dedup_incremental(
     spark,
     table,
@@ -853,16 +842,14 @@ def minhash_dedup_incremental(
         # (band, key, id) rows, batch-sized. The returned DataFrame's
         # lineage keeps this cache referenced, so a long-lived session
         # issuing many probes would accumulate cached blocks (r7
-        # advice); the one-slot registry below unpersists the PREVIOUS
-        # probe's cache on each new call — correctness-safe (worst
-        # case the previous, not-yet-collected result recomputes its
-        # signatures), bounding residency to one batch.
-        new_e = new_e.persist()
-        with _REG_LOCK:
-            prev = _INC_PROBE_CACHE.pop(table.location, None)
-            _INC_PROBE_CACHE[table.location] = new_e
-        if prev is not None:
-            prev.unpersist()
+        # advice); each call releases the PREVIOUS probe's cache for
+        # this index — correctness-safe (worst case the previous,
+        # not-yet-collected result recomputes its signatures), bounding
+        # residency to one batch per index (r8 advice #3: one slot for
+        # all indexes let a probe on index B release index A's cache).
+        new_e = session_cache.rotate(
+            spark, ("minhash_probe", table.location), new_e.persist()
+        )
     stored = table.scan().to_df(spark).select("band", "key", "id")
     all_e = stored.unionByName(new_e)
     # density cap over the UNION (global frequency); capping the build
@@ -974,11 +961,6 @@ def simhash_df(
     return sums.select("id", F.expr(f"({sh_sql}) AS sh"))
 
 
-# One-slot rotating registry of the previous simhash call's persisted
-# signature frame (see the persist site in simhash_neardup_pairs).
-_SIMHASH_SIG_CACHE: list = []
-
-
 def simhash_neardup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1017,15 +999,9 @@ def simhash_neardup_pairs(
     # explode + 64-way groupBy — the expensive part — recomputes for
     # each (r8 verdict #4: this is the dedup_simhash cost creep;
     # measured 3.18 s → 1.39 s at sf0.1 with the persist). Narrow
-    # (id, sh) rows, O(docs)×16 B; the one-slot registry bounds
-    # residency to the latest call, same contract as
-    # _INC_PROBE_CACHE / changelog._PAIR_CACHES.
-    d = d.persist()
-    with _REG_LOCK:
-        prev = _SIMHASH_SIG_CACHE.pop() if _SIMHASH_SIG_CACHE else None
-        _SIMHASH_SIG_CACHE.append(d)
-    if prev is not None:
-        prev.unpersist()
+    # (id, sh) rows, O(docs)×16 B; releasing the previous call's frame
+    # bounds residency to the latest call.
+    d = session_cache.rotate(d.sparkSession, "simhash_signatures", d.persist())
     # 1. identical signatures (hamming 0): instead of a separate
     #    id-level self-join, ONE groupBy(sh) serves both the distinct
     #    signature set for the block tables AND the ≥2-member groups

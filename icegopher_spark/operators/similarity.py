@@ -21,6 +21,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import session_cache
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in double — deterministic order, so
@@ -625,17 +627,6 @@ def group_centroids(
     )
 
 
-# -- persisted IVF index over an Iceberg table -------------------------------
-
-# Bump when the quantizer/search kernel changes semantics (kmeans
-# seeding, cell assignment, cosine fold): a persisted index built by an
-# older kernel would otherwise validate as healthy while silently
-# changing probe recall across code revisions.
-# One-slot rotating registry for semdedup's persisted cluster
-# assignment (see the persist site inside semdedup).
-_SEMDEDUP_ASSIGN_CACHE: list = []
-
-
 def _metadata_row_count(df: DataFrame) -> int | None:
     """Exact row count from parquet footers — no data scan — when the
     frame is a pure column-prune/repartition over parquet files (the
@@ -765,14 +756,11 @@ def semdedup(
     # the assigned frame feeds FOUR consumers (pair join both sides,
     # anti-join, keep-side output) — without a persist each one re-runs
     # the embedding scan AND the centroid-assignment Arrow kernel.
-    # One-slot rotating registry, same residency contract as
-    # dedup._SIMHASH_SIG_CACHE; at scale real pipelines materialize
-    # the assignment anyway.
-    assigned = assigned.persist()
-    prev = _SEMDEDUP_ASSIGN_CACHE.pop() if _SEMDEDUP_ASSIGN_CACHE else None
-    if prev is not None:
-        prev.unpersist()
-    _SEMDEDUP_ASSIGN_CACHE.append(assigned)
+    # Rotating the slot bounds residency to the latest call; at scale
+    # real pipelines materialize the assignment anyway.
+    assigned = session_cache.rotate(
+        assigned.sparkSession, "semdedup_assign", assigned.persist()
+    )
     a = assigned.select(
         F.col("cluster"),
         F.col("id").alias("id_a"),
@@ -816,6 +804,12 @@ def semdedup(
     )
 
 
+# -- persisted IVF index over an Iceberg table -------------------------------
+
+# Bump when the quantizer/search kernel changes semantics (kmeans
+# seeding, cell assignment, cosine fold): a persisted index built by an
+# older kernel would otherwise validate as healthy while silently
+# changing probe recall across code revisions.
 IVF_KERNEL_VERSION = "2"  # v2: centroids moved to a metadata sidecar
 
 

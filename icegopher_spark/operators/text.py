@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import session_cache
+
 # Deterministic stopword lists used by the language-ID heuristic.
 # Ordered: first match wins in the tie-break (score desc, lang asc).
 LANG_STOPWORDS: dict[str, list[str]] = {
@@ -650,11 +652,6 @@ def paragraph_dedup(
     )
 
 
-# One-slot rotating registry for bigram_stats' persisted per-doc pair
-# multiplicities (see the persist site inside bigram_stats).
-_BIGRAM_DBG_CACHE: list = []
-
-
 def bigram_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -705,14 +702,11 @@ def bigram_stats(
     bg = bg.repartition("w1", "w2")
     dbg = bg.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("m"))
     # persisted because the (w1, w2)-partitioned frame feeds the pair
-    # count AND the join probe (narrow (doc, pair, m) rows; one-slot
-    # registry bounds residency) — the cache preserves the shared
-    # partitioning, so downstream stays exchange-free
-    dbg = dbg.persist()
-    prev = _BIGRAM_DBG_CACHE.pop() if _BIGRAM_DBG_CACHE else None
-    if prev is not None:
-        prev.unpersist()
-    _BIGRAM_DBG_CACHE.append(dbg)
+    # count AND the join probe (narrow (doc, pair, m) rows; rotating
+    # the slot bounds residency to the latest call) — the cache
+    # preserves the shared partitioning, so downstream stays
+    # exchange-free
+    dbg = session_cache.rotate(dbg.sparkSession, "bigram_dbg", dbg.persist())
     cc = dbg.groupBy("w1", "w2").agg(F.sum("m").alias("c12"))
     c1 = cc.groupBy("w1").agg(F.sum("c12").alias("c1"))
     joined = dbg.join(cc, ["w1", "w2"]).join(c1, ["w1"])

@@ -23,6 +23,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import session_cache
 from .operators import asof, dedup, similarity, text
 
 TABLES = (
@@ -49,21 +50,7 @@ def _scale_out(spark: SparkSession, df: DataFrame) -> DataFrame:
     Filters still push down: Catalyst moves deterministic predicates
     through Repartition to the scan."""
     target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if _input_partitions(df) < target:
-        return df.repartition(target)
-    return df
-
-
-_NPART_CACHE: dict[str, int] = {}
-
-
-def _input_partitions(df: DataFrame) -> int:
-    """Scan partition count, cached per file list (the .rdd conversion
-    costs ~0.5-1s on first use per plan)."""
-    key = ";".join(sorted(df.inputFiles()))
-    if key not in _NPART_CACHE:
-        _NPART_CACHE[key] = df.rdd.getNumPartitions()
-    return _NPART_CACHE[key]
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
 
 
 # Session-scoped catalog of resolved base-table scans (r14, guide §5
@@ -75,37 +62,27 @@ def _input_partitions(df: DataFrame) -> int:
 # memo IS that catalog. It caches only the UNRESOLVED SCAN PLAN
 # (metadata) — never rows: every action on the returned frame still
 # scans the parquet inputs, so nothing here is result caching. Keyed
-# on (applicationId, shuffle-partition target, sf_dir, table): a new
-# session gets fresh plans, and a conf change that would alter
-# _scale_out's repartition target misses the memo. The base tables are
-# the driver's immutable inputs (fixture tables live elsewhere and go
-# through Table.from_location, never load()).
-_LOAD_CACHE: dict[tuple, DataFrame] = {}
-
-
+# on (session, shuffle-partition target, sf_dir, table): a new session
+# gets fresh plans, and a conf change that would alter _scale_out's
+# repartition target misses the memo. The base tables are the driver's
+# immutable inputs (fixture tables live elsewhere and go through
+# Table.from_location, never load()).
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        spark.conf.get("spark.sql.shuffle.partitions", "32"),
-        sf_dir,
-        name,
-    )
-    df = _LOAD_CACHE.get(key)
-    if df is not None:
-        return df
-    if name == "events":
-        # Schema-adaptive: the driver has shipped events.ts both as
-        # TIMESTAMP(NANOS) and as timestamp[us]; events_io branches on
-        # the file footer and normalizes ts to TimestampType.
-        from .events_io import load_events
+    """A memoized frame freezes the _scale_out decision taken on the miss for its key."""
 
-        df = load_events(spark, f"{sf_dir}/events.parquet")
-    else:
+    def build() -> DataFrame:
+        if name == "events":
+            # Schema-adaptive: the driver has shipped events.ts both as
+            # TIMESTAMP(NANOS) and as timestamp[us]; events_io branches
+            # on the file footer and normalizes ts to TimestampType.
+            from .events_io import load_events
+
+            return load_events(spark, f"{sf_dir}/events.parquet")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if name in _CPU_HEAVY_TABLES:
-            df = _scale_out(spark, df)
-    _LOAD_CACHE[key] = df
-    return df
+        return _scale_out(spark, df) if name in _CPU_HEAVY_TABLES else df
+
+    target = spark.conf.get("spark.sql.shuffle.partitions", "32")
+    return session_cache.memo(spark, ("load", target, sf_dir, name), build)
 
 
 @dataclass

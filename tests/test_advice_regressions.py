@@ -301,7 +301,8 @@ def test_fileio_dir_ops_local(tmp_path):
 def test_incremental_probe_unpersists_previous(spark, tmp_path):
     """r7 advice #3: repeated incremental probes must not accumulate
     cached blocks — each call unpersists the previous call's persisted
-    band entries (one-slot registry)."""
+    band entries (one slot per index)."""
+    from icegopher_spark import session_cache
     from icegopher_spark.operators import dedup as D
 
     loc = str(tmp_path / "idx")
@@ -311,16 +312,16 @@ def test_incremental_probe_unpersists_previous(spark, tmp_path):
     )
     table = D.minhash_index_write(spark, corpus.filter("doc_id = 1"), loc)
     new = corpus.filter("doc_id = 2")
-    D._INC_PROBE_CACHE.clear()
+    slot = ("minhash_probe", table.location)
     r1 = D.minhash_dedup_incremental(spark, table, new, corpus)
-    assert len(D._INC_PROBE_CACHE) == 1
-    first = next(iter(D._INC_PROBE_CACHE.values()))
+    assert len(session_cache.held(spark, slot)) == 1
+    first = session_cache.held(spark, slot)[0]
     assert first.storageLevel.useMemory
     r2 = D.minhash_dedup_incremental(spark, table, new, corpus)
     # previous probe's cache was released; current one took its slot
     assert not first.storageLevel.useMemory
-    assert len(D._INC_PROBE_CACHE) == 1
-    assert next(iter(D._INC_PROBE_CACHE.values())) is not first
+    assert len(session_cache.held(spark, slot)) == 1
+    assert session_cache.held(spark, slot)[0] is not first
     # unpersist is correctness-safe: the earlier result still computes
     assert r1.count() == r2.count()
 

@@ -6,6 +6,11 @@ column, no count() pruning) inside a dedicated job group, and reports:
 
   wall seconds | #Spark jobs | #stages | query name
 
+Each row of /tmp/profile_queries.json also carries ``cache`` and
+``decode``: how the session cache's and the manifest decode memo's
+counters (session_cache.stats(), manifests.decode_cache_stats())
+moved across the query.
+
 Fixed per-job overhead (scheduling, Python-worker round trips,
 streaming micro-batch machinery) shows up as a high job count with low
 per-job time; real compute shows up as few jobs with high stage time.
@@ -23,8 +28,14 @@ from pathlib import Path
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
 
+from icegopher_spark import session_cache  # noqa: E402
+from icegopher_spark.iceberg.manifests import decode_cache_stats  # noqa: E402
 from icegopher_spark.queries import QUERIES  # noqa: E402
 from icegopher_spark.session import get_spark  # noqa: E402
+
+
+def _delta(before: dict, after: dict) -> dict:
+    return {k: after[k] - before[k] for k in after}
 
 
 def profile(spark, names: list[str], sf_dir: str, repeat: int = 1) -> dict:
@@ -36,11 +47,14 @@ def profile(spark, names: list[str], sf_dir: str, repeat: int = 1) -> dict:
         for r in range(repeat):
             group = f"profile-{name}-{r}"
             sc.setJobGroup(group, name)
+            cache0, decode0 = session_cache.stats(), decode_cache_stats()
             t0 = time.time()
             df = QUERIES[name].fn(spark, sf_dir)
             t_plan = time.time() - t0
             df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
+            cache = _delta(cache0, session_cache.stats())
+            decode = _delta(decode0, decode_cache_stats())
             sc.setJobGroup("idle", "idle")
             jobs = tracker.getJobIdsForGroup(group)
             n_stages = 0
@@ -53,13 +67,18 @@ def profile(spark, names: list[str], sf_dir: str, repeat: int = 1) -> dict:
                 "fn_sec": round(t_plan, 3),
                 "jobs": len(jobs),
                 "stages": n_stages,
+                "cache": cache,
+                "decode": decode,
             }
             if best is None or row["sec"] < best["sec"]:
                 best = row
         out[name] = best
+        c, d = best["cache"], best["decode"]
         print(
             f"{best['sec']:8.3f}s  fn={best['fn_sec']:7.3f}s  "
-            f"jobs={best['jobs']:4d}  stages={best['stages']:4d}  {name}",
+            f"jobs={best['jobs']:4d}  stages={best['stages']:4d}  "
+            f"cache={c['hits']}h/{c['misses']}m  "
+            f"decode={d['hits']}h/{d['misses']}m  {name}",
             flush=True,
         )
     return out
