@@ -43,7 +43,13 @@ from .manifests import (
     fetch_entries,
     read_manifest_list,
 )
-from .table import Table, _maybe_broadcast_deletes, strip_file_scheme
+from .table import (
+    FileScanTask,
+    Table,
+    _maybe_broadcast_deletes,
+    read_tasks,
+    strip_file_scheme,
+)
 
 CHANGE_TYPE = "_change_type"
 COMMIT_SNAPSHOT = "_commit_snapshot_id"
@@ -75,86 +81,12 @@ def _lineage(table: Table, from_id: int, to_id: int | None) -> list:
     return list(reversed(chain))
 
 
-def _read_data_files(table: Table, spark: SparkSession, entries, with_pos: bool) -> DataFrame | None:
-    """Rows of the given data-file entries projected (by field ID) into
-    the CURRENT schema; optionally with (_file, _pos) columns."""
-    md = table.metadata
-    base = table.schema
-    from .types import to_spark_type
-
-    # the writing snapshot's schema governs how the file reads back;
-    # format matters too — ORC/AVRO data files go through the same
-    # readers the scan path uses (r5 review: parquet was hardcoded)
-    groups: dict[tuple, list] = {}
-    for e in entries:
-        snap = md.snapshot_by_id(e.snapshot_id) if e.snapshot_id is not None else None
-        sid = snap.schema_id if snap is not None else None
-        groups.setdefault((sid, e.data_file.file_format), []).append(e)
-
-    parts = []
-    for (sid, fmt), es in groups.items():
-        file_schema = md.schema_by_id(sid) if sid is not None else None
-        file_schema = file_schema or base
-        paths = [strip_file_scheme(e.data_file.file_path) for e in es]
-        if fmt == "AVRO":
-            from .pyreaders import read_avro_files
-
-            raw = read_avro_files(spark, paths, file_schema.to_spark(), with_pos=with_pos)
-        elif fmt == "ORC" and with_pos:
-            from .pyreaders import read_orc_with_pos
-
-            raw = read_orc_with_pos(spark, paths, file_schema.to_spark())
-        elif fmt == "ORC":
-            raw = spark.read.schema(file_schema.to_spark()).format("orc").load(paths)
-        else:
-            raw = spark.read.schema(file_schema.to_spark()).parquet(*paths)
-        cols = []
-        if with_pos:
-            if fmt in ("AVRO", "ORC"):
-                # pyreaders emit exact per-file ordinals as _file/_pos
-                cols += [F.col("_file"), F.col("_pos")]
-            else:
-                cols += [
-                    F.col("_metadata.file_path").alias("_file"),
-                    F.col("_metadata.row_index").alias("_pos"),
-                ]
-        for f in base.fields:
-            old = file_schema.find_field(f.field_id)
-            if old is not None:
-                c = F.col(old.name)
-                if old.field_type != f.field_type:
-                    c = c.cast(to_spark_type(f.field_type))
-                cols.append(c.alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(to_spark_type(f.field_type)).alias(f.name))
-        parts.append(raw.select(*cols))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _align_to_current(df: DataFrame, from_schema, base) -> DataFrame:
-    """Project a frame produced under ``from_schema`` into the CURRENT
-    schema by field ID: renames resolve, promoted types cast, columns
-    added since are null-filled — so every per-snapshot piece of the
-    changelog unions cleanly regardless of schema evolution between the
-    snapshots (r5 review)."""
-    from .types import to_spark_type
-
-    cols = []
-    for f in base.fields:
-        old = from_schema.find_field(f.field_id)
-        if old is not None:
-            c = F.col(old.name)
-            if old.field_type != f.field_type:
-                c = c.cast(to_spark_type(f.field_type))
-            cols.append(c.alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(to_spark_type(f.field_type)).alias(f.name))
-    return df.select(*cols)
+def _entry_tasks(table: Table, entries) -> list[FileScanTask]:
+    """Scan tasks, without deletes, for data-file manifest entries:
+    each file reads back under the schema its snapshot was written
+    with."""
+    schema_ids = {s.snapshot_id: s.schema_id for s in table.metadata.snapshots}
+    return [FileScanTask(e.data_file, schema_id=schema_ids.get(e.snapshot_id)) for e in entries]
 
 
 def _live_data_entries(table: Table, snap) -> dict[str, object]:
@@ -287,7 +219,7 @@ def _changelog_df_impl(
                     # deletes only apply within the SAME spec (r6)
                     added_eq_deletes.append((m.partition_spec_id, e))
 
-        inserts = _read_data_files(table, spark, added_data, with_pos=False)
+        inserts = read_tasks(table, spark, _entry_tasks(table, added_data), deletes=False)
         deletes: DataFrame | None = None
 
         # copy-on-write removals: DATA files live in the parent but not
@@ -312,18 +244,10 @@ def _changelog_df_impl(
             # deleted in earlier snapshots are not re-reported (r5
             # review: raw reads double-counted them in the MV fold)
             removed_paths = {e.data_file.file_path for e in removed}
-            pscan = table.scan(snapshot_id=parent.snapshot_id)
-            ptasks = [t for t in pscan.plan_files() if t.file.file_path in removed_paths]
-            if ptasks:
-                parent_schema = (
-                    md.schema_by_id(parent.schema_id)
-                    if parent.schema_id is not None
-                    else None
-                ) or table.schema
-                gone = _align_to_current(
-                    pscan.to_df(spark, tasks=ptasks), parent_schema, table.schema
-                )
-                deletes = gone
+            ptasks = table.scan(snapshot_id=parent.snapshot_id).plan_files()
+            deletes = read_tasks(
+                table, spark, [t for t in ptasks if t.file.file_path in removed_paths]
+            )
 
         if added_pos_deletes:
             pq_entries = [
@@ -407,9 +331,10 @@ def _changelog_df_impl(
                 for p, e in snap_live.items()
                 if strip_file_scheme(p) in target_paths
             ]
-            rows = _read_data_files(table, spark, parent_entries, with_pos=True)
+            rows = read_tasks(
+                table, spark, _entry_tasks(table, parent_entries), positions=True, deletes=False
+            )
             if rows is not None:
-                norm = F.regexp_replace(F.col("_file"), "^file:/*", "/")
                 pairs = _maybe_broadcast_deletes(
                     pairs,
                     sum(
@@ -421,9 +346,9 @@ def _changelog_df_impl(
                 )
                 hit = rows.join(
                     pairs,
-                    (norm == F.col("_del_path")) & (rows["_pos"] == F.col("_del_pos")),
+                    (rows["file_path"] == F.col("_del_path")) & (rows["pos"] == F.col("_del_pos")),
                     "left_semi",
-                ).drop("_file", "_pos")
+                ).drop("file_path", "pos")
                 deletes = hit if deletes is None else deletes.unionByName(hit)
 
         if added_eq_deletes and parent is not None:
@@ -495,7 +420,7 @@ def _changelog_df_impl(
                 # single-column: an IN filter the metadata plane can
                 # prune files with (else the scan is O(parent table) —
                 # the r5 review's scale note)
-                flt = None
+                flt = post = None
                 if len(names) == 1:
                     pf = parent_schema.find_field(ids[0])
                     if pf is not None:
@@ -510,31 +435,39 @@ def _changelog_df_impl(
                         if (sample or has_null) and len(rows) <= 1000:
                             from . import expressions as E
 
-                            # null-safe matching below must still see
-                            # NULL-keyed parent rows (r8 wave 6)
-                            if sample:
-                                flt = E.is_in(pf.name, *sample)
+                            def key_filter(name):
+                                # null-safe matching below must still see
+                                # NULL-keyed parent rows (r8 wave 6)
+                                f = E.is_in(name, *sample) if sample else None
                                 if has_null:
-                                    flt = flt | E.is_null(pf.name)
-                            else:
-                                flt = E.is_null(pf.name)
+                                    f = E.is_null(name) if f is None else f | E.is_null(name)
+                                return f
+
+                            # planned under the parent's name for the key,
+                            # re-applied (row-group pruning) under the
+                            # current one the rows are read into
+                            flt = key_filter(pf.name)
+                            post = E.to_spark_column(
+                                E.ensure_bound(table.schema, key_filter(names[0]))
+                            )
                 scan_kwargs = {"snapshot_id": parent.snapshot_id}
                 if flt is not None:
                     scan_kwargs["row_filter"] = flt
-                pscan2 = table.scan(**scan_kwargs)
-                sc_tasks = None
+                sc_tasks = table.scan(**scan_kwargs).plan_files()
                 if scope is not None:
                     scope_sid, scope_part = scope
                     want = dict(scope_part)
                     sc_tasks = [
                         t
-                        for t in pscan2.plan_files()
+                        for t in sc_tasks
                         if t.spec_id == scope_sid
                         and (t.file.partition or {}) == want
                     ]
-                pre = _align_to_current(
-                    pscan2.to_df(spark, tasks=sc_tasks), parent_schema, table.schema
-                )
+                # the parent's rows in the current schema, its deletes
+                # applied; the semi-join below matches the keys exactly
+                pre = read_tasks(table, spark, sc_tasks, pre_filter=post)
+                if pre is None:
+                    continue
                 # null-safe semi-join: spec-compliant engines treat a
                 # NULL eq-delete key as deleting NULL-keyed rows; the
                 # plain equi-join under-reported them (r8 wave 6, same
@@ -952,9 +885,9 @@ def changelog_by_lineage(
     if to_id is None:
         raise ValueError("table has no snapshots")
 
-    from .defaults import default_column
     from .manifests import ROW_ID_FIELD_ID
-    from .types import to_spark_type
+
+    data_cols = [f.name for f in table.schema.fields]
 
     def _lineage_scan(snap_id: int) -> DataFrame:
         scan = table.scan(snapshot_id=snap_id, with_lineage=True)
@@ -967,31 +900,15 @@ def changelog_by_lineage(
                     f"snapshot {snap_id}; commit once after the v3 upgrade "
                     "before diffing by lineage"
                 )
-        df = scan.to_df(spark, tasks=tasks)  # reuse: no second metadata walk
-        # project to the CURRENT schema by field id: a snapshot scan
-        # emits the SNAPSHOT schema's names (renames/drops/adds since
-        # then would otherwise crash the diff's column references).
-        # Columns that postdate the snapshot fill with initial-default,
-        # the same rule the file-level projection applies.
-        snap_schema = scan.projection()
-        cols = []
-        for f in table.schema.fields:
-            old_f = snap_schema.find_field(f.field_id)
-            if old_f is not None:
-                c = F.col(old_f.name)
-                if old_f.field_type != f.field_type:
-                    c = c.cast(to_spark_type(f.field_type))
-                cols.append(c.alias(f.name))
-            else:
-                dc = default_column(f, "initial")
-                if dc is None:
-                    dc = F.lit(None).cast(to_spark_type(f.field_type))
-                cols.append(dc.alias(f.name))
-        return df.select(*cols, "_row_id", "_last_updated_sequence_number")
+        # read into the CURRENT schema by field id: the diff's column
+        # references must survive renames/drops/adds since the snapshot
+        df = read_tasks(table, spark, tasks, lineage=True)
+        if df is None:
+            df = table.scan(with_lineage=True).to_df(spark, tasks=[])
+        return df.select(*data_cols, "_row_id", "_last_updated_sequence_number")
 
     old = _lineage_scan(from_snapshot_id)
     new = _lineage_scan(to_id)
-    data_cols = [f.name for f in table.schema.fields]
 
     o = old.select(
         F.col("_row_id").alias("_rid"),

@@ -27,6 +27,7 @@ from __future__ import annotations
 import math
 import os
 import uuid as _uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -946,8 +947,8 @@ def rewrite_equality_deletes(
     (path, pos) pairs; Puffin writes are executor-side
     (write.py::write_dv_files).
     """
-    from .table import _dv_positions_df, strip_file_scheme as _strip
-    from .write import _rewrite_manifest_for_spec, write_dv_files
+    from .table import read_tasks, strip_file_scheme as _strip
+    from .write import _rewrite_manifest_for_spec, _write_superset_dvs
 
     if table.metadata.format_version < 3:
         raise ValueError(
@@ -959,81 +960,34 @@ def rewrite_equality_deletes(
     if snap is None:
         return table
 
-    groups: dict[tuple, dict] = {}
-    any_eq = False
+    groups: dict[frozenset, list] = {}
     for t in table.scan().plan_files():
-        if not t.eq_delete_files:
-            continue
-        any_eq = True
-        key = frozenset(d.file_path for d in t.eq_delete_files)
-        g = groups.setdefault(
-            key, {"tasks": [], "eq": t.eq_delete_files, "pd": set(), "dv": {}}
-        )
-        g["tasks"].append(t)
-        for d in t.delete_files:
-            if d.is_deletion_vector:
-                g["dv"][(d.file_path, d.content_offset)] = d
-            else:
-                g["pd"].add(_strip(d.file_path))
-    # (spec_id, partition) pairs; write_dv_files validates spec_id
-    # against the default spec centrally (r8 advice #2)
-    fp_parts = {
-        _strip(t.file.file_path): (t.spec_id, dict(t.file.partition or {}))
-        for g in groups.values()
-        for t in g["tasks"]
-    }
-    if not any_eq and not _has_equality_delete_entries(table, snap):
+        if t.eq_delete_files:
+            groups.setdefault(frozenset(d.file_path for d in t.eq_delete_files), []).append(t)
+    if not groups and not _has_equality_delete_entries(table, snap):
         return table  # nothing to convert
 
-    from .table import read_tasks_with_pos
-
-    match_parts: list[DataFrame] = []
-    prior_parts: list[DataFrame] = []
-    for _eqk, g in groups.items():
+    dv_files = []
+    if groups:
         # rename-safe: files project into the current schema by field
         # id before the key semi-joins (a by-name current-schema read
         # nulls a renamed key column, matches nothing, and the eq
         # entries below would still be dropped — silent resurrection)
-        src = read_tasks_with_pos(table, spark, g["tasks"])
-        matched = _eq_delete_semi_union(src, g["eq"], table.schema, spark)
-        match_parts.append(matched.select("file_path", "pos"))
-        priors = []
-        if g["pd"]:
-            priors.append(
-                spark.read.parquet(*sorted(g["pd"])).select(
-                    F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias(
-                        "file_path"
-                    ),
-                    "pos",
-                )
-            )
-        if g["dv"]:
-            priors.append(
-                _dv_positions_df(spark, list(g["dv"].values()), table.properties).select(
-                    F.col("_del_path").alias("file_path"),
-                    F.col("_del_pos").alias("pos"),
-                )
-            )
-        prior_parts.extend(priors)
-
-    dv_files = []
-    if match_parts:
-        new_matches = match_parts[0]
-        for p in match_parts[1:]:
-            new_matches = new_matches.unionByName(p)
-        new_matches = new_matches.persist()
-        try:
-            affected = new_matches.select("file_path").distinct()
-            union_df = new_matches
-            for prior in prior_parts:
-                union_df = union_df.unionByName(
-                    prior.join(F.broadcast(affected), "file_path", "left_semi")
-                )
-            dv_files = write_dv_files(
-                table, union_df.distinct(), n_shards=n_shards, partitions=fp_parts
-            )
-        finally:
-            new_matches.unpersist()
+        matches = reduce(
+            DataFrame.unionByName,
+            [
+                _eq_delete_semi_union(
+                    read_tasks(table, spark, ts, positions=True, deletes=False),
+                    ts[0].eq_delete_files,
+                    table.schema,
+                    spark,
+                ).select("file_path", "pos")
+                for ts in groups.values()
+            ],
+        )
+        dv_files = _write_superset_dvs(
+            table, spark, matches, [t for ts in groups.values() for t in ts], n_shards
+        )
     covered = {
         _strip(f.referenced_data_file or "") for f in dv_files
     }

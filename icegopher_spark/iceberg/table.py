@@ -14,13 +14,17 @@ and positional deletes applied as a left-anti join.
 from __future__ import annotations
 
 import bisect
+import re
 from dataclasses import dataclass, field as dfield
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType as SparkLongType, StructField, StructType
 
 from .. import session_cache
+from .defaults import default_column
 from .evaluators import (
     InclusiveMetricsEvaluator,
     ManifestEvaluator,
@@ -46,7 +50,7 @@ from .manifests import (
 )
 from .metadata import Snapshot, TableMetadata, parse_metadata
 from .schema import Schema
-from .types import LongType, NestedField, StringType
+from .types import LongType, NestedField, StringType, contains_unsupported, to_spark_type
 
 # Reserved column names/field ids for V3 row lineage (defined in
 # manifests.py; re-exported here for scan-side consumers)
@@ -273,246 +277,43 @@ class TableScan:
 
     def plan_files(self) -> list[FileScanTask]:
         """The scan planner the reference declared but never implemented
-        (scanner.go:32-34); helper semantics from scanner.go:124-193."""
-        snap = self.snapshot()
-        if snap is None:
+        (scanner.go:32-34): ``plan_manifest`` over each data manifest
+        that survives manifest-list pruning."""
+        plan = self._scan_plan()
+        if plan is None:
             return []
-        md = self.table.metadata
         io = self.table.io
-        manifest_list = read_manifest_list(io.read(snap.manifest_list))
-
-        # per-spec evaluator caches
-        proj_cache: dict[int, BooleanExpression] = {}
-        manifest_eval_cache: dict[int, ManifestEvaluator] = {}
-        part_eval_cache: dict[int, PartitionEvaluator] = {}
-
-        schema = self.projection_base_schema()
-        bound_filter = (
-            ensure_bound(schema, rewrite_not(self.row_filter), self.case_sensitive)
-            if not isinstance(self.row_filter, AlwaysTrue)
-            else self.row_filter
-        )
-        metrics_eval = InclusiveMetricsEvaluator(schema, bound_filter, self.case_sensitive)
-
-        def partition_filter_for(spec_id: int) -> BooleanExpression:
-            if spec_id not in proj_cache:
-                spec = md.spec_by_id(spec_id)
-                proj_cache[spec_id] = (
-                    inclusive_projection(schema, spec, bound_filter, self.case_sensitive)
-                    if spec is not None and not isinstance(bound_filter, AlwaysTrue)
-                    else AlwaysTrue()
-                )
-            return proj_cache[spec_id]
-
-        def manifest_may_match(m: ManifestFile) -> bool:
-            spec = md.spec_by_id(m.partition_spec_id)
-            if spec is None or spec.is_unpartitioned:
-                return True
-            if m.partition_spec_id not in manifest_eval_cache:
-                manifest_eval_cache[m.partition_spec_id] = ManifestEvaluator(
-                    spec, schema, partition_filter_for(m.partition_spec_id)
-                )
-            return manifest_eval_cache[m.partition_spec_id].eval(m.partitions)
-
-        def file_partition_match(spec_id: int, partition: dict) -> bool:
-            spec = md.spec_by_id(spec_id)
-            if spec is None or spec.is_unpartitioned:
-                return True
-            if spec_id not in part_eval_cache:
-                part_eval_cache[spec_id] = PartitionEvaluator(
-                    spec, schema, partition_filter_for(spec_id)
-                )
-            return part_eval_cache[spec_id].eval(partition)
-
-        # 1) collect positional- and equality-delete entries across
-        #    delete manifests (reference scanner.go:144-160; equality
-        #    content enum manifest.go:306-312)
-        delete_entries: list[ManifestEntry] = []
-        eq_delete_entries: list[tuple[int, ManifestEntry]] = []
-        data_manifests: list[ManifestFile] = []
-        for m in manifest_list:
-            if m.content == ManifestContent.DELETES:
-                if not manifest_may_match(m):
-                    continue
-                for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
-                    if e.data_file.content == DataFileContent.POSITION_DELETES:
-                        delete_entries.append(e)
-                    elif e.data_file.content == DataFileContent.EQUALITY_DELETES:
-                        eq_delete_entries.append((m.partition_spec_id, e))
-            else:
-                data_manifests.append(m)
-        delete_entries.sort(key=lambda e: e.sequence_number or 0)
-        delete_seqs = [e.sequence_number or 0 for e in delete_entries]
-
-        # 2) walk data manifests with partition + metrics pruning
-        #    (reference openManifest, scanner.go:124-142)
-        tasks: list[FileScanTask] = []
-        for m in data_manifests:
-            if not manifest_may_match(m):
-                continue
-            for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
-                df = e.data_file
-                if not file_partition_match(m.partition_spec_id, df.partition):
-                    continue
-                if not metrics_eval.eval(df):
-                    continue
-                deletes = _match_deletes(e, delete_entries, delete_seqs)
-                eq_deletes = [
-                    d.data_file
-                    for dsid, d in eq_delete_entries
-                    if _eq_delete_applies(
-                        dsid, d, m.partition_spec_id, df, e.sequence_number or 0
-                    )
-                ]
-                esnap = md.snapshot_by_id(e.snapshot_id) if e.snapshot_id else None
-                tasks.append(
-                    FileScanTask(
-                        df,
-                        deletes,
-                        0,
-                        df.file_size_in_bytes,
-                        schema_id=esnap.schema_id if esnap else None,
-                        eq_delete_files=eq_deletes,
-                        spec_id=m.partition_spec_id,
-                        sequence_number=e.sequence_number or 0,
-                    )
-                )
-        return tasks
+        return [t for m in plan.data_manifests for t in plan_manifest(plan, m, io)]
 
     def plan_files_distributed(self, spark: SparkSession) -> list[FileScanTask]:
-        """``plan_files`` with per-manifest entry evaluation fanned out
-        across the cluster instead of looping on the driver.
+        """``plan_files`` with ``plan_manifest`` mapped over the data
+        manifests on executors instead of looped on the driver.
 
         At 100 TB a snapshot can carry 10k+ manifests holding millions
         of data-file entries; reading and evaluating them serially on
-        the driver is the planning bottleneck (the reference's planning
-        loop, scanner.go:124-142, has the same shape). Here the driver
-        only prunes the manifest LIST (one summary row per manifest,
-        ManifestEvaluator) and handles the small delete side; surviving
-        manifests ship to executors, which fetch + evaluate their
-        entries in parallel and return only surviving entries.
-
-        Output is identical to ``plan_files`` (regression-tested).
-        Requires `icegopher_spark` importable on executors (true in
-        local mode; ship the wheel via --py-files on a cluster).
+        the driver is the planning bottleneck. The driver still prunes
+        the manifest LIST and reads the (few) delete manifests; the
+        per-manifest step and its delete matching are the serial
+        planner's own. Requires `icegopher_spark` importable on
+        executors (true in local mode; ship the wheel via --py-files on
+        a cluster).
         """
-        snap = self.snapshot()
-        if snap is None:
+        plan = self._scan_plan()
+        if plan is None or not plan.data_manifests:
             return []
-        md = self.table.metadata
-        io = self.table.io
-        manifest_list = read_manifest_list(io.read(snap.manifest_list))
-
-        schema = self.projection_base_schema()
-        bound_filter = (
-            ensure_bound(schema, rewrite_not(self.row_filter), self.case_sensitive)
-            if not isinstance(self.row_filter, AlwaysTrue)
-            else self.row_filter
-        )
-        proj_cache: dict[int, BooleanExpression] = {}
-
-        def partition_filter_for(spec_id: int) -> BooleanExpression:
-            if spec_id not in proj_cache:
-                spec = md.spec_by_id(spec_id)
-                proj_cache[spec_id] = (
-                    inclusive_projection(schema, spec, bound_filter, self.case_sensitive)
-                    if spec is not None and not isinstance(bound_filter, AlwaysTrue)
-                    else AlwaysTrue()
-                )
-            return proj_cache[spec_id]
-
-        manifest_eval_cache: dict[int, ManifestEvaluator] = {}
-
-        def manifest_may_match(m: ManifestFile) -> bool:
-            spec = md.spec_by_id(m.partition_spec_id)
-            if spec is None or spec.is_unpartitioned:
-                return True
-            if m.partition_spec_id not in manifest_eval_cache:
-                manifest_eval_cache[m.partition_spec_id] = ManifestEvaluator(
-                    spec, schema, partition_filter_for(m.partition_spec_id)
-                )
-            return manifest_eval_cache[m.partition_spec_id].eval(m.partitions)
-
-        # delete side stays on the driver: delete manifests are few and
-        # matching needs the global sorted-by-sequence view
-        delete_entries: list[ManifestEntry] = []
-        eq_delete_entries: list[tuple[int, ManifestEntry]] = []
-        data_manifests: list[ManifestFile] = []
-        for m in manifest_list:
-            if m.content == ManifestContent.DELETES:
-                if not manifest_may_match(m):
-                    continue
-                for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
-                    if e.data_file.content == DataFileContent.POSITION_DELETES:
-                        delete_entries.append(e)
-                    elif e.data_file.content == DataFileContent.EQUALITY_DELETES:
-                        eq_delete_entries.append((m.partition_spec_id, e))
-            else:
-                if manifest_may_match(m):
-                    data_manifests.append(m)
-        delete_entries.sort(key=lambda e: e.sequence_number or 0)
-        delete_seqs = [e.sequence_number or 0 for e in delete_entries]
-
-        if not data_manifests:
-            return []
-
-        # picklable executor-side state (closures over self won't ship)
-        specs = {m.partition_spec_id: md.spec_by_id(m.partition_spec_id) for m in data_manifests}
-        part_filters = {sid: partition_filter_for(sid) for sid in specs}
-        case_sensitive = self.case_sensitive
-        location = md.location
-        props = dict(self.table.metadata.properties or {})
-
-        def eval_manifest(m: ManifestFile) -> list[ManifestEntry]:
-            mio = load_io(location, props)
-            spec = specs.get(m.partition_spec_id)
-            part_eval = (
-                PartitionEvaluator(spec, schema, part_filters[m.partition_spec_id])
-                if spec is not None and not spec.is_unpartitioned
-                else None
-            )
-            metrics = InclusiveMetricsEvaluator(schema, bound_filter, case_sensitive)
-            out = []
-            for e in fetch_entries(m, mio.read(m.manifest_path), discard_deleted=True):
-                df = e.data_file
-                if part_eval is not None and not part_eval.eval(df.partition):
-                    continue
-                if not metrics.eval(df):
-                    continue
-                out.append((m.partition_spec_id, e))
-            return out
-
-        n_slices = min(len(data_manifests), spark.sparkContext.defaultParallelism)
-        survived: list[tuple[int, ManifestEntry]] = (
-            spark.sparkContext.parallelize(data_manifests, n_slices)
-            .flatMap(eval_manifest)
+        manifests = plan.data_manifests
+        sc = spark.sparkContext
+        return (
+            sc.parallelize(manifests, min(len(manifests), sc.defaultParallelism))
+            .flatMap(lambda m: plan_manifest(plan, m))
             .collect()
         )
 
-        tasks: list[FileScanTask] = []
-        for data_sid, e in survived:
-            deletes = _match_deletes(e, delete_entries, delete_seqs)
-            eq_deletes = [
-                d.data_file
-                for dsid, d in eq_delete_entries
-                if _eq_delete_applies(
-                    dsid, d, data_sid, e.data_file, e.sequence_number or 0
-                )
-            ]
-            esnap = md.snapshot_by_id(e.snapshot_id) if e.snapshot_id else None
-            tasks.append(
-                FileScanTask(
-                    e.data_file,
-                    deletes,
-                    0,
-                    e.data_file.file_size_in_bytes,
-                    schema_id=esnap.schema_id if esnap else None,
-                    eq_delete_files=eq_deletes,
-                    spec_id=data_sid,
-                    sequence_number=e.sequence_number or 0,
-                )
-            )
-        return tasks
+    def _scan_plan(self) -> "_ScanPlan | None":
+        snap = self.snapshot()
+        if snap is None:
+            return None
+        return _ScanPlan(self, read_manifest_list(self.table.io.read(snap.manifest_list)))
 
     def plan_incremental_files(
         self, from_snapshot_id: int, to_snapshot_id: int | None = None
@@ -608,267 +409,28 @@ class TableScan:
         """Execute the planned scan as a Spark DataFrame.
 
         The explicit file list means Spark's own partition discovery is
-        bypassed — pruning already happened here. The row filter is
-        re-applied exactly (file pruning is inclusive/approximate), and
-        Catalyst still pushes it into the parquet scan for row-group
-        pruning. Positional deletes become a left-anti join on
-        (file, position), with _pos synthesized per input file.
+        bypassed — pruning already happened here. ``read_tasks`` reads
+        the files into the scan schema with their deletes applied; the
+        row filter is re-applied exactly (file pruning is
+        inclusive/approximate), and Catalyst still pushes it into the
+        parquet scan for row-group pruning.
 
-        ``tasks`` restricts execution to an explicit task list (the
-        write path uses this to read ONLY affected files, with their
-        deletes still applied).
+        ``tasks`` restricts execution to an explicit task list.
         """
         if tasks is None:
             tasks = self.plan_files()
         projection = self.projection()
         spark_schema = projection.to_spark()
         lineage = self.with_lineage
-        if lineage:
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            spark_schema = StructType(
-                list(spark_schema.fields)
-                + [
-                    StructField(ROW_ID_COL, LongType()),
-                    StructField(LAST_UPDATED_SEQ_COL, LongType()),
-                ]
-            )
         if not tasks:
-            return spark.createDataFrame([], spark_schema)
-
-        base = self.projection_base_schema()
-        has_deletes = any(t.delete_files for t in tasks)
-        # lineage needs exact row positions even on delete-free files
-        need_pos = has_deletes or lineage
-
-        # Group files by the schema they were written under and project
-        # each group into the scan schema BY FIELD ID — renames and
-        # added/promoted columns resolve correctly for old files
-        # (reference scanner.go:54-67: the snapshot's schema governs).
-        md = self.table.metadata
-        # group key: (written-schema, exact equality-delete set) — a file
-        # written after an equality delete must not be affected by it
-        groups: dict[tuple, dict] = {}
-        for t in tasks:
-            # lineage-preserving rewrites materialize the reserved
-            # columns in the parquet file; the writer records their
-            # presence as value_counts under the reserved field id, so
-            # detection is metadata-only (no footer read here)
-            has_lin_cols = bool(
-                lineage
-                and t.file.value_counts
-                and ROW_ID_FIELD_ID in t.file.value_counts
-            )
-            key = (
-                t.schema_id,
-                frozenset(d.file_path for d in t.eq_delete_files),
-                t.file.file_format,
-                has_lin_cols,
-            )
-            g = groups.setdefault(
-                key,
-                {"paths": [], "eq": t.eq_delete_files, "has_del": False},
-            )
-            g["paths"].append(strip_file_scheme(t.file.file_path))
-            g["has_del"] = g["has_del"] or bool(t.delete_files)
-
-        from .types import to_spark_type
-
-        parts: list[DataFrame] = []
-        for (sid, _eqkey, fmt, has_lin_cols), g in groups.items():
-            file_schema = md.schema_by_id(sid) if sid is not None else None
-            file_schema = file_schema or base
-            # ORC lacks Spark's `_metadata.row_index`, and Avro has no
-            # bundled JVM source at all — both go through the Arrow
-            # mapInPandas readers (exact per-file ordinals; pyreaders.py).
-            # Position synthesis is needed only when THIS group's files
-            # carry positional deletes: one deleted ORC file must not
-            # push every other ORC group off the native JVM reader (r6
-            # review) — delete-free groups take literal-null pos columns
-            # that the global anti-join can never match.
-            py_pos = (g["has_del"] or lineage) and fmt in ("ORC", "AVRO")
-            if fmt == "AVRO":
-                from .pyreaders import read_avro_files
-
-                raw = read_avro_files(
-                    spark, g["paths"], file_schema.to_spark_readable(), with_pos=py_pos
-                )
-            elif py_pos:
-                from .pyreaders import read_orc_with_pos
-
-                raw = read_orc_with_pos(spark, g["paths"], file_schema.to_spark_readable())
-            else:
-                read_schema = file_schema.to_spark_readable()
-                if has_lin_cols:
-                    # parquet files from a lineage-preserving rewrite
-                    # carry the reserved columns physically; extend the
-                    # read schema so Spark surfaces them
-                    from pyspark.sql.types import LongType, StructField, StructType
-
-                    read_schema = StructType(
-                        list(read_schema.fields)
-                        + [
-                            StructField(ROW_ID_COL, LongType()),
-                            StructField(LAST_UPDATED_SEQ_COL, LongType()),
-                        ]
-                    )
-                raw = _memo_reader(spark, read_schema, fmt, g["paths"])
-            cols = []
-            from .types import contains_unsupported
-
-            for f in base.fields:
-                if contains_unsupported(f.field_type):
-                    # geo column the projection didn't select (it
-                    # couldn't have: projection.to_spark() refuses
-                    # selected geo with the column named) — skip, so
-                    # the rest of the table scans normally
-                    continue
-                old = file_schema.find_field(f.field_id)
-                if old is not None:
-                    c = F.col(old.name)
-                    if old.field_type != f.field_type:
-                        c = c.cast(to_spark_type(f.field_type))
-                    cols.append(c.alias(f.name))
-                else:
-                    # column added after this file was written: V3
-                    # initial-default if the field carries one, null
-                    # otherwise (spec: initial-default is what existing
-                    # rows read for a later-added column)
-                    from .defaults import default_column
-
-                    dc = default_column(f, "initial")
-                    if dc is None:
-                        dc = F.lit(None).cast(to_spark_type(f.field_type))
-                    cols.append(dc.alias(f.name))
             if lineage:
-                # explicit (materialized) lineage values when the file
-                # carries them; nulls otherwise — the final coalesce
-                # falls back to first_row_id + position / file sequence
-                if has_lin_cols:
-                    cols.append(F.col(ROW_ID_COL).alias("__lin_rid"))
-                    cols.append(F.col(LAST_UPDATED_SEQ_COL).alias("__lin_lseq"))
-                else:
-                    cols.append(F.lit(None).cast("bigint").alias("__lin_rid"))
-                    cols.append(F.lit(None).cast("bigint").alias("__lin_lseq"))
-            if need_pos:
-                if py_pos:
-                    pos_cols = [F.col("_file"), F.col("_pos")]
-                elif fmt in ("ORC", "AVRO"):
-                    # group is delete-free: null pos never anti-joins
-                    pos_cols = [
-                        F.lit(None).cast("string").alias("_file"),
-                        F.lit(None).cast("bigint").alias("_pos"),
-                    ]
-                else:
-                    pos_cols = [
-                        F.col("_metadata.file_path").alias("_file"),
-                        F.col("_metadata.row_index").alias("_pos"),
-                    ]
-                cols = [*pos_cols, *cols]
-            part = raw.select(*cols)
-            # equality deletes: anti-join on the delete's equality fields
-            # (resolved by field ID against the scan schema)
-            part = apply_eq_delete_anti_joins(part, g["eq"], base, spark)
-            parts.append(part)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-
-        if lineage:
-            # per-file (first_row_id, data sequence) — metadata-scale,
-            # broadcast; joined on the normalized file path the reader
-            # stamped into _file. Files never assigned an id (scans of a
-            # just-upgraded table before its first v3 commit) yield null
-            # _row_id rather than inventing unstable ids.
-            import re as _re
-
-            lin_rows = [
-                (
-                    _re.sub("^file:/*", "/", t.file.file_path),
-                    t.file.first_row_id,
-                    t.sequence_number,
-                )
-                for t in tasks
-            ]
-            lookup = spark.createDataFrame(
-                lin_rows, "__lin_path string, __lin_first bigint, __lin_fseq bigint"
-            )
-            norm_file = F.regexp_replace(F.col("_file"), "^file:/*", "/")
-            df = (
-                df.join(F.broadcast(lookup), norm_file == F.col("__lin_path"), "left")
-                .withColumn(
-                    ROW_ID_COL,
-                    F.coalesce(F.col("__lin_rid"), F.col("__lin_first") + F.col("_pos")),
-                )
-                .withColumn(
-                    LAST_UPDATED_SEQ_COL,
-                    F.coalesce(F.col("__lin_lseq"), F.col("__lin_fseq")),
-                )
-                .drop("__lin_rid", "__lin_lseq", "__lin_path", "__lin_first", "__lin_fseq")
-            )
-
-        if has_deletes:
-            # split positional deletes into V2 parquet files of
-            # (file_path, pos) rows and V3 deletion vectors (roaring
-            # bitmaps in Puffin files, one per referenced data file) —
-            # both decode to the same (_del_path, _del_pos) shape and
-            # share one anti-join
-            by_path = {
-                strip_file_scheme(d.file_path): d.file_size_in_bytes
-                for t in tasks
-                for d in t.delete_files
-                if not d.is_deletion_vector
-            }
-            dv_entries = {
-                (d.file_path, d.content_offset): d
-                for t in tasks
-                for d in t.delete_files
-                if d.is_deletion_vector
-            }
-            parts_del: list[DataFrame] = []
-            delete_paths = sorted(by_path)
-            if delete_paths:
-                parts_del.append(
-                    spark.read.parquet(*delete_paths).select(
-                        F.col("file_path").alias("_del_path"),
-                        F.col("pos").alias("_del_pos"),
-                    )
-                )
-            if dv_entries:
-                parts_del.append(
-                    _dv_positions_df(
-                        spark, list(dv_entries.values()), self.table.properties
-                    )
-                )
-            deletes = parts_del[0]
-            for p in parts_del[1:]:
-                deletes = deletes.unionByName(p)
-            by_path.update(
-                {
-                    strip_file_scheme(d.file_path): d.content_size_in_bytes or 0
-                    for d in dv_entries.values()
-                }
-            )
-            # Exact row positions came from the parquet reader's hidden
-            # _metadata column (split-safe, unlike row_number over
-            # input_file_name), selected as _file/_pos per group above.
-            # Merge-on-read = left-anti equi-join on (file, position) —
-            # SURVEY.md §2.1 #19.
-            norm = F.regexp_replace(F.col("_file"), "^file:/*", "/")
-            norm_del = F.regexp_replace(F.col("_del_path"), "^file:/*", "/")
-            delete_side = _maybe_broadcast_deletes(
-                deletes.select(norm_del.alias("_del_path"), "_del_pos"),
-                sum(by_path.values()),
-            )
-            df = df.join(
-                delete_side,
-                (norm == F.col("_del_path")) & (df["_pos"] == F.col("_del_pos")),
-                "left_anti",
-            ).drop("_file", "_pos")
-
+                spark_schema = StructType(list(spark_schema.fields) + _LINEAGE_FIELDS)
+            return spark.createDataFrame([], spark_schema)
+        base = self.projection_base_schema()
+        df = read_tasks(self.table, spark, tasks, base, lineage=lineage)
         if not isinstance(self.row_filter, AlwaysTrue):
             df = df.filter(to_spark_column(
-                ensure_bound(self.projection_base_schema(), rewrite_not(self.row_filter), self.case_sensitive)
+                ensure_bound(base, rewrite_not(self.row_filter), self.case_sensitive)
             ))
         out_names = list(projection.column_names)
         if lineage:
@@ -877,6 +439,220 @@ class TableScan:
         if self.limit is not None:
             df = df.limit(self.limit)
         return df
+
+
+_LINEAGE_FIELDS = [
+    StructField(ROW_ID_COL, SparkLongType()),
+    StructField(LAST_UPDATED_SEQ_COL, SparkLongType()),
+]
+
+
+def read_tasks(
+    table: Table,
+    spark: SparkSession,
+    tasks: list[FileScanTask],
+    schema: Schema | None = None,
+    *,
+    positions: bool = False,
+    deletes: bool = True,
+    lineage: bool = False,
+    pre_filter=None,
+) -> DataFrame | None:
+    """Read a task list as rows of ``schema`` (default: the table's
+    current schema): the one reader behind the scan, the merge-on-read
+    writers, the DV/equality-delete maintenance and the changelog.
+    None for an empty task list.
+
+    Files group by (written schema, format, applicable equality-delete
+    set, lineage columns present), and each group projects into
+    ``schema`` BY FIELD ID (reference scanner.go:54-67): renamed
+    columns resolve, promoted types cast, and a column added after the
+    file was written reads its V3 initial-default, else null. Geo
+    columns are skipped (the scan refuses selected ones earlier, at
+    ``projection().to_spark()``).
+
+    ``deletes`` applies each group's equality deletes (anti-join), then
+    positional deletes and deletion vectors as one left-anti join on
+    (file, position), so an already-deleted row never reads back.
+    ``pre_filter`` (a Column over ``schema``'s names) filters each
+    group before the delete joins. ``lineage`` appends ``_row_id`` /
+    ``_last_updated_sequence_number``: the file's materialized values,
+    else ``first_row_id + pos`` / the data sequence number.
+    ``positions`` leads each row with its (scheme-normalized)
+    ``file_path`` and ``pos``.
+    """
+    if not tasks:
+        return None
+    from .pyreaders import read_avro_files, read_orc_with_pos
+
+    md = table.metadata
+    schema = schema or md.current_schema
+    has_deletes = deletes and any(t.delete_files for t in tasks)
+    # lineage needs exact row positions even on delete-free files
+    want_pos = positions or lineage
+    need_pos = has_deletes or want_pos
+    groups: dict[tuple, dict] = {}
+    for t in tasks:
+        # lineage-preserving rewrites materialize the reserved columns
+        # in the parquet file; the writer records their presence as
+        # value_counts under the reserved field id, so detection is
+        # metadata-only (no footer read here)
+        has_lin_cols = bool(
+            lineage and t.file.value_counts and ROW_ID_FIELD_ID in t.file.value_counts
+        )
+        # a file written after an equality delete must not be affected
+        # by it: the exact applicable set is part of the group key
+        eq = t.eq_delete_files if deletes else []
+        key = (t.schema_id, frozenset(d.file_path for d in eq), t.file.file_format, has_lin_cols)
+        g = groups.setdefault(key, {"paths": [], "eq": eq, "has_del": False})
+        g["paths"].append(strip_file_scheme(t.file.file_path))
+        g["has_del"] = g["has_del"] or bool(deletes and t.delete_files)
+
+    parts: list[DataFrame] = []
+    for (sid, _eqkey, fmt, has_lin_cols), g in groups.items():
+        file_schema = (md.schema_by_id(sid) if sid is not None else None) or schema
+        read_schema = file_schema.to_spark_readable()
+        # ORC lacks Spark's `_metadata.row_index`, and Avro has no
+        # bundled JVM source at all — both go through the Arrow
+        # mapInPandas readers (exact per-file ordinals; pyreaders.py),
+        # but only when THIS group needs positions: one deleted ORC
+        # file must not push every other ORC group off the native JVM
+        # reader — delete-free groups take literal-null pos columns
+        # that the anti-join can never match.
+        py_pos = (g["has_del"] or want_pos) and fmt in ("ORC", "AVRO")
+        if fmt == "AVRO":
+            raw = read_avro_files(spark, g["paths"], read_schema, with_pos=py_pos)
+        elif py_pos:
+            raw = read_orc_with_pos(spark, g["paths"], read_schema)
+        else:
+            if has_lin_cols:
+                read_schema = StructType(list(read_schema.fields) + _LINEAGE_FIELDS)
+            raw = _memo_reader(spark, read_schema, fmt, g["paths"])
+        cols = []
+        if need_pos:
+            if py_pos:
+                cols = [F.col("_file"), F.col("_pos")]
+            elif fmt in ("ORC", "AVRO"):
+                cols = [
+                    F.lit(None).cast("string").alias("_file"),
+                    F.lit(None).cast("bigint").alias("_pos"),
+                ]
+            else:
+                cols = [
+                    F.col("_metadata.file_path").alias("_file"),
+                    F.col("_metadata.row_index").alias("_pos"),
+                ]
+        for f in schema.fields:
+            if contains_unsupported(f.field_type):
+                continue
+            old = file_schema.find_field(f.field_id)
+            if old is not None:
+                c = F.col(old.name)
+                if old.field_type != f.field_type:
+                    c = c.cast(to_spark_type(f.field_type))
+            else:
+                c = default_column(f, "initial")
+                if c is None:
+                    c = F.lit(None).cast(to_spark_type(f.field_type))
+            cols.append(c.alias(f.name))
+        if lineage:
+            # materialized lineage values when the file carries them;
+            # nulls otherwise, for the coalesce below
+            for name, alias in ((ROW_ID_COL, "__lin_rid"), (LAST_UPDATED_SEQ_COL, "__lin_lseq")):
+                c = F.col(name) if has_lin_cols else F.lit(None).cast("bigint")
+                cols.append(c.alias(alias))
+        part = raw.select(*cols)
+        if pre_filter is not None:
+            part = part.filter(pre_filter)
+        parts.append(apply_eq_delete_anti_joins(part, g["eq"], schema, spark))
+    df = reduce(DataFrame.unionByName, parts)
+
+    if lineage:
+        # per-file (first_row_id, data sequence) — metadata-scale,
+        # broadcast; joined on the normalized file path the reader
+        # stamped into _file. Files never assigned an id (scans of a
+        # just-upgraded table before its first v3 commit) yield null
+        # _row_id rather than inventing unstable ids.
+        lookup = spark.createDataFrame(
+            [
+                (re.sub("^file:/*", "/", t.file.file_path), t.file.first_row_id, t.sequence_number)
+                for t in tasks
+            ],
+            "__lin_path string, __lin_first bigint, __lin_fseq bigint",
+        )
+        norm_file = F.regexp_replace(F.col("_file"), "^file:/*", "/")
+        df = (
+            df.join(F.broadcast(lookup), norm_file == F.col("__lin_path"), "left")
+            .withColumn(
+                ROW_ID_COL,
+                F.coalesce(F.col("__lin_rid"), F.col("__lin_first") + F.col("_pos")),
+            )
+            .withColumn(
+                LAST_UPDATED_SEQ_COL,
+                F.coalesce(F.col("__lin_lseq"), F.col("__lin_fseq")),
+            )
+            .drop("__lin_rid", "__lin_lseq", "__lin_path", "__lin_first", "__lin_fseq")
+        )
+
+    if has_deletes:
+        # Merge-on-read = left-anti equi-join on (file, position) —
+        # SURVEY.md §2.1 #19; positions came from the parquet reader's
+        # hidden _metadata column (split-safe, unlike row_number over
+        # input_file_name) or the Arrow readers' ordinals
+        delete_side, nbytes = position_deletes_df(spark, tasks, table.properties)
+        norm = F.regexp_replace(F.col("_file"), "^file:/*", "/")
+        df = df.join(
+            _maybe_broadcast_deletes(delete_side, nbytes),
+            (norm == F.col("_del_path")) & (df["_pos"] == F.col("_del_pos")),
+            "left_anti",
+        )
+        if not positions:
+            df = df.drop("_file", "_pos")
+    if positions:
+        df = df.select(
+            F.regexp_replace(F.col("_file"), "^file:/*", "/").alias("file_path"),
+            F.col("_pos").alias("pos"),
+            *[c for c in df.columns if c not in ("_file", "_pos")],
+        )
+    return df
+
+
+def position_deletes_df(
+    spark: SparkSession, tasks: list[FileScanTask], properties: dict | None
+) -> tuple[DataFrame, int] | None:
+    """The tasks' positional deletes as normalized (_del_path, _del_pos)
+    rows, with the manifests' byte bound on them; None when there are
+    none. V2 delete files are parquet (file_path, pos) rows, V3
+    deletion vectors roaring bitmaps in Puffin files (one per
+    referenced data file); both decode to the same shape."""
+    by_path = {
+        strip_file_scheme(d.file_path): d.file_size_in_bytes
+        for t in tasks
+        for d in t.delete_files
+        if not d.is_deletion_vector
+    }
+    dvs = {
+        (d.file_path, d.content_offset): d
+        for t in tasks
+        for d in t.delete_files
+        if d.is_deletion_vector
+    }
+    parts: list[DataFrame] = []
+    if by_path:
+        parts.append(
+            spark.read.parquet(*sorted(by_path)).select(
+                F.col("file_path").alias("_del_path"),
+                F.col("pos").alias("_del_pos"),
+            )
+        )
+    if dvs:
+        parts.append(_dv_positions_df(spark, list(dvs.values()), properties))
+    if not parts:
+        return None
+    nbytes = sum(by_path.values()) + sum(d.content_size_in_bytes or 0 for d in dvs.values())
+    deletes = reduce(DataFrame.unionByName, parts)
+    norm_del = F.regexp_replace(F.col("_del_path"), "^file:/*", "/")
+    return deletes.select(norm_del.alias("_del_path"), "_del_pos"), nbytes
 
 
 # Session-scoped memo of resolved file-list readers (r14, guide §5):
@@ -952,9 +728,8 @@ def eq_delete_keys_df(dfile, base, spark):
 
 def apply_eq_delete_anti_joins(part, eq_files, base, spark):
     """Anti-join ``part`` against each equality-delete file's key set
-    (see eq_delete_keys_df). Shared by the scan path and
-    delete_where_mor — the MOR writer previously raw-read files and
-    re-deleted already-eq-deleted rows (r6 review)."""
+    (see eq_delete_keys_df), per ``read_tasks`` group — so the MOR
+    writers never re-delete already-eq-deleted rows (r6 review)."""
     from functools import reduce as _reduce
     from operator import and_ as _and
 
@@ -972,6 +747,123 @@ def apply_eq_delete_anti_joins(part, eq_files, base, spark):
         )
         part = part.join(kd, cond, "left_anti")
     return part
+
+
+class _ScanPlan:
+    """One plan's picklable inputs to ``plan_manifest``: the row filter
+    bound to the scan schema, the manifests' specs, each snapshot's
+    schema id and the delete index — positional deletes sorted by
+    sequence number, equality deletes with their manifest's spec id
+    (reference scanner.go:144-160). Building it prunes the manifest
+    list and reads the delete manifests; the surviving data manifests
+    are ``data_manifests``. Evaluators are built at most once per spec
+    and are not pickled: an executor's copy builds its own."""
+
+    def __init__(self, scan: TableScan, manifests: list[ManifestFile]) -> None:
+        md = scan.table.metadata
+        self.schema = scan.projection_base_schema()
+        self.case_sensitive = scan.case_sensitive
+        self.bound_filter = (
+            ensure_bound(self.schema, rewrite_not(scan.row_filter), scan.case_sensitive)
+            if not isinstance(scan.row_filter, AlwaysTrue)
+            else scan.row_filter
+        )
+        self.specs = {m.partition_spec_id: md.spec_by_id(m.partition_spec_id) for m in manifests}
+        self.schema_ids = {s.snapshot_id: s.schema_id for s in md.snapshots}
+        self.location = md.location
+        self.properties = dict(md.properties or {})
+        self._evals: dict[tuple, Any] = {}
+        io = scan.table.io
+        self.deletes: list[ManifestEntry] = []
+        self.eq_deletes: list[tuple[int, ManifestEntry]] = []
+        self.data_manifests: list[ManifestFile] = []
+        for m in manifests:
+            ev = self.evaluator(ManifestEvaluator, m.partition_spec_id)
+            if ev is not None and not ev.eval(m.partitions):
+                continue
+            if m.content != ManifestContent.DELETES:
+                self.data_manifests.append(m)
+                continue
+            # equality content enum: reference manifest.go:306-312
+            for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
+                if e.data_file.content == DataFileContent.POSITION_DELETES:
+                    self.deletes.append(e)
+                elif e.data_file.content == DataFileContent.EQUALITY_DELETES:
+                    self.eq_deletes.append((m.partition_spec_id, e))
+        self.deletes.sort(key=lambda e: e.sequence_number or 0)
+        self.delete_seqs = [e.sequence_number or 0 for e in self.deletes]
+
+    def __getstate__(self) -> dict:
+        return {
+            k: v for k, v in self.__dict__.items() if k not in ("_evals", "data_manifests")
+        }
+
+    def __setstate__(self, state: dict) -> None:
+        self.__dict__.update(state, _evals={}, data_manifests=[])
+
+    def evaluator(self, kind, spec_id: int | None = None):
+        """``kind`` built once: the InclusiveMetricsEvaluator for the
+        plan; per spec, a Manifest/PartitionEvaluator over the filter's
+        inclusive projection (``kind`` "filter"), None for an
+        unpartitioned or unknown spec."""
+        key = (kind, spec_id)
+        if key not in self._evals:
+            spec = self.specs.get(spec_id)
+            if kind is InclusiveMetricsEvaluator:
+                ev = kind(self.schema, self.bound_filter, self.case_sensitive)
+            elif spec is None or spec.is_unpartitioned:
+                ev = None
+            elif kind == "filter":
+                ev = (
+                    self.bound_filter
+                    if isinstance(self.bound_filter, AlwaysTrue)
+                    else inclusive_projection(
+                        self.schema, spec, self.bound_filter, self.case_sensitive
+                    )
+                )
+            else:
+                ev = kind(spec, self.schema, self.evaluator("filter", spec_id))
+            self._evals[key] = ev
+        return self._evals[key]
+
+
+def plan_manifest(
+    plan: _ScanPlan, m: ManifestFile, io: FileIO | None = None
+) -> list[FileScanTask]:
+    """Scan tasks for one data manifest's live entries that survive
+    partition and metrics pruning, each with its positional and
+    equality deletes (reference openManifest + delete matching,
+    scanner.go:124-193). Module-level over picklable inputs so
+    ``plan_files_distributed`` can map it on executors; ``io`` defaults
+    to one loaded from the table location."""
+    io = io or load_io(plan.location, plan.properties)
+    part_eval = plan.evaluator(PartitionEvaluator, m.partition_spec_id)
+    metrics_eval = plan.evaluator(InclusiveMetricsEvaluator)
+    tasks: list[FileScanTask] = []
+    for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
+        df = e.data_file
+        if part_eval is not None and not part_eval.eval(df.partition):
+            continue
+        if not metrics_eval.eval(df):
+            continue
+        seq = e.sequence_number or 0
+        tasks.append(
+            FileScanTask(
+                df,
+                _match_deletes(e, plan.deletes, plan.delete_seqs),
+                0,
+                df.file_size_in_bytes,
+                schema_id=plan.schema_ids.get(e.snapshot_id) if e.snapshot_id else None,
+                eq_delete_files=[
+                    d.data_file
+                    for dsid, d in plan.eq_deletes
+                    if _eq_delete_applies(dsid, d, m.partition_spec_id, df, seq)
+                ],
+                spec_id=m.partition_spec_id,
+                sequence_number=seq,
+            )
+        )
+    return tasks
 
 
 def _eq_delete_applies(
@@ -1089,69 +981,3 @@ def strip_file_scheme(path: str) -> str:
     if path.startswith("file://"):
         return path[len("file://") :]
     return path
-
-
-def read_tasks_with_pos(table, spark: SparkSession, tasks) -> DataFrame:
-    """Read a task list as (file_path, pos, <current-schema columns>),
-    RENAME-SAFE: files group by (written schema, format) and project
-    into the current schema BY FIELD ID — the same rule as the scan
-    path (to_df), without delete application. Shared by the write/
-    maintenance ops that must locate row positions (delete_where_dv,
-    rewrite_equality_deletes): a by-name read under the current schema
-    returns all-null for renamed columns, silently matching nothing
-    (the r6-review rename lesson, re-found in the r7 review)."""
-    from .types import to_spark_type
-
-    md = table.metadata
-    base = md.current_schema
-    groups: dict[tuple, list] = {}
-    for t in tasks:
-        groups.setdefault((t.schema_id, t.file.file_format), []).append(
-            strip_file_scheme(t.file.file_path)
-        )
-    parts: list[DataFrame] = []
-    for (sid, fmt), paths in groups.items():
-        file_schema = (md.schema_by_id(sid) if sid is not None else None) or base
-        paths = sorted(set(paths))
-        if fmt == "PARQUET":
-            raw = spark.read.schema(file_schema.to_spark()).parquet(*paths)
-            raw = raw.select(
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/").alias(
-                    "file_path"
-                ),
-                F.col("_metadata.row_index").alias("pos"),
-                "*",
-            )
-        else:
-            from .pyreaders import read_avro_files, read_orc_with_pos
-
-            raw = (
-                read_orc_with_pos(spark, paths, file_schema.to_spark())
-                if fmt == "ORC"
-                else read_avro_files(spark, paths, file_schema.to_spark(), with_pos=True)
-            )
-            raw = raw.select(
-                F.regexp_replace(F.col("_file"), "^file:/*", "/").alias("file_path"),
-                F.col("_pos").alias("pos"),
-                *[c for c in raw.columns if c not in ("_file", "_pos")],
-            )
-        cols = [F.col("file_path"), F.col("pos")]
-        for f in base.fields:
-            old = file_schema.find_field(f.field_id)
-            if old is not None:
-                c = F.col(old.name)
-                if old.field_type != f.field_type:
-                    c = c.cast(to_spark_type(f.field_type))
-                cols.append(c.alias(f.name))
-            else:
-                from .defaults import default_column
-
-                dc = default_column(f, "initial")
-                if dc is None:
-                    dc = F.lit(None).cast(to_spark_type(f.field_type))
-                cols.append(dc.alias(f.name))
-        parts.append(raw.select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

@@ -46,7 +46,7 @@ from .metadata import (
     parse_metadata,
 )
 from .schema import Schema
-from .table import Table
+from .table import Table, read_tasks
 from .transforms import PartitionSpec
 from .types import (
     BinaryType,
@@ -1737,170 +1737,6 @@ def overwrite(table: Table, df: DataFrame) -> Table:
     return _commit_snapshot(table, files, OP_OVERWRITE, keep_manifests=[])
 
 
-def _mor_live_rows(
-    table: Table,
-    spark: SparkSession,
-    scan,
-    pre_filter=None,
-    with_lineage: bool = False,
-    state: dict | None = None,
-) -> DataFrame | None:
-    """Live target rows WITH positions — the shared front half of the
-    MOR writers (delete_where_mor, merge_matrix_mor): reads the scan's
-    data files grouped by (format, applicable eq-delete set), attaches
-    spec-exact (file_path, pos), applies equality deletes and anti-joins
-    prior pos-deletes/DVs so an already-deleted row can never be
-    re-deleted (double-counting corrupted incremental MVs, r6 review).
-    ``pre_filter`` (a Column) is applied per group BEFORE the delete
-    joins — callers with a row predicate shrink the join input early.
-    Returns None when the scan planned no files.
-
-    ``with_lineage`` (v3 tables) appends the reserved ``_row_id`` /
-    ``_last_updated_sequence_number`` columns resolved exactly as the
-    scan resolves them: physically materialized values when the file
-    carries them, else inherited ``first_row_id + pos`` / the file's
-    data sequence (broadcast per-file lookup — metadata-scale).
-
-    ``state``, when a dict, is filled with the scan-derived side data a
-    DV-writing caller needs: ``fp_parts`` (file path -> (spec_id,
-    partition)) and ``priors`` (list of prior-delete (file_path, pos)
-    DataFrames — already anti-joined out of the returned rows)."""
-    from .manifests import LAST_UPDATED_SEQ_COL, ROW_ID_COL
-    from .table import strip_file_scheme
-
-    groups: dict[tuple, dict] = {}
-    lin_rows: list[tuple] = []
-    for t in scan.plan_files():
-        key = (t.file.file_format, frozenset(d.file_path for d in t.eq_delete_files))
-        g = groups.setdefault(
-            key, {"paths": set(), "eq": t.eq_delete_files, "pd": set(), "dv": {}}
-        )
-        g["paths"].add(strip_file_scheme(t.file.file_path))
-        if state is not None:
-            state.setdefault("fp_parts", {})[strip_file_scheme(t.file.file_path)] = (
-                t.spec_id,
-                dict(t.file.partition or {}),
-            )
-        if with_lineage:
-            lin_rows.append(
-                (
-                    strip_file_scheme(t.file.file_path),
-                    t.file.first_row_id,
-                    t.sequence_number,
-                )
-            )
-        for d in t.delete_files:
-            # V3 deletion vectors are Puffin files — they decode through
-            # the bitmap reader, never spark.read.parquet
-            if d.is_deletion_vector:
-                g["dv"][(d.file_path, d.content_offset)] = d
-            else:
-                g["pd"].add(strip_file_scheme(d.file_path))
-    if not groups:
-        return None
-
-    from pyspark.sql.types import LongType, StructField
-
-    from .table import apply_eq_delete_anti_joins
-
-    parts = []
-    for (fmt, _eqk), g in groups.items():
-        paths = sorted(g["paths"])
-        if fmt == "PARQUET":
-            read_schema = table.schema.to_spark()
-            if with_lineage:
-                # absent columns read back as nulls — only
-                # lineage-preserving rewrites materialize these
-                read_schema = read_schema.add(
-                    StructField(ROW_ID_COL, LongType())
-                ).add(StructField(LAST_UPDATED_SEQ_COL, LongType()))
-            src = spark.read.schema(read_schema).parquet(*paths)
-            src = src.select(
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/").alias(
-                    "file_path"
-                ),
-                F.col("_metadata.row_index").alias("pos"),
-                "*",
-            )
-        else:
-            # ORC/Avro: Arrow readers supply spec-exact ordinals
-            from .pyreaders import read_avro_files, read_orc_with_pos
-
-            src = (
-                read_orc_with_pos(spark, paths, table.schema.to_spark())
-                if fmt == "ORC"
-                else read_avro_files(spark, paths, table.schema.to_spark(), with_pos=True)
-            )
-            src = src.select(
-                F.regexp_replace(F.col("_file"), "^file:/*", "/").alias("file_path"),
-                F.col("_pos").alias("pos"),
-                *[c for c in src.columns if c not in ("_file", "_pos")],
-            )
-            if with_lineage:
-                # ORC/Avro data files never materialize lineage (writes
-                # of rewrites are parquet-only): always inherited
-                src = src.withColumn(ROW_ID_COL, F.lit(None).cast("bigint")).withColumn(
-                    LAST_UPDATED_SEQ_COL, F.lit(None).cast("bigint")
-                )
-        part = src.filter(pre_filter) if pre_filter is not None else src
-        part = apply_eq_delete_anti_joins(part, g["eq"], table.schema, spark)
-        priors = []
-        if g["pd"]:
-            priors.append(
-                spark.read.parquet(*sorted(g["pd"])).select(
-                    F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias(
-                        "file_path"
-                    ),
-                    "pos",
-                )
-            )
-        if g["dv"]:
-            from .table import _dv_positions_df
-
-            priors.append(
-                _dv_positions_df(
-                    spark, list(g["dv"].values()), table.properties
-                ).select(
-                    F.col("_del_path").alias("file_path"),
-                    F.col("_del_pos").alias("pos"),
-                )
-            )
-        if priors:
-            prior = priors[0]
-            for p in priors[1:]:
-                prior = prior.unionByName(p)
-            if state is not None:
-                state.setdefault("priors", []).append(prior)
-            part = part.join(prior, ["file_path", "pos"], "left_anti")
-        parts.append(part)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if with_lineage:
-        # same per-row resolution as the scan (table.py): materialized
-        # value if present, else first_row_id + position / file sequence
-        lookup = spark.createDataFrame(
-            lin_rows, "__lin_path string, __lin_first bigint, __lin_fseq bigint"
-        )
-        out = (
-            out.join(
-                F.broadcast(lookup), out["file_path"] == F.col("__lin_path"), "left"
-            )
-            .withColumn(
-                ROW_ID_COL,
-                F.coalesce(
-                    F.col(ROW_ID_COL), F.col("__lin_first") + F.col("pos")
-                ),
-            )
-            .withColumn(
-                LAST_UPDATED_SEQ_COL,
-                F.coalesce(F.col(LAST_UPDATED_SEQ_COL), F.col("__lin_fseq")),
-            )
-            .drop("__lin_path", "__lin_first", "__lin_fseq")
-        )
-    return out
-
-
 def _write_pos_delete_files(table: Table, matches: DataFrame) -> list[DataFile]:
     """Write a (file_path, pos) frame as V2 positional-delete parquet
     under the table and return its DataFile entries (path bounds from
@@ -1984,7 +1820,9 @@ def delete_where_mor(table: Table, spark: SparkSession, row_filter) -> Table:
         spark_pred = to_spark_column(row_filter)
         scan = table.scan(row_filter=row_filter)
 
-    live = _mor_live_rows(table, spark, scan, pre_filter=spark_pred)
+    # rows already deleted are anti-joined out: a row deleted twice
+    # would double-decrement incremental MVs downstream
+    live = read_tasks(table, spark, scan.plan_files(), positions=True, pre_filter=spark_pred)
     if live is None:
         return table
     delete_files = _write_pos_delete_files(table, live)
@@ -2143,8 +1981,6 @@ def delete_where_dv(
     from pyspark.sql import Column
 
     from .expressions import to_spark_column
-    from .table import _dv_positions_df, apply_eq_delete_anti_joins, strip_file_scheme
-
     snap = table.current_snapshot()
     if snap is None:
         return table
@@ -2159,105 +1995,14 @@ def delete_where_dv(
     else:
         spark_pred = to_spark_column(row_filter)
         scan = table.scan(row_filter=row_filter)
-    groups: dict[tuple, dict] = {}
-    # (spec_id, partition) pairs — write_dv_files stamps only
-    # current-default-spec values centrally (r8 advice #2; the original
-    # r8-review rationale: a spec evolution reusing a field NAME with a
-    # different transform would mis-encode old-era values and an
-    # external reader pruning delete files by partition would
-    # resurrect the deleted rows)
-    fp_parts: dict[str, tuple[int, dict]] = {}
-    for t in scan.plan_files():
-        key = frozenset(d.file_path for d in t.eq_delete_files)
-        g = groups.setdefault(
-            key, {"tasks": [], "eq": t.eq_delete_files, "pd": set(), "dv": {}}
-        )
-        g["tasks"].append(t)
-        fp_parts[strip_file_scheme(t.file.file_path)] = (
-            t.spec_id,
-            dict(t.file.partition or {}),
-        )
-        for d in t.delete_files:
-            if d.is_deletion_vector:
-                g["dv"][(d.file_path, d.content_offset)] = d
-            else:
-                g["pd"].add(strip_file_scheme(d.file_path))
-    if not groups:
+    tasks = scan.plan_files()
+    # newly-matching rows, minus rows already deleted (eq deletes +
+    # prior pos deletes + prior DVs) — counting a row deleted twice
+    # would double-decrement incremental MVs downstream
+    live = read_tasks(table, spark, tasks, positions=True, pre_filter=spark_pred)
+    if live is None:
         return table
-
-    def _prior_deletes(g) -> list[DataFrame]:
-        out = []
-        if g["pd"]:
-            out.append(
-                spark.read.parquet(*sorted(g["pd"])).select(
-                    F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias(
-                        "file_path"
-                    ),
-                    "pos",
-                )
-            )
-        if g["dv"]:
-            out.append(
-                _dv_positions_df(
-                    spark, list(g["dv"].values()), table.properties
-                ).select(
-                    F.col("_del_path").alias("file_path"),
-                    F.col("_del_pos").alias("pos"),
-                )
-            )
-        return out
-
-    # 1) newly-matching rows per raw file, minus rows already deleted
-    # (eq deletes + prior pos deletes + prior DVs) — counting a row
-    # deleted twice would double-decrement incremental MVs downstream
-    from .table import read_tasks_with_pos
-
-    new_parts: list[DataFrame] = []
-    prior_parts: list[DataFrame] = []
-    for _eqk, g in groups.items():
-        # rename-safe: project files into the current schema by field
-        # id (read_tasks_with_pos) before filtering — a by-name read of
-        # pre-rename files nulls the renamed column and the filter
-        # silently matches nothing (r7 review, same lesson as r6's
-        # scan-path fix)
-        src = read_tasks_with_pos(table, spark, g["tasks"])
-        part = src.filter(spark_pred)
-        part = apply_eq_delete_anti_joins(part, g["eq"], table.schema, spark)
-        priors = _prior_deletes(g)
-        if priors:
-            prior = priors[0]
-            for p in priors[1:]:
-                prior = prior.unionByName(p)
-            prior_parts.append(prior)
-            part = part.join(prior, ["file_path", "pos"], "left_anti")
-        new_parts.append(part.select("file_path", "pos"))
-    new_matches = new_parts[0]
-    for p in new_parts[1:]:
-        new_matches = new_matches.unionByName(p)
-    # (path, pos) pairs only — narrow enough to persist, and reused
-    # twice (bitmap union + affected-file list)
-    new_matches = new_matches.persist()
-    try:
-        if new_matches.limit(1).count() == 0:
-            return table
-
-        # 2) union with ALL prior deletes, restricted to files that
-        # actually have new matches: files scanned-but-unmatched keep
-        # their existing delete state untouched (no churn)
-        affected_files = new_matches.select("file_path").distinct()
-        union_df = new_matches
-        for prior in prior_parts:
-            union_df = union_df.unionByName(
-                prior.join(F.broadcast(affected_files), "file_path", "left_semi")
-            )
-
-        # 3) bitmaps + Puffin files, executor-side
-        dv_files = write_dv_files(
-            table, union_df, n_shards=n_shards, partitions=fp_parts
-        )
-    finally:
-        new_matches.unpersist()
-
+    dv_files = _write_superset_dvs(table, spark, live, tasks, n_shards)
     if not dv_files:
         return table
 
@@ -2270,6 +2015,50 @@ def delete_where_dv(
         keep_manifests=kept,
         delete_files=dv_files,
     )
+
+
+def _write_superset_dvs(
+    table: Table,
+    spark: SparkSession,
+    matches: DataFrame,
+    tasks: list,
+    n_shards: int = 32,
+) -> list[DataFile]:
+    """One replacement DV per data file with new ``(file_path, pos)``
+    matches: the union of its new matches and ALL its prior deletes
+    (prior DV + positional-delete rows — the V3 superset invariant).
+    Files scanned but unmatched keep their delete state untouched (no
+    churn). Positions shuffle as narrow pairs; bitmaps and Puffin files
+    are built executor-side (write_dv_files). Shared by
+    delete_where_dv, the v3 merge_matrix_mor path and
+    maintenance.rewrite_equality_deletes."""
+    from .table import position_deletes_df, strip_file_scheme
+
+    # (path, pos) pairs only — narrow enough to persist, and reused
+    # twice (bitmap union + affected-file list)
+    matches = matches.select("file_path", "pos").persist()
+    try:
+        if matches.limit(1).count() == 0:
+            return []
+        union_df = matches
+        prior = position_deletes_df(spark, tasks, table.properties)
+        if prior is not None:
+            affected = F.broadcast(matches.select("file_path").distinct())
+            union_df = union_df.unionByName(
+                prior[0].toDF("file_path", "pos").join(affected, "file_path", "left_semi")
+            )
+        # (spec_id, partition) pairs — write_dv_files stamps only
+        # current-default-spec values centrally (r8 advice #2: a spec
+        # evolution reusing a field NAME with a different transform
+        # would mis-encode old-era values, and an external reader
+        # pruning delete files by partition would resurrect rows)
+        fp_parts = {
+            strip_file_scheme(t.file.file_path): (t.spec_id, dict(t.file.partition or {}))
+            for t in tasks
+        }
+        return write_dv_files(table, union_df, n_shards=n_shards, partitions=fp_parts)
+    finally:
+        matches.unpersist()
 
 
 def _carry_manifests_superseding_dvs(
@@ -2784,14 +2573,8 @@ def merge_matrix_mor(
         return F.expr(expr)
 
     snap = table.current_snapshot()
-    scan_state: dict = {}
-    live = (
-        _mor_live_rows(
-            table, spark, table.scan(), with_lineage=is_v3, state=scan_state
-        )
-        if snap is not None
-        else None
-    )
+    tasks = table.scan().plan_files()
+    live = read_tasks(table, spark, tasks, positions=True, lineage=is_v3)
     if live is None:
         # empty table: only the insert clause can apply
         if not when_not_matched_insert:
@@ -2852,32 +2635,10 @@ def merge_matrix_mor(
         if is_v3:
             # v3 forbids new v2 positional-delete files: delete state
             # becomes one replacement DV per affected file — the union
-            # of its new masks and ALL its prior deletes (superset
-            # invariant), exactly delete_where_dv's steps 2-3. masks
-            # came from `live`, which already excludes prior-deleted
-            # rows, so the union never double-counts.
-            masks = masks.persist()
-            try:
-                if masks.limit(1).count() == 0:
-                    delete_files = []
-                else:
-                    affected_files = masks.select("file_path").distinct()
-                    union_df = masks
-                    for prior in scan_state.get("priors", []):
-                        union_df = union_df.unionByName(
-                            prior.join(
-                                F.broadcast(affected_files),
-                                "file_path",
-                                "left_semi",
-                            )
-                        )
-                    delete_files = write_dv_files(
-                        table,
-                        union_df,
-                        partitions=scan_state.get("fp_parts"),
-                    )
-            finally:
-                masks.unpersist()
+            # of its new masks and ALL its prior deletes. masks came
+            # from `live`, which already excludes prior-deleted rows,
+            # so the union never double-counts.
+            delete_files = _write_superset_dvs(table, spark, masks, tasks)
         else:
             delete_files = _write_pos_delete_files(table, masks)
 

@@ -4,7 +4,9 @@
 session; a value that is a persisted DataFrame when built counts toward
 ``MAX_PERSISTED`` and is unpersisted on eviction. ``hold``/``release``
 (and ``rotate``, both as one step) keep one generation of persisted
-frames per (session, slot); a released frame merely recomputes.
+frames per (session, slot); a released frame merely recomputes, and
+``rotate`` keeps the cache of a released frame whose plan is the new
+one's.
 
 Keys hold the SparkSession itself (identity hash), so ``newSession()``
 never sees another session's frames. Weakrefs would bound nothing:
@@ -63,11 +65,13 @@ def rotate(spark, slot, df):
 def _hold(spark, slot, df, rotate: bool):
     k = (spark, "slot", slot)
     with _lock:
-        dropped = _CACHE.pop(k, (None, []))[1] if rotate else []
+        released = _CACHE.pop(k, (None, []))[1] if rotate else []
         _CACHE.setdefault(k, (None, []))[1].append(df)
         _CACHE.move_to_end(k)
-        dropped += _trim()
-    _unpersist(dropped)
+        dropped = _trim()
+    # a released frame whose plan matches df's shares df's CacheManager
+    # entry: unpersisting it would uncache df as well
+    _unpersist([f for f in released if not f.sameSemantics(df)] + dropped)
     return df
 
 

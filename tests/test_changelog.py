@@ -55,6 +55,47 @@ def test_cow_delete_nets_carryovers(spark, tmp_path):
     assert rows == {(3, "delete")}
 
 
+def _mk_defaulted(spark, path):
+    """v3 table, rows k = 1..5 in one file, then `score` added with
+    initial-default 0.5."""
+    from icegopher_spark.iceberg.evolve import update_schema
+
+    t = W.create_table(str(path), SCHEMA, format_version=3)
+    rows = spark.createDataFrame(
+        [(k, float(k), "x") for k in range(1, 6)], "k long, v double, tag string"
+    )
+    t = W.append(t, rows.coalesce(1))
+    return update_schema(t).add_column("score", DoubleType(), default=0.5).commit()
+
+
+@pytest.mark.parametrize("change", ["insert", "mor_delete"])
+def test_changelog_reads_initial_default(spark, tmp_path, change):
+    """Rows written before a column was added with a default read its
+    initial-default in the changelog, as in the scan: inserts and
+    merge-on-read delete pre-images alike."""
+    t = _mk_defaulted(spark, tmp_path / "t")
+    s1 = t.metadata.snapshots[0].snapshot_id
+    if change == "insert":
+        want = {(k, "insert", 0.5) for k in range(1, 6)}
+        ch = changelog_df(t, spark, from_snapshot_id=0)
+    else:
+        want = {(3, "delete", 0.5)}
+        t = W.delete_where_mor(t, spark, E.equal_to("k", 3))
+        ch = changelog_df(t, spark, from_snapshot_id=s1)
+    assert {(r["k"], r["_change_type"], r["score"]) for r in ch.collect()} == want
+
+
+def test_cow_delete_after_add_column_default_nets_to_one_delete(spark, tmp_path):
+    """The rewrite's carried rows are written with the default; the
+    removed file's rows must read it too, or every carried row nets
+    into a spurious delete/insert pair."""
+    t = _mk_defaulted(spark, tmp_path / "t")
+    s1 = t.metadata.snapshots[0].snapshot_id
+    t = W.delete_where(t, spark, E.equal_to("k", 3))
+    rows = changelog_df(t, spark, from_snapshot_id=s1).collect()
+    assert [(r["k"], r["_change_type"], r["score"]) for r in rows] == [(3, "delete", 0.5)]
+
+
 @pytest.mark.parametrize("extra", [("_net_dup",), ("_sgn", "_net", "_net_x_dup")])
 def test_cow_netting_keeps_source_columns_named_like_helpers(spark, tmp_path, extra):
     """Netting adds _sgn, _net and an explode column named after _net;

@@ -611,6 +611,7 @@ def test_mor_live_rows_lineage_lookup_is_broadcast(spark, tmp_path):
     must be a broadcast hash join (never a shuffle of the data side),
     and the matched-key join stays an equi-join."""
     from icegopher_spark.iceberg import write as W
+    from icegopher_spark.iceberg.table import read_tasks
     from icegopher_spark.iceberg.schema import Schema
     from icegopher_spark.iceberg.types import DoubleType, LongType, NestedField
 
@@ -622,7 +623,7 @@ def test_mor_live_rows_lineage_lookup_is_broadcast(spark, tmp_path):
     t = W.append(
         t, spark.range(0, 100).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
     )
-    live = W._mor_live_rows(t, spark, t.scan(), with_lineage=True)
+    live = read_tasks(t, spark, t.scan().plan_files(), positions=True, lineage=True)
     plan = plan_of(live)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan

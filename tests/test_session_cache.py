@@ -65,3 +65,27 @@ def test_shuffle_partition_change_misses_load_memo(spark, sf_dir):
     assert load(spark, sf_dir, "documents") is docs
     assert _delta(before) == {"hits": 1, "misses": 0}
     assert docs.rdd.getNumPartitions() == int(target)
+
+
+def test_rotate_keeps_cache_of_identical_repeat(spark):
+    """A repeat call that builds the same plan shares the released
+    frame's CacheManager entry, so rotating must not unpersist it: the
+    held frame stays cached and no persisted RDD is added. A call with
+    a different plan still releases the previous cache."""
+    from icegopher_spark.operators.dedup import simhash_neardup_pairs
+
+    df = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 5} jumps over") for i in range(40)],
+        "doc_id long, text string",
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    simhash_neardup_pairs(df, max_hamming=2).count()
+    first = session_cache.held(spark, "simhash_signatures")[0]
+    n_rdds = persistent().size()
+    simhash_neardup_pairs(df, max_hamming=2).count()
+    held = session_cache.held(spark, "simhash_signatures")
+    assert len(held) == 1 and held[0] is not first
+    assert held[0].storageLevel.useMemory
+    assert persistent().size() <= n_rdds
+    simhash_neardup_pairs(df.filter("doc_id < 30"), max_hamming=2).count()
+    assert not first.storageLevel.useMemory
