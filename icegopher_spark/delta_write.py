@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .delta import _list_log, _log_dir, load_delta
+from .delta import _decoded_positions_df, _list_log, _log_dir, load_delta
 
 __all__ = [
     "create_delta_table",
@@ -1860,35 +1860,11 @@ def link_delta_to_iceberg(spark: SparkSession, delta_path: str, iceberg_location
     t = W.add_files(t, [os.path.abspath(p) for p, _ in snap.files])
 
     if snap.deletion_vectors:
-        import pandas as pd
-
         rows = [
             (os.path.abspath(p), json.dumps({"dv": dv_job_spec(delta_path, d)}))
             for p, d in sorted(snap.deletion_vectors.items())
         ]
-        # exact slice count (vs 32-partition default + repartition
-        # shuffle): saves ~0.4s of empty-task scheduling per call
-        src = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, min(len(rows), 32)),
-            "fp string, job string",
-        )
-
-        def _explode(batches):
-            import numpy as np
-
-            from .delta_dv import decode_mask_payload
-
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    pos = decode_mask_payload(json.loads(row.job))
-                    yield pd.DataFrame(
-                        {
-                            "file_path": np.full(len(pos), row.fp, dtype=object),
-                            "pos": pos.astype("int64"),
-                        }
-                    )
-
-        union_df = src.mapInPandas(_explode, "file_path string, pos long")
+        union_df = _decoded_positions_df(spark, rows, "file_path", "pos")
         dv_files = W.write_dv_files(t, union_df)
         if dv_files:
             keep = read_manifest_list(
@@ -1938,7 +1914,7 @@ def link_iceberg_to_delta(
         StructType,
     )
 
-    from .iceberg.table import _dv_positions_df, strip_file_scheme
+    from .iceberg.table import position_deletes_df, strip_file_scheme
 
     md = iceberg_table.metadata
     if len(md.schemas or []) > 1:
@@ -1963,36 +1939,24 @@ def link_iceberg_to_delta(
             "(rewrite) instead"
         )
 
-    # delete positions per data file: V2 positional-delete parquet
-    # (distributed read) + V3 Puffin DVs (executor-side decode)
-    pd_files = sorted(
-        {strip_file_scheme(d.file_path) for t in tasks for d in t.delete_files
-         if not d.is_deletion_vector}
+    # delete positions per LIVE data file: V2 positional-delete parquet
+    # (distributed read) + V3 Puffin DVs (executor-side decode). A
+    # parquet delete file also carries rows for files a later CoW
+    # rewrite removed; the semi-join keeps those from becoming DV files
+    # that no add refers to.
+    deletes = position_deletes_df(
+        spark, [d for t in tasks for d in t.delete_files], iceberg_table.properties
     )
-    dv_entries = {}
-    for t in tasks:
-        for d in t.delete_files:
-            if d.is_deletion_vector:
-                dv_entries[(d.file_path, d.content_offset)] = d
-    parts = []
-    if pd_files:
-        parts.append(
-            spark.read.parquet(*pd_files).select(
-                F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias("path"),
-                F.col("pos"),
-            )
-        )
-    if dv_entries:
-        parts.append(
-            _dv_positions_df(
-                spark, list(dv_entries.values()), iceberg_table.properties
-            ).select(F.col("_del_path").alias("path"), F.col("_del_pos").alias("pos"))
-        )
     deletes_by_file: dict[str, dict] = {}
-    if parts:
-        all_pos = parts[0]
-        for p_ in parts[1:]:
-            all_pos = all_pos.unionByName(p_)
+    if deletes is not None:
+        live = spark.createDataFrame(
+            [(strip_file_scheme(t.file.file_path),) for t in tasks], "path string"
+        )
+        all_pos = (
+            deletes[0]
+            .toDF("path", "pos")
+            .join(F.broadcast(live), "path", "left_semi")
+        )
         out_schema = StructType(
             [
                 StructField("path", StringType()),
@@ -2015,12 +1979,7 @@ def link_iceberg_to_delta(
             return pd.DataFrame([{"path": key[0], **d}])
 
         os.makedirs(delta_path, exist_ok=True)
-        rows = (
-            all_pos.dropDuplicates(["path", "pos"])
-            .groupBy("path")
-            .applyInPandas(_mk_dv, out_schema)
-            .collect()
-        )
+        rows = all_pos.groupBy("path").applyInPandas(_mk_dv, out_schema).collect()
         deletes_by_file = {
             r["path"]: {
                 "storageType": r["storageType"],

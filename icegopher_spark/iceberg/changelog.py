@@ -32,6 +32,8 @@ no read path; this builds the CDC surface those statuses exist for.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,6 +49,7 @@ from .table import (
     FileScanTask,
     Table,
     _maybe_broadcast_deletes,
+    position_deletes_df,
     read_tasks,
     strip_file_scheme,
 )
@@ -101,55 +104,6 @@ def _live_data_entries(table: Table, snap) -> dict[str, object]:
         for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
             if e.data_file.content == DataFileContent.DATA:
                 out[e.data_file.file_path] = e
-    return out
-
-
-def _parent_delete_pairs(
-    table: Table, spark: SparkSession, parent, ref_paths: set[str]
-) -> DataFrame | None:
-    """The parent snapshot's positional-delete state (_del_path,
-    _del_pos) restricted to ``ref_paths`` — the baseline a replacement
-    deletion vector is diffed against. Position deletes only ever
-    reference files that existed when they were written, so path
-    restriction (broadcast semi-join; ref_paths is commit-sized)
-    suffices without sequence-number re-checks."""
-    from .table import _dv_positions_df
-
-    io = table.io
-    pq_paths: set[str] = set()
-    dvs = []
-    for m in read_manifest_list(io.read(parent.manifest_list)):
-        if m.content != ManifestContent.DELETES:
-            continue
-        for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
-            df = e.data_file
-            if df.content != DataFileContent.POSITION_DELETES:
-                continue
-            if df.is_deletion_vector:
-                if strip_file_scheme(df.referenced_data_file or "") in ref_paths:
-                    dvs.append(df)
-            else:
-                pq_paths.add(strip_file_scheme(df.file_path))
-    parts: list[DataFrame] = []
-    if pq_paths:
-        refs = spark.createDataFrame(
-            [(p,) for p in sorted(ref_paths)], "_del_path string"
-        )
-        parts.append(
-            spark.read.parquet(*sorted(pq_paths))
-            .select(
-                F.regexp_replace("file_path", "^file:/*", "/").alias("_del_path"),
-                F.col("pos").alias("_del_pos"),
-            )
-            .join(F.broadcast(refs), "_del_path", "left_semi")
-        )
-    if dvs:
-        parts.append(_dv_positions_df(spark, dvs, table.properties))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     return out
 
 
@@ -250,61 +204,59 @@ def _changelog_df_impl(
             )
 
         if added_pos_deletes:
-            pq_entries = [
-                e for e in added_pos_deletes if not e.data_file.is_deletion_vector
-            ]
-            dv_entries = [
-                e for e in added_pos_deletes if e.data_file.is_deletion_vector
-            ]
-            pair_parts = []
-            if pq_entries:
-                bad = [
-                    e.data_file.file_path
-                    for e in pq_entries
-                    if e.data_file.file_format != "PARQUET"
-                ]
-                if bad:
-                    # explicit, not a cryptic 'not a Parquet file'
-                    # mid-read: our writers emit parquet delete files
-                    # only; a foreign write.delete.format=orc table is
-                    # out of scope (r8 wave 6)
-                    raise ValueError(
-                        f"changelog supports parquet positional-delete "
-                        f"files only; got {bad[:3]}"
-                    )
-                pair_parts.append(
-                    spark.read.parquet(
-                        *[strip_file_scheme(e.data_file.file_path) for e in pq_entries]
-                    ).select(
-                        F.regexp_replace("file_path", "^file:/*", "/").alias(
-                            "_del_path"
-                        ),
-                        F.col("pos").alias("_del_pos"),
-                    )
+            pair_parts, pair_bytes = [], 0
+            for dv in (False, True):
+                got = position_deletes_df(
+                    spark,
+                    [
+                        e.data_file
+                        for e in added_pos_deletes
+                        if e.data_file.is_deletion_vector == dv
+                    ],
+                    table.properties,
                 )
-            if dv_entries:
-                from .table import _dv_positions_df
-
-                dv_pairs = _dv_positions_df(
-                    spark, [e.data_file for e in dv_entries], table.properties
-                )
+                if got is None:
+                    continue
+                part, nbytes = got
                 # a replacement DV is the UNION of all the file's
                 # deletes (V3 superset invariant) — only the delta vs
-                # the parent's delete state is newly deleted HERE
-                if parent is not None:
+                # the parent's delete state is newly deleted HERE. That
+                # baseline is the parent's positional deletes (its
+                # delete manifests only) restricted to the DVs' files:
+                # position deletes only ever reference files that
+                # existed when written, so path restriction suffices
+                # without sequence-number re-checks.
+                if dv and parent is not None:
                     ref_paths = {
                         strip_file_scheme(e.data_file.referenced_data_file or "")
-                        for e in dv_entries
+                        for e in added_pos_deletes
+                        if e.data_file.is_deletion_vector
                     }
-                    prior = _parent_delete_pairs(table, spark, parent, ref_paths)
+                    prior = position_deletes_df(
+                        spark,
+                        [
+                            e.data_file
+                            for e in table.scan(snapshot_id=parent.snapshot_id)
+                            ._scan_plan()
+                            .deletes
+                            if not e.data_file.is_deletion_vector
+                            or strip_file_scheme(e.data_file.referenced_data_file or "")
+                            in ref_paths
+                        ],
+                        table.properties,
+                    )
                     if prior is not None:
-                        dv_pairs = dv_pairs.join(
-                            prior, ["_del_path", "_del_pos"], "left_anti"
+                        refs = spark.createDataFrame(
+                            [(p,) for p in sorted(ref_paths)], "_del_path string"
                         )
-                pair_parts.append(dv_pairs)
-            pairs = pair_parts[0]
-            for p in pair_parts[1:]:
-                pairs = pairs.unionByName(p)
+                        part = part.join(
+                            prior[0].join(F.broadcast(refs), "_del_path", "left_semi"),
+                            ["_del_path", "_del_pos"],
+                            "left_anti",
+                        )
+                pair_parts.append(part)
+                pair_bytes += nbytes
+            pairs = reduce(DataFrame.unionByName, pair_parts)
             # persist: the collect below AND the semi-join both consume
             # pairs — without the cache the Puffin DV decode + parent
             # delete-state reads + anti-join all executed twice per
@@ -335,15 +287,7 @@ def _changelog_df_impl(
                 table, spark, _entry_tasks(table, parent_entries), positions=True, deletes=False
             )
             if rows is not None:
-                pairs = _maybe_broadcast_deletes(
-                    pairs,
-                    sum(
-                        (e.data_file.content_size_in_bytes or 0)
-                        if e.data_file.is_deletion_vector
-                        else e.data_file.file_size_in_bytes
-                        for e in added_pos_deletes
-                    ),
-                )
+                pairs = _maybe_broadcast_deletes(pairs, pair_bytes)
                 hit = rows.join(
                     pairs,
                     (rows["file_path"] == F.col("_del_path")) & (rows["pos"] == F.col("_del_pos")),
@@ -472,13 +416,12 @@ def _changelog_df_impl(
                 # NULL eq-delete key as deleting NULL-keyed rows; the
                 # plain equi-join under-reported them (r8 wave 6, same
                 # fix as the read path's anti-join)
-                from functools import reduce as _reduce
                 from operator import and_ as _and
 
                 kd = keys.select(
                     *[F.col(n).alias(f"_ek_{n}") for n in names]
                 )
-                cond = _reduce(
+                cond = reduce(
                     _and, [pre[n].eqNullSafe(kd[f"_ek_{n}"]) for n in names]
                 )
                 hit = pre.join(kd, cond, "left_semi")

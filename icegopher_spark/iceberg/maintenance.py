@@ -45,18 +45,12 @@ from .metadata import OP_REPLACE, parse_metadata
 from .table import (
     FileScanTask,
     Table,
-    _eq_delete_applies,
-    _match_deletes,
-    _maybe_broadcast_deletes,
     strip_file_scheme,
 )
 from .types import to_spark_type
 from .write import (
     _commit_metadata,
     _commit_snapshot,
-    _loaded_version,
-    _version_path,
-    collect_data_file,
     collect_data_files,
 )
 
@@ -99,8 +93,9 @@ def compact_data_files(
     """Bin-pack small data files into ~target-size files (Iceberg's
     rewrite_data_files binpack strategy).
 
-    Groups candidate files by (partition tuple, written-schema,
-    format); each group with >=2 sub-threshold files is read through
+    Groups the scan planner's sub-threshold default-spec tasks by
+    (partition tuple, written-schema, format, equality-delete set);
+    each group with >=2 files is read through
     Spark — with its positional and equality deletes APPLIED — and
     rewritten as ceil(bytes/target) files under the current schema.
     Untouched files carry forward as EXISTING entries keeping their
@@ -126,44 +121,25 @@ def compact_data_files(
     if not data_manifests:
         return table
 
-    pos_deletes: list[ManifestEntry] = []
-    eq_deletes: list[tuple[int, ManifestEntry]] = []
-    for m in delete_manifests:
-        for e in fetch_entries(m, io.read(m.manifest_path), discard_deleted=True):
-            if e.data_file.content == DataFileContent.POSITION_DELETES:
-                pos_deletes.append(e)
-            elif e.data_file.content == DataFileContent.EQUALITY_DELETES:
-                eq_deletes.append((m.partition_spec_id, e))
-    pos_deletes.sort(key=lambda e: e.sequence_number or 0)
-    pos_seqs = [e.sequence_number or 0 for e in pos_deletes]
-
     entries: list[ManifestEntry] = []
     for m in data_manifests:
         entries.extend(fetch_entries(m, io.read(m.manifest_path), discard_deleted=True))
 
-    # group small files by (partition, written schema, format, applicable
+    # group the planner's small default-spec tasks (their positional
+    # and equality deletes matched by the scan's own seq/spec/partition
+    # rules) by (partition, written schema, format, applicable
     # equality-delete set) — each group rewrites as one Spark job
-    groups: dict[tuple, list[ManifestEntry]] = {}
-    for e in entries:
-        df = e.data_file
-        if df.file_size_in_bytes >= threshold:
+    groups: dict[tuple, list[FileScanTask]] = {}
+    for t in table.scan().plan_files():
+        if t.spec_id != md.default_spec_id or t.file.file_size_in_bytes >= threshold:
             continue
-        esnap = md.snapshot_by_id(e.snapshot_id) if e.snapshot_id else None
-        # same partition-scoped matching as the scan planner (r6)
-        eq_key = frozenset(
-            d.data_file.file_path
-            for dsid, d in eq_deletes
-            if _eq_delete_applies(
-                dsid, d, md.default_spec_id, df, e.sequence_number or 0
-            )
-        )
         key = (
-            tuple(sorted(df.partition.items())),
-            esnap.schema_id if esnap else None,
-            df.file_format,
-            eq_key,
+            tuple(sorted(t.file.partition.items())),
+            t.schema_id,
+            t.file.file_format,
+            frozenset(d.file_path for d in t.eq_delete_files),
         )
-        groups.setdefault(key, []).append(e)
+        groups.setdefault(key, []).append(t)
 
     rewritten: set[str] = set()
     new_files = []
@@ -189,7 +165,7 @@ def compact_data_files(
         return table  # nothing to rewrite: a no-op stays a no-op
     scan = table.scan(with_lineage=preserve_lineage)
     fallback_unsafe = _schema_fallback_renames(md)
-    for (pkey, schema_id, _fmt, eq_key), group in groups.items():
+    for (pkey, schema_id, _fmt, _eq), group in groups.items():
         if len(group) < 2:
             continue
         # a file whose adding snapshot was EXPIRED falls back to the
@@ -197,38 +173,24 @@ def compact_data_files(
         # field was ever renamed the fallback reads nulls — and unlike a
         # transient scan misread, compaction would bake those nulls into
         # the replacement files permanently (r6 review). Refuse loudly.
-        if schema_id is None and fallback_unsafe and any(e.snapshot_id for e in group):
+        if schema_id is None and fallback_unsafe:
             raise ValueError(
                 "cannot compact files whose adding snapshot has been "
                 f"expired: fields {sorted(fallback_unsafe)} were renamed "
                 "across schema versions, so the written schema of "
-                f"{[e.data_file.file_path for e in group]} cannot be "
+                f"{[t.file.file_path for t in group]} cannot be "
                 "reconstructed; compact before expiring snapshots"
             )
-        # Read the group THROUGH THE SCAN PATH (to_df with an explicit
-        # task list): one implementation of schema projection,
-        # ORC/Avro positional readers, partial-key refusal, and by-name
+        # Read the group THROUGH THE SCAN PATH (to_df with the planned
+        # tasks): one implementation of schema projection, ORC/Avro
+        # positional readers, partial-key refusal, and by-name
         # delete-column resolution instead of a drifting copy here —
         # the old copy silently dropped missing equality-key fields
         # (over-deleting where the scan raises) and renamed delete
         # columns positionally (r6 review).
-        eq_files = [
-            d.data_file for _sid, d in eq_deletes if d.data_file.file_path in eq_key
-        ]
-        group_tasks = [
-            FileScanTask(
-                file=e.data_file,
-                delete_files=_match_deletes(e, pos_deletes, pos_seqs),
-                length=e.data_file.file_size_in_bytes,
-                schema_id=schema_id,
-                eq_delete_files=eq_files,
-                sequence_number=e.sequence_number or 0,
-            )
-            for e in group
-        ]
-        part = scan.to_df(spark, tasks=group_tasks)
+        part = scan.to_df(spark, tasks=group)
 
-        total = sum(e.data_file.file_size_in_bytes for e in group)
+        total = sum(t.file.file_size_in_bytes for t in group)
         n_out = max(1, math.ceil(total / target))
         out = f"{table.location}/data/compact-{_uuid.uuid4().hex[:16]}"
         part.coalesce(n_out).write.mode("overwrite").format(fmt_out).save(out)
@@ -241,7 +203,7 @@ def compact_data_files(
         # batch wrapper: ORC/Avro rewrites keep their column stats
         # (parquet batches are a no-op pass-through)
         new_files.extend(collect_data_files(table, spark, group_pairs))
-        rewritten.update(e.data_file.file_path for e in group)
+        rewritten.update(t.file.file_path for t in group)
 
     if not new_files:
         return table
@@ -794,8 +756,8 @@ def rewrite_position_delete_files(
     content types; the migration itself is beyond-reference (the
     reference predates V3 and cannot write at all).
     """
-    from .table import _dv_positions_df
-    from .write import _rewrite_manifest_for_spec, write_dv_files
+    from .table import position_deletes_df
+    from .write import _carry_manifests_superseding_dvs, write_dv_files
 
     if table.metadata.format_version < 3:
         raise ValueError(
@@ -807,92 +769,46 @@ def rewrite_position_delete_files(
     if snap is None:
         return table
 
-    # Plan with the proven delete-matching logic (seq + path) so only
-    # positions for LIVE data files are migrated; positions referencing
-    # rewritten-away files are garbage and simply dropped.
-    pd_paths: set[str] = set()
-    dv_by_file: dict[str, object] = {}
-    affected: set[str] = set()
-    # (spec_id, partition) pairs; write_dv_files stamps only
-    # current-default-spec values centrally (r8 advice #2)
-    fp_parts: dict[str, tuple[int, dict]] = {}
-    for t in table.scan().plan_files():
-        dpath = strip_file_scheme(t.file.file_path)
-        fp_parts[dpath] = (t.spec_id, dict(t.file.partition or {}))
-        has_pd = False
-        for d in t.delete_files:
-            if d.is_deletion_vector:
-                dv_by_file[dpath] = d
-            else:
-                pd_paths.add(strip_file_scheme(d.file_path))
-                has_pd = True
-        if has_pd:
-            affected.add(dpath)
-    if not pd_paths and not _has_positional_delete_entries(table, snap):
-        return table  # nothing to migrate (the manifest walk only runs
-        # when planning surfaced no pos-deletes — dead-file-garbage-only
-        # tables; r7 review)
-
+    # The planner's delete matching (seq + path) picks the LIVE data
+    # files a plain positional-delete file applies to; their whole
+    # delete state (parquet rows + any prior DV) becomes one DV each.
+    # Positions referencing rewritten-away files are garbage: the
+    # semi-join drops them.
+    affected = [
+        t for t in table.scan().plan_files()
+        if any(not d.is_deletion_vector for d in t.delete_files)
+    ]
     dv_files = []
     if affected:
-        pos = spark.read.parquet(*sorted(pd_paths)).select(
-            F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias(
-                "file_path"
-            ),
-            "pos",
+        union_df, _ = position_deletes_df(
+            spark, [d for t in affected for d in t.delete_files], table.properties
         )
         aff_df = spark.createDataFrame(
-            [(p,) for p in sorted(affected)], "file_path string"
+            [(strip_file_scheme(t.file.file_path),) for t in affected], "file_path string"
         )
-        union_df = pos.join(F.broadcast(aff_df), "file_path", "left_semi")
-        prior_dvs = [dv_by_file[p] for p in sorted(affected) if p in dv_by_file]
-        if prior_dvs:
-            union_df = union_df.unionByName(
-                _dv_positions_df(spark, prior_dvs, table.properties).select(
-                    F.col("_del_path").alias("file_path"),
-                    F.col("_del_pos").alias("pos"),
-                )
-            )
-        # re-applied MOR deletes duplicate (path,pos) rows across files;
-        # distinct keeps the shard build proportional to unique positions
-        union_df = union_df.distinct()
-        dv_files = write_dv_files(
-            table, union_df, n_shards=n_shards, partitions=fp_parts
+        union_df = union_df.toDF("file_path", "pos").join(
+            F.broadcast(aff_df), "file_path", "left_semi"
         )
-    covered = {
-        strip_file_scheme(f.referenced_data_file or "") for f in dv_files
-    }
+        # (spec_id, partition) pairs; write_dv_files stamps only
+        # current-default-spec values centrally (r8 advice #2)
+        fp_parts = {
+            strip_file_scheme(t.file.file_path): (t.spec_id, dict(t.file.partition or {}))
+            for t in affected
+        }
+        dv_files = write_dv_files(table, union_df, n_shards=n_shards, partitions=fp_parts)
 
     # Carry manifests forward: data untouched; delete manifests lose
     # every plain positional-delete entry (migrated or dead-file
     # garbage) and any DV entry superseded by a replacement DV.
-    kept: list[ManifestFile] = []
-    for m in read_manifest_list(table.io.read(snap.manifest_list)):
-        if m.content != ManifestContent.DELETES:
-            kept.append(m)
-            continue
-        entries = fetch_entries(
-            m, table.io.read(m.manifest_path), discard_deleted=True
-        )
-        survivors = []
-        for e in entries:
-            f = e.data_file
-            if f.content == DataFileContent.EQUALITY_DELETES:
-                survivors.append(e)
-            elif f.is_deletion_vector and (
-                strip_file_scheme(f.referenced_data_file or "") not in covered
-            ):
-                survivors.append(e)
-        if len(survivors) == len(entries):
-            kept.append(m)
-        elif survivors:
-            kept.append(
-                _rewrite_manifest_for_spec(
-                    table, m, survivors, content=ManifestContent.DELETES
-                )
-            )
-        # else: every entry retired — drop the manifest
-
+    kept, dropped = _carry_manifests_superseding_dvs(
+        table,
+        snap,
+        dv_files,
+        retire=lambda f: f.content == DataFileContent.POSITION_DELETES
+        and not f.is_deletion_vector,
+    )
+    if not dropped:
+        return table  # nothing to migrate
     return _commit_snapshot(
         table,
         [],
@@ -904,25 +820,6 @@ def rewrite_position_delete_files(
             "added-delete-files": str(len(dv_files)),
         },
     )
-
-
-def _has_positional_delete_entries(table: Table, snap) -> bool:
-    """True if any live delete manifest still carries a plain (non-DV)
-    positional-delete entry — catches entries whose referenced data
-    files are all dead, which scan planning never surfaces."""
-    for m in read_manifest_list(table.io.read(snap.manifest_list)):
-        if m.content != ManifestContent.DELETES:
-            continue
-        for e in fetch_entries(
-            m, table.io.read(m.manifest_path), discard_deleted=True
-        ):
-            f = e.data_file
-            if (
-                f.content == DataFileContent.POSITION_DELETES
-                and not f.is_deletion_vector
-            ):
-                return True
-    return False
 
 
 def rewrite_equality_deletes(
@@ -947,8 +844,8 @@ def rewrite_equality_deletes(
     (path, pos) pairs; Puffin writes are executor-side
     (write.py::write_dv_files).
     """
-    from .table import read_tasks, strip_file_scheme as _strip
-    from .write import _rewrite_manifest_for_spec, _write_superset_dvs
+    from .table import read_tasks
+    from .write import _carry_manifests_superseding_dvs, _write_superset_dvs
 
     if table.metadata.format_version < 3:
         raise ValueError(
@@ -964,9 +861,6 @@ def rewrite_equality_deletes(
     for t in table.scan().plan_files():
         if t.eq_delete_files:
             groups.setdefault(frozenset(d.file_path for d in t.eq_delete_files), []).append(t)
-    if not groups and not _has_equality_delete_entries(table, snap):
-        return table  # nothing to convert
-
     dv_files = []
     if groups:
         # rename-safe: files project into the current schema by field
@@ -988,37 +882,15 @@ def rewrite_equality_deletes(
         dv_files = _write_superset_dvs(
             table, spark, matches, [t for ts in groups.values() for t in ts], n_shards
         )
-    covered = {
-        _strip(f.referenced_data_file or "") for f in dv_files
-    }
-
-    kept: list[ManifestFile] = []
-    for m in read_manifest_list(table.io.read(snap.manifest_list)):
-        if m.content != ManifestContent.DELETES:
-            kept.append(m)
-            continue
-        entries = fetch_entries(
-            m, table.io.read(m.manifest_path), discard_deleted=True
-        )
-        survivors = []
-        for e in entries:
-            f = e.data_file
-            if f.content == DataFileContent.EQUALITY_DELETES:
-                continue  # materialized into DVs — retire every entry
-            if f.is_deletion_vector and (
-                _strip(f.referenced_data_file or "") in covered
-            ):
-                continue  # superseded by the replacement DV
-            survivors.append(e)
-        if len(survivors) == len(entries):
-            kept.append(m)
-        elif survivors:
-            kept.append(
-                _rewrite_manifest_for_spec(
-                    table, m, survivors, content=ManifestContent.DELETES
-                )
-            )
-
+    # every equality-delete entry is materialized into DVs: retire it
+    kept, dropped = _carry_manifests_superseding_dvs(
+        table,
+        snap,
+        dv_files,
+        retire=lambda f: f.content == DataFileContent.EQUALITY_DELETES,
+    )
+    if not dropped:
+        return table  # nothing to convert
     return _commit_snapshot(
         table,
         [],
@@ -1052,18 +924,6 @@ def _eq_delete_semi_union(src: DataFrame, eq_files, base, spark) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _has_equality_delete_entries(table: Table, snap) -> bool:
-    for m in read_manifest_list(table.io.read(snap.manifest_list)):
-        if m.content != ManifestContent.DELETES:
-            continue
-        for e in fetch_entries(
-            m, table.io.read(m.manifest_path), discard_deleted=True
-        ):
-            if e.data_file.content == DataFileContent.EQUALITY_DELETES:
-                return True
-    return False
 
 
 NDV_BLOB_TYPE = "ndv-long-v1"

@@ -599,7 +599,9 @@ def read_tasks(
         # SURVEY.md §2.1 #19; positions came from the parquet reader's
         # hidden _metadata column (split-safe, unlike row_number over
         # input_file_name) or the Arrow readers' ordinals
-        delete_side, nbytes = position_deletes_df(spark, tasks, table.properties)
+        delete_side, nbytes = position_deletes_df(
+            spark, [d for t in tasks for d in t.delete_files], table.properties
+        )
         norm = F.regexp_replace(F.col("_file"), "^file:/*", "/")
         df = df.join(
             _maybe_broadcast_deletes(delete_side, nbytes),
@@ -618,25 +620,30 @@ def read_tasks(
 
 
 def position_deletes_df(
-    spark: SparkSession, tasks: list[FileScanTask], properties: dict | None
+    spark: SparkSession, delete_files: list, properties: dict | None
 ) -> tuple[DataFrame, int] | None:
-    """The tasks' positional deletes as normalized (_del_path, _del_pos)
+    """Positional-delete ``DataFile``s as normalized (_del_path, _del_pos)
     rows, with the manifests' byte bound on them; None when there are
-    none. V2 delete files are parquet (file_path, pos) rows, V3
-    deletion vectors roaring bitmaps in Puffin files (one per
-    referenced data file); both decode to the same shape."""
-    by_path = {
-        strip_file_scheme(d.file_path): d.file_size_in_bytes
-        for t in tasks
-        for d in t.delete_files
-        if not d.is_deletion_vector
-    }
-    dvs = {
-        (d.file_path, d.content_offset): d
-        for t in tasks
-        for d in t.delete_files
-        if d.is_deletion_vector
-    }
+    none. The one reader of positional-delete state: the scan, the DV
+    writers, the changelog, the V2→DV migration and the Delta link all
+    come through here. V2 delete files are parquet (file_path, pos)
+    rows, V3 deletion vectors roaring bitmaps in Puffin files (one per
+    referenced data file); both decode to the same shape. A
+    non-parquet V2 delete file is refused by name (our writers emit
+    parquet only; a foreign write.delete.format=orc table is out of
+    scope)."""
+    by_path: dict[str, int] = {}
+    dvs = {}
+    for d in delete_files:
+        if d.is_deletion_vector:
+            dvs[(d.file_path, d.content_offset)] = d
+        elif (d.file_format or "PARQUET").upper() != "PARQUET":
+            raise ValueError(
+                "only parquet positional-delete files are supported; "
+                f"got {d.file_path} ({d.file_format})"
+            )
+        else:
+            by_path[strip_file_scheme(d.file_path)] = d.file_size_in_bytes
     parts: list[DataFrame] = []
     if by_path:
         parts.append(

@@ -1789,6 +1789,28 @@ def _write_pos_delete_files(table: Table, matches: DataFrame) -> list[DataFile]:
     return delete_files
 
 
+def _live_matches(table: Table, spark: SparkSession, row_filter):
+    """(planned tasks, live rows matching ``row_filter`` led by
+    ``file_path``/``pos``) — the shared prelude of the merge-on-read
+    deletes; rows None for an empty plan. ``row_filter`` is a bound
+    Iceberg expression (prunes files via manifest stats) or a Spark
+    Column (scans every file and filters row-level: predicates like
+    ``col % 9 == 0`` are not expressible as bound expressions). Rows
+    already deleted (equality, positional, DV) are anti-joined out: a
+    row deleted twice would double-decrement incremental MVs
+    downstream."""
+    from pyspark.sql import Column
+
+    from .expressions import to_spark_column
+
+    if isinstance(row_filter, Column):
+        spark_pred, scan = row_filter, table.scan()
+    else:
+        spark_pred, scan = to_spark_column(row_filter), table.scan(row_filter=row_filter)
+    tasks = scan.plan_files()
+    return tasks, read_tasks(table, spark, tasks, positions=True, pre_filter=spark_pred)
+
+
 def delete_where_mor(table: Table, spark: SparkSession, row_filter) -> Table:
     """Merge-on-read delete: instead of rewriting data files, write
     positional delete files (file_path, pos) for matching rows and
@@ -1804,25 +1826,12 @@ def delete_where_mor(table: Table, spark: SparkSession, row_filter) -> Table:
     collect() matching keys into an IN-list — a driver-memory path at
     scale). A Column scans all files and filters row-level; use a
     bound expression whenever the predicate allows pruning."""
-    from pyspark.sql import Column
-
-    from .expressions import to_spark_column
     from .manifests import read_manifest_list
 
     snap = table.current_snapshot()
     if snap is None:
         return table
-
-    if isinstance(row_filter, Column):
-        spark_pred = row_filter
-        scan = table.scan()  # no stats pruning possible for a Column
-    else:
-        spark_pred = to_spark_column(row_filter)
-        scan = table.scan(row_filter=row_filter)
-
-    # rows already deleted are anti-joined out: a row deleted twice
-    # would double-decrement incremental MVs downstream
-    live = read_tasks(table, spark, scan.plan_files(), positions=True, pre_filter=spark_pred)
+    _, live = _live_matches(table, spark, row_filter)
     if live is None:
         return table
     delete_files = _write_pos_delete_files(table, live)
@@ -1978,35 +1987,17 @@ def delete_where_dv(
     metadata row per affected data file. The reference predates V3 and
     has no DV support — this is beyond-reference surface from the
     public spec."""
-    from pyspark.sql import Column
-
-    from .expressions import to_spark_column
     snap = table.current_snapshot()
     if snap is None:
         return table
-
-    # Column overload (same contract delete_where_mor gained in r11):
-    # predicates like `col % 9 == 0` aren't expressible as bound
-    # expressions — a Column scans all files and filters row-level,
-    # trading manifest pruning for expressiveness
-    if isinstance(row_filter, Column):
-        spark_pred = row_filter
-        scan = table.scan()
-    else:
-        spark_pred = to_spark_column(row_filter)
-        scan = table.scan(row_filter=row_filter)
-    tasks = scan.plan_files()
-    # newly-matching rows, minus rows already deleted (eq deletes +
-    # prior pos deletes + prior DVs) — counting a row deleted twice
-    # would double-decrement incremental MVs downstream
-    live = read_tasks(table, spark, tasks, positions=True, pre_filter=spark_pred)
+    tasks, live = _live_matches(table, spark, row_filter)
     if live is None:
         return table
     dv_files = _write_superset_dvs(table, spark, live, tasks, n_shards)
     if not dv_files:
         return table
 
-    kept = _carry_manifests_superseding_dvs(table, snap, dv_files)
+    kept, _ = _carry_manifests_superseding_dvs(table, snap, dv_files)
 
     return _commit_snapshot(
         table,
@@ -2041,7 +2032,9 @@ def _write_superset_dvs(
         if matches.limit(1).count() == 0:
             return []
         union_df = matches
-        prior = position_deletes_df(spark, tasks, table.properties)
+        prior = position_deletes_df(
+            spark, [d for t in tasks for d in t.delete_files], table.properties
+        )
         if prior is not None:
             affected = F.broadcast(matches.select("file_path").distinct())
             union_df = union_df.unionByName(
@@ -2062,31 +2055,34 @@ def _write_superset_dvs(
 
 
 def _carry_manifests_superseding_dvs(
-    table: Table, snap, dv_files: list[DataFile]
-) -> list["ManifestFile"]:
+    table: Table, snap, dv_files: list[DataFile], retire=None
+) -> tuple[list["ManifestFile"], int]:
     """Carry the snapshot's manifests forward, dropping DV entries
     superseded by the replacement DVs (at most one live DV per data
-    file — V3 invariant). Shared by delete_where_dv and the v3
-    merge_matrix_mor path."""
+    file — V3 invariant) and every delete entry whose ``DataFile`` the
+    ``retire`` predicate selects; returns the kept manifests and how
+    many entries were dropped. The one walk that rewrites delete
+    manifests: delete_where_dv, the v3 merge_matrix_mor path, and the
+    positional/equality-delete → DV migrations (maintenance)."""
     from .manifests import fetch_entries, read_manifest_list
     from .table import strip_file_scheme
 
     covered = {strip_file_scheme(f.referenced_data_file) for f in dv_files}
+
+    def dropped(f) -> bool:
+        if f.is_deletion_vector and strip_file_scheme(f.referenced_data_file or "") in covered:
+            return True
+        return retire is not None and retire(f)
+
     kept: list[ManifestFile] = []
+    n_dropped = 0
     for m in read_manifest_list(table.io.read(snap.manifest_list)):
         if m.content != ManifestContent.DELETES:
             kept.append(m)
             continue
         entries = fetch_entries(m, table.io.read(m.manifest_path), discard_deleted=True)
-        survivors = [
-            e
-            for e in entries
-            if not (
-                e.data_file.is_deletion_vector
-                and strip_file_scheme(e.data_file.referenced_data_file or "")
-                in covered
-            )
-        ]
+        survivors = [e for e in entries if not dropped(e.data_file)]
+        n_dropped += len(entries) - len(survivors)
         if len(survivors) == len(entries):
             kept.append(m)
         elif survivors:
@@ -2095,8 +2091,8 @@ def _carry_manifests_superseding_dvs(
                     table, m, survivors, content=ManifestContent.DELETES
                 )
             )
-        # else: every entry superseded — drop the manifest
-    return kept
+        # else: every entry dropped — drop the manifest
+    return kept, n_dropped
 
 
 def _write_eq_delete_files(
@@ -2700,7 +2696,7 @@ def merge_matrix_mor(
     if not delete_files and not new_files:
         return table
     if is_v3 and delete_files:
-        keep = _carry_manifests_superseding_dvs(table, snap, delete_files)
+        keep, _ = _carry_manifests_superseding_dvs(table, snap, delete_files)
     else:
         keep = read_manifest_list(table.io.read(snap.manifest_list))
     return _commit_snapshot(

@@ -115,6 +115,47 @@ def test_cow_netting_keeps_source_columns_named_like_helpers(spark, tmp_path, ex
     assert [tuple(r[c] for c in cols) for r in ch.collect()] == [(*rows[2], "delete")]
 
 
+@pytest.mark.parametrize("face", ["read_tasks", "changelog_df"])
+def test_non_parquet_positional_delete_refused_by_name(spark, tmp_path, face):
+    """A positional-delete file whose manifest entry says ORC is
+    refused with a ValueError naming it, on the scan's task reader and
+    on the changelog alike (not a failure inside Spark's parquet
+    reader)."""
+    import os
+    import re
+
+    from icegopher_spark.iceberg.manifests import (
+        DataFile,
+        DataFileContent,
+        read_manifest_list,
+    )
+    from icegopher_spark.iceberg.table import read_tasks
+
+    t = _mk(spark, tmp_path / "t", [(1, 1.0, "x"), (2, 2.0, "y")])
+    s1 = t.current_snapshot().snapshot_id
+    data_path = t.scan().plan_files()[0].file.file_path
+    out = str(tmp_path / "orcdel")
+    spark.createDataFrame([(data_path, 0)], "file_path string, pos long").coalesce(
+        1
+    ).write.orc(out)
+    path = next(f"{out}/{f}" for f in sorted(os.listdir(out)) if f.endswith(".orc"))
+    dfile = DataFile(
+        file_path=path,
+        file_format="ORC",
+        content=DataFileContent.POSITION_DELETES,
+        record_count=1,
+        file_size_in_bytes=os.path.getsize(path),
+        partition={},
+    )
+    keep = read_manifest_list(t.io.read(t.current_snapshot().manifest_list))
+    t = W._commit_snapshot(t, [], W.OP_DELETE, keep_manifests=keep, delete_files=[dfile])
+    with pytest.raises(ValueError, match=re.escape(path)):
+        if face == "read_tasks":
+            read_tasks(t, spark, t.scan().plan_files())
+        else:
+            changelog_df(t, spark, from_snapshot_id=s1)
+
+
 def test_replace_snapshot_skipped(spark, tmp_path):
     from icegopher_spark.iceberg.maintenance import compact_data_files
 

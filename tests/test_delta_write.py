@@ -467,6 +467,48 @@ def test_link_export_zero_copy_and_refusals(spark, tmp_path):
         link_iceberg_to_delta(spark, t2, str(tmp_path / "linked2"))
 
 
+def test_link_export_writes_no_orphan_dvs(spark, tmp_path):
+    """A positional-delete file also names rows of a data file that a
+    later copy-on-write delete rewrote away; the link must write Delta
+    DV files only for live files, each referenced by an add, and the
+    linked read must equal the Iceberg scan."""
+    import icegopher_spark.iceberg.write as W
+    from icegopher_spark.delta_write import link_iceberg_to_delta
+    from icegopher_spark.iceberg import expressions as E
+    from icegopher_spark.iceberg.schema import Schema
+    from icegopher_spark.iceberg.types import LongType, NestedField
+
+    schema = Schema(
+        (
+            NestedField(1, "k", LongType(), True),
+            NestedField(2, "v", LongType(), False),
+        ),
+        schema_id=0,
+    )
+    t = W.create_table(str(tmp_path / "ice"), schema)
+    for lo in (0, 100):
+        t = W.append(
+            t,
+            spark.range(lo, lo + 50)
+            .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+            .coalesce(1),
+        )
+    t = W.delete_where_mor(t, spark, E.is_in("k", 3, 103))
+    t = W.delete_where(t, spark, E.equal_to("k", 4))  # CoW: rewrites k=3's file
+
+    out = str(tmp_path / "linked")
+    link_iceberg_to_delta(spark, t, out)
+    dv_files = [
+        f for f in os.listdir(out) if f.startswith("deletion_vector_") and f.endswith(".bin")
+    ]
+    with open(os.path.join(out, "_delta_log", f"{0:020d}.json")) as fh:
+        adds = [json.loads(line)["add"] for line in fh if '"add"' in line]
+    assert len(dv_files) == sum(1 for a in adds if a.get("deletionVector")) == 1
+    got = sorted(r["k"] for r in read_delta(spark, out).collect())
+    want = sorted(r["k"] for r in t.scan().to_df(spark).collect())
+    assert got == want == sorted((set(range(50)) | set(range(100, 150))) - {3, 4, 103})
+
+
 def test_cli_delta_optimize_restore_vacuum(spark, tmp_path, capsys):
     from pyspark.sql import functions as F
 
