@@ -1969,7 +1969,7 @@ def link_iceberg_to_delta(
         )
         dp = delta_path
 
-        def _mk_dv(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def _mk_dv(key, pdf):
             import numpy as np
 
             from .delta_dv import write_dv_file as _w

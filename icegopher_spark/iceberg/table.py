@@ -69,6 +69,7 @@ POSITIONAL_DELETE_SCHEMA = Schema(
         NestedField(2147483545, "pos", LongType(), True),
     )
 )
+_POSITIONAL_DELETE_READ = POSITIONAL_DELETE_SCHEMA.to_spark()
 
 
 @dataclass
@@ -413,7 +414,9 @@ class TableScan:
         the files into the scan schema with their deletes applied; the
         row filter is re-applied exactly (file pruning is
         inclusive/approximate), and Catalyst still pushes it into the
-        parquet scan for row-group pruning.
+        parquet scan for row-group pruning. A tiny scan (data files
+        totalling at most ``spark.sql.files.openCostInBytes``) comes back
+        as one partition.
 
         ``tasks`` restricts execution to an explicit task list.
         """
@@ -433,9 +436,20 @@ class TableScan:
                 ensure_bound(base, rewrite_not(self.row_filter), self.case_sensitive)
             ))
         out_names = list(projection.column_names)
+        read_names = [f.name for f in base.fields if not contains_unsupported(f.field_type)]
         if lineage:
             out_names += [ROW_ID_COL, LAST_UPDATED_SEQ_COL]
-        df = df.select(*[F.col(name) for name in out_names])
+            read_names += [ROW_ID_COL, LAST_UPDATED_SEQ_COL]
+        # read_tasks returns exactly read_names: an all-column scan
+        # needs no projection of its own
+        if out_names != read_names:
+            df = df.select(*out_names)
+        # A scan whose data files total at most Spark's open cost of one
+        # file runs as one partition, as a DSv2 scan with one split does:
+        # its SinglePartition output lets Catalyst drop the Exchange an
+        # aggregate or a limit would otherwise plan.
+        if sum(t.file.file_size_in_bytes for t in tasks) <= _open_cost_bytes(spark):
+            df = df.coalesce(1)
         if self.limit is not None:
             df = df.limit(self.limit)
         return df
@@ -445,6 +459,11 @@ _LINEAGE_FIELDS = [
     StructField(ROW_ID_COL, SparkLongType()),
     StructField(LAST_UPDATED_SEQ_COL, SparkLongType()),
 ]
+
+
+def _open_cost_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.openCostInBytes`` as Spark parses it."""
+    return int(spark._jsparkSession.sessionState().conf().filesOpenCostInBytes())
 
 
 def read_tasks(
@@ -479,7 +498,8 @@ def read_tasks(
     ``_last_updated_sequence_number``: the file's materialized values,
     else ``first_row_id + pos`` / the data sequence number.
     ``positions`` leads each row with its (scheme-normalized)
-    ``file_path`` and ``pos``.
+    ``file_path`` and ``pos``. Otherwise the rows carry exactly
+    ``schema``'s readable columns, lineage columns last.
     """
     if not tasks:
         return None
@@ -542,26 +562,32 @@ def read_tasks(
                     F.col("_metadata.file_path").alias("_file"),
                     F.col("_metadata.row_index").alias("_pos"),
                 ]
+        # a column read as written passes through by name (one py4j
+        # call); Column expressions only for casts, renames and defaults
         for f in schema.fields:
             if contains_unsupported(f.field_type):
                 continue
             old = file_schema.find_field(f.field_id)
-            if old is not None:
-                c = F.col(old.name)
-                if old.field_type != f.field_type:
-                    c = c.cast(to_spark_type(f.field_type))
-            else:
+            if old is None:
                 c = default_column(f, "initial")
                 if c is None:
                     c = F.lit(None).cast(to_spark_type(f.field_type))
-            cols.append(c.alias(f.name))
+                cols.append(c.alias(f.name))
+            elif old.field_type != f.field_type:
+                cols.append(F.col(old.name).cast(to_spark_type(f.field_type)).alias(f.name))
+            elif old.name != f.name:
+                cols.append(F.col(old.name).alias(f.name))
+            else:
+                cols.append(f.name)
         if lineage:
             # materialized lineage values when the file carries them;
             # nulls otherwise, for the coalesce below
             for name, alias in ((ROW_ID_COL, "__lin_rid"), (LAST_UPDATED_SEQ_COL, "__lin_lseq")):
                 c = F.col(name) if has_lin_cols else F.lit(None).cast("bigint")
                 cols.append(c.alias(alias))
-        part = raw.select(*cols)
+        # a group written in the target schema is the reader's own frame
+        identity = all(isinstance(c, str) for c in cols) and cols == read_schema.fieldNames()
+        part = raw if identity else raw.select(*cols)
         if pre_filter is not None:
             part = part.filter(pre_filter)
         parts.append(apply_eq_delete_anti_joins(part, g["eq"], schema, spark))
@@ -575,12 +601,12 @@ def read_tasks(
         # _row_id rather than inventing unstable ids.
         lookup = spark.createDataFrame(
             [
-                (re.sub("^file:/*", "/", t.file.file_path), t.file.first_row_id, t.sequence_number)
+                (strip_file_scheme(t.file.file_path), t.file.first_row_id, t.sequence_number)
                 for t in tasks
             ],
             "__lin_path string, __lin_first bigint, __lin_fseq bigint",
         )
-        norm_file = F.regexp_replace(F.col("_file"), "^file:/*", "/")
+        norm_file = strip_file_scheme_col(F.col("_file"))
         df = (
             df.join(F.broadcast(lookup), norm_file == F.col("__lin_path"), "left")
             .withColumn(
@@ -602,20 +628,20 @@ def read_tasks(
         delete_side, nbytes = position_deletes_df(
             spark, [d for t in tasks for d in t.delete_files], table.properties
         )
-        norm = F.regexp_replace(F.col("_file"), "^file:/*", "/")
+        norm = strip_file_scheme_col(F.col("_file"))
         df = df.join(
             _maybe_broadcast_deletes(delete_side, nbytes),
             (norm == F.col("_del_path")) & (df["_pos"] == F.col("_del_pos")),
             "left_anti",
         )
-        if not positions:
-            df = df.drop("_file", "_pos")
     if positions:
         df = df.select(
-            F.regexp_replace(F.col("_file"), "^file:/*", "/").alias("file_path"),
+            strip_file_scheme_col(F.col("_file")).alias("file_path"),
             F.col("_pos").alias("pos"),
             *[c for c in df.columns if c not in ("_file", "_pos")],
         )
+    elif need_pos:
+        df = df.drop("_file", "_pos")
     return df
 
 
@@ -646,19 +672,16 @@ def position_deletes_df(
             by_path[strip_file_scheme(d.file_path)] = d.file_size_in_bytes
     parts: list[DataFrame] = []
     if by_path:
-        parts.append(
-            spark.read.parquet(*sorted(by_path)).select(
-                F.col("file_path").alias("_del_path"),
-                F.col("pos").alias("_del_pos"),
-            )
-        )
+        # the spec's fixed schema: no footer-inference job per scan
+        raw = _memo_reader(spark, _POSITIONAL_DELETE_READ, "PARQUET", sorted(by_path))
+        parts.append(raw.toDF("_del_path", "_del_pos"))
     if dvs:
         parts.append(_dv_positions_df(spark, list(dvs.values()), properties))
     if not parts:
         return None
     nbytes = sum(by_path.values()) + sum(d.content_size_in_bytes or 0 for d in dvs.values())
     deletes = reduce(DataFrame.unionByName, parts)
-    norm_del = F.regexp_replace(F.col("_del_path"), "^file:/*", "/")
+    norm_del = strip_file_scheme_col(F.col("_del_path"))
     return deletes.select(norm_del.alias("_del_path"), "_del_pos"), nbytes
 
 
@@ -918,6 +941,9 @@ def _match_deletes(
     out = []
     path_fid = 2147483546
     target_path = strip_file_scheme(entry.data_file.file_path)
+    # a delete file's rows name the data file as recorded (the spec) or
+    # normalized (our writers): bounds admit either spelling
+    targets = {entry.data_file.file_path.encode(), target_path.encode()}
     for e in sorted_deletes[idx:]:
         df = e.data_file
         if df.is_deletion_vector:
@@ -926,12 +952,8 @@ def _match_deletes(
             continue
         lo = (df.lower_bounds or {}).get(path_fid)
         hi = (df.upper_bounds or {}).get(path_fid)
-        target = entry.data_file.file_path.encode()
-        if lo is not None and target < lo:
-            continue
-        if hi is not None and target > hi:
-            continue
-        out.append(df)
+        if any((lo is None or lo <= t) and (hi is None or t <= hi) for t in targets):
+            out.append(df)
     return out
 
 
@@ -984,7 +1006,16 @@ def _dv_positions_df(
     return src.mapInPandas(_decode, "_del_path string, _del_pos bigint")
 
 
+# One path rule for both sides of every (file, position) match: a
+# ``file:`` URI in any slash form (``file:/x`` as Spark's
+# ``_metadata.file_path`` spells it, ``file:///x``) is its absolute path.
+_FILE_SCHEME = re.compile("^file:/*")
+
+
 def strip_file_scheme(path: str) -> str:
-    if path.startswith("file://"):
-        return path[len("file://") :]
-    return path
+    return _FILE_SCHEME.sub("/", path) if path.startswith("file:") else path
+
+
+def strip_file_scheme_col(c):
+    """``strip_file_scheme`` over a string Column."""
+    return F.regexp_replace(c, _FILE_SCHEME.pattern, "/")

@@ -46,7 +46,7 @@ from .metadata import (
     parse_metadata,
 )
 from .schema import Schema
-from .table import Table, read_tasks
+from .table import Table, read_tasks, strip_file_scheme_col
 from .transforms import PartitionSpec
 from .types import (
     BinaryType,
@@ -542,7 +542,7 @@ def _orc_avro_file_stats(
 
         src = read_avro_files(spark, paths, schema.to_spark(), with_pos=True)
         file_col = F.col("_file")
-    src = src.withColumn("__sf", F.regexp_replace(file_col, "^file:/*", "/"))
+    src = src.withColumn("__sf", strip_file_scheme_col(file_col))
     fields = [
         f
         for f in schema.fields

@@ -9,6 +9,7 @@ against external oracles.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -66,3 +67,23 @@ def get_spark(app_name: str = "icegopher_spark", cpus: str | None = None) -> Spa
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def py4j_calls(spark: SparkSession):
+    """Count the driver's py4j round trips inside the block: yields a
+    one-element list whose item is the running count. Classic (py4j)
+    sessions only; the count is process-wide, not per thread."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        del client.send_command

@@ -509,6 +509,59 @@ def test_link_export_writes_no_orphan_dvs(spark, tmp_path):
     assert got == want == sorted((set(range(50)) | set(range(100, 150))) - {3, 4, 103})
 
 
+def _linkable_table(spark, tmp_path, scheme=""):
+    """A table of one data file recorded as ``scheme`` + its absolute
+    path, with k = 2 and 5 deleted by a positional-delete file."""
+    import icegopher_spark.iceberg.write as W
+    from icegopher_spark.iceberg import expressions as E
+    from icegopher_spark.iceberg.schema import Schema
+    from icegopher_spark.iceberg.types import LongType, NestedField
+
+    schema = Schema(
+        (
+            NestedField(1, "k", LongType(), True),
+            NestedField(2, "v", LongType(), False),
+        ),
+        schema_id=0,
+    )
+    src = str(tmp_path / "src")
+    rows = spark.range(20).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    rows.coalesce(1).write.parquet(src)
+    files = [f"{scheme}{src}/{f}" for f in sorted(os.listdir(src)) if f.endswith(".parquet")]
+    t = W.add_files(W.create_table(str(tmp_path / "ice"), schema), files)
+    return W.delete_where_mor(t, spark, E.is_in("k", 2, 5))
+
+
+def test_link_export_applies_deletes_of_file_uri_data_files(spark, tmp_path):
+    """The link's live-path match and add lookup normalize a ``file:/``
+    data-file path by the rule the delete rows use, so its deletes
+    become a Delta DV."""
+    from icegopher_spark.delta_write import link_iceberg_to_delta
+
+    t = _linkable_table(spark, tmp_path, "file:")
+    recorded = t.scan().plan_files()[0].file.file_path
+    assert recorded.startswith("file:/") and not recorded.startswith("file://")
+    out = str(tmp_path / "linked")
+    link_iceberg_to_delta(spark, t, out)
+    got = sorted(r["k"] for r in read_delta(spark, out).collect())
+    want = sorted(r["k"] for r in t.scan().to_df(spark).collect())
+    assert got == want == sorted(set(range(20)) - {2, 5})
+
+
+def test_link_export_logs_no_type_hint_warning(spark, tmp_path):
+    """The link's grouped DV writer carries no partial type hints, so
+    PySpark warns nothing about inferring its eval type."""
+    import warnings
+
+    from icegopher_spark.delta_write import link_iceberg_to_delta
+
+    t = _linkable_table(spark, tmp_path)
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        link_iceberg_to_delta(spark, t, str(tmp_path / "linked"))
+    assert not [w for w in seen if "Cannot infer the eval type" in str(w.message)]
+
+
 def test_cli_delta_optimize_restore_vacuum(spark, tmp_path, capsys):
     from pyspark.sql import functions as F
 

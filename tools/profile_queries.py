@@ -4,12 +4,14 @@ For each named query (default: the bench headline + extended set),
 runs the query once with the noop sink (guide §1.4 — computes every
 column, no count() pruning) inside a dedicated job group, and reports:
 
-  wall seconds | #Spark jobs | #stages | query name
+  wall seconds | #Spark jobs | #stages | #py4j round trips | query name
 
-Each row of /tmp/profile_queries.json also carries ``cache`` and
-``decode``: how the session cache's and the manifest decode memo's
-counters (session_cache.stats(), manifests.decode_cache_stats())
-moved across the query.
+The py4j count covers building the query and running it: it is the
+driver-plan-construction layer's size (each Column, select and conf
+read is one or more round trips). Each row of /tmp/profile_queries.json
+also carries ``cache`` and ``decode``: how the session cache's and the
+manifest decode memo's counters (session_cache.stats(),
+manifests.decode_cache_stats()) moved across the query.
 
 Fixed per-job overhead (scheduling, Python-worker round trips,
 streaming micro-batch machinery) shows up as a high job count with low
@@ -31,7 +33,7 @@ sys.path.insert(0, str(_REPO))
 from icegopher_spark import session_cache  # noqa: E402
 from icegopher_spark.iceberg.manifests import decode_cache_stats  # noqa: E402
 from icegopher_spark.queries import QUERIES  # noqa: E402
-from icegopher_spark.session import get_spark  # noqa: E402
+from icegopher_spark.session import get_spark, py4j_calls  # noqa: E402
 
 
 def _delta(before: dict, after: dict) -> dict:
@@ -48,11 +50,12 @@ def profile(spark, names: list[str], sf_dir: str, repeat: int = 1) -> dict:
             group = f"profile-{name}-{r}"
             sc.setJobGroup(group, name)
             cache0, decode0 = session_cache.stats(), decode_cache_stats()
-            t0 = time.time()
-            df = QUERIES[name].fn(spark, sf_dir)
-            t_plan = time.time() - t0
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
+            with py4j_calls(spark) as calls:
+                t0 = time.time()
+                df = QUERIES[name].fn(spark, sf_dir)
+                t_plan = time.time() - t0
+                df.write.format("noop").mode("overwrite").save()
+                dt = time.time() - t0
             cache = _delta(cache0, session_cache.stats())
             decode = _delta(decode0, decode_cache_stats())
             sc.setJobGroup("idle", "idle")
@@ -67,6 +70,7 @@ def profile(spark, names: list[str], sf_dir: str, repeat: int = 1) -> dict:
                 "fn_sec": round(t_plan, 3),
                 "jobs": len(jobs),
                 "stages": n_stages,
+                "py4j": calls[0],
                 "cache": cache,
                 "decode": decode,
             }
@@ -77,6 +81,7 @@ def profile(spark, names: list[str], sf_dir: str, repeat: int = 1) -> dict:
         print(
             f"{best['sec']:8.3f}s  fn={best['fn_sec']:7.3f}s  "
             f"jobs={best['jobs']:4d}  stages={best['stages']:4d}  "
+            f"py4j={best['py4j']:6d}  "
             f"cache={c['hits']}h/{c['misses']}m  "
             f"decode={d['hits']}h/{d['misses']}m  {name}",
             flush=True,
