@@ -247,9 +247,7 @@ class DynamoDbCatalog:
         ns, tbl = self._split(table.identifier)
         cur = self._get_table_item(table.identifier)
         expected = self._pointer(cur, table.identifier)
-        base, new_md, new_path = apply_table_commit(
-            expected, table, requirements, updates
-        )
+        new_md, new_path = apply_table_commit(expected, requirements, updates)
         params = self._props_of(cur)
         params[_PARAM_PREV_METADATA] = expected
         params[_PARAM_METADATA] = new_path

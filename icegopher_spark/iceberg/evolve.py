@@ -11,9 +11,6 @@ keep reading correctly.
 
 from __future__ import annotations
 
-import time
-
-from .metadata import parse_metadata
 from .schema import Schema
 from .table import Table
 from .types import (
@@ -200,17 +197,10 @@ class UpdateSchema:
                 if any(f.field_id == i for f in self._fields)
             ),
         )
-        raw = md.to_json_dict()
-        raw["schemas"] = raw["schemas"] + [new_schema.to_json_dict()]
-        raw["current-schema-id"] = new_schema_id
-        raw["last-column-id"] = max(self._next_id, md.last_column_id)
-        raw["last-updated-ms"] = int(time.time() * 1000)
-        new_md = parse_metadata(raw)
         from .write import commit_metadata_update
 
         return commit_metadata_update(
             self.table,
-            new_md,
             [
                 {
                     "action": "add-schema",
@@ -299,17 +289,10 @@ class UpdateSpec:
         md = self.table.metadata
         new_spec_id = max(s.spec_id for s in md.partition_specs) + 1
         new_spec = PartitionSpec(self._fields, spec_id=new_spec_id)
-        raw = md.to_json_dict()
-        raw["partition-specs"] = raw["partition-specs"] + [new_spec.to_json_dict()]
-        raw["default-spec-id"] = new_spec_id
-        raw["last-partition-id"] = max(self._last_pid, md.last_partition_id)
-        raw["last-updated-ms"] = int(time.time() * 1000)
-        new_md = parse_metadata(raw)
         from .write import commit_metadata_update
 
         return commit_metadata_update(
             self.table,
-            new_md,
             [
                 {
                     "action": "add-spec",
@@ -345,18 +328,10 @@ def upgrade_format_version(table: Table, new_version: int) -> Table:
         return table
     if new_version not in (2, 3):
         raise ValueError(f"unsupported target format version: {new_version}")
-    raw = md.to_json_dict()
-    raw["format-version"] = new_version
-    if new_version >= 3 and "next-row-id" not in raw:
-        raw["next-row-id"] = 0
-    raw["last-updated-ms"] = int(time.time() * 1000)
-    new_md = parse_metadata(raw)
     from .write import commit_metadata_update
 
     return commit_metadata_update(
-        table,
-        new_md,
-        [{"action": "upgrade-format-version", "format-version": new_version}],
+        table, [{"action": "upgrade-format-version", "format-version": new_version}]
     )
 
 
@@ -420,18 +395,14 @@ def replace_sort_order(table: Table, *fields) -> Table:
         next_id = max((o.order_id for o in md.sort_orders), default=0) + 1
         order = SortOrder(order_id=next_id if new_fields else 0, fields=new_fields)
 
-    raw = md.to_json_dict()
     updates = []
     if existing is None:
         # also covers UNSORTED on a table created straight to a custom
         # order (order 0 never written): default-sort-order-id must
         # resolve inside sort-orders — spec-strict readers reject a
         # dangling id (r7 review)
-        raw["sort-orders"] = raw.get("sort-orders", []) + [order.to_json_dict()]
         updates.append({"action": "add-sort-order", "sort-order": order.to_json_dict()})
-    raw["default-sort-order-id"] = order.order_id
-    raw["last-updated-ms"] = int(time.time() * 1000)
     updates.append({"action": "set-default-sort-order", "sort-order-id": order.order_id})
     from .write import commit_metadata_update
 
-    return commit_metadata_update(table, parse_metadata(raw), updates)
+    return commit_metadata_update(table, updates)

@@ -28,8 +28,6 @@ same way hivecatalog.py closed CatalogHive.
 
 from __future__ import annotations
 
-import time
-
 from .catalog import (
     CatalogError,
     NamespaceAlreadyExistsError,
@@ -211,9 +209,7 @@ class GlueCatalog:
         cur = self._get_table(table.identifier)
         expected = self._pointer(cur, table.identifier)
         version_id = cur.get("VersionId")
-        base, new_md, new_path = apply_table_commit(
-            expected, table, requirements, updates
-        )
+        new_md, new_path = apply_table_commit(expected, requirements, updates)
         params = dict(cur.get("Parameters") or {})
         params[_PARAM_PREV_METADATA] = expected
         params[_PARAM_METADATA] = new_path

@@ -23,8 +23,10 @@ Closes the reference's CatalogHive enum member
 hive) the same way sqlcatalog.py closed CatalogSQL: the reference
 declared the type and panicked on construction.
 
-The commit handler reuses apply_table_commit (sqlcatalog.py), so the
-write path (write.py::_commit_snapshot) is catalog-agnostic across
+The commit handler reuses sqlcatalog.py::apply_table_commit, which
+applies the update list with metadata.apply_updates (the function
+filesystem commits use too), so every metadata change
+(write.py::commit_metadata_update) is catalog-agnostic across
 REST / SQL / Hive / static.
 """
 
@@ -251,9 +253,7 @@ class HiveCatalog:
         db, tbl = self._split(table.identifier)
         cur = self._get_table(table.identifier)
         expected = self._pointer(cur, table.identifier)
-        base, new_md, new_path = apply_table_commit(
-            expected, table, requirements, updates
-        )
+        new_md, new_path = apply_table_commit(expected, requirements, updates)
         new = dict(cur)
         params = dict(cur.get("parameters") or {})
         params[_PARAM_PREV_METADATA] = expected

@@ -16,10 +16,11 @@ Scale posture:
     manifest entries, never touching data.
   * expiration computes reachability over metadata only (manifest
     lists + manifests), then deletes unreachable files; no data reads.
-  * all operations commit through the same optimistic-versioned
-    metadata commit as writes (write.py::_commit_metadata), so a
-    concurrent append raises CommitFailedError and can be retried
-    after refresh().
+  * all operations commit through the same metadata commit as writes
+    (write.py::commit_metadata_update: one list of Iceberg update
+    actions, applied by metadata.apply_updates or sent to the table's
+    catalog), so a concurrent append raises CommitFailedError and can
+    be retried after refresh().
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from .manifests import (
     fetch_entries,
     read_manifest_list,
 )
-from .metadata import OP_REPLACE, parse_metadata
+from .metadata import OP_REPLACE
 from .table import (
     FileScanTask,
     Table,
@@ -49,7 +50,6 @@ from .table import (
 )
 from .types import to_spark_type
 from .write import (
-    _commit_metadata,
     _commit_snapshot,
     collect_data_files,
 )
@@ -333,34 +333,22 @@ def expire_snapshots(
         doomed.extend(s.manifest_list for s in expired)
 
     expired_ids = {s.snapshot_id for s in expired}
-    raw = md.to_json_dict()
-    raw["snapshots"] = [
-        s for s in raw.get("snapshots", []) if s.get("snapshot-id") not in expired_ids
-    ]
-    raw["snapshot-log"] = [
-        e for e in raw.get("snapshot-log", []) if e.get("snapshot-id") not in expired_ids
-    ]
     # statistics registrations are keyed to a snapshot: drop the ones
     # whose snapshot expired (spec behavior) and delete their files
     # with the same commit-then-clean ordering as everything else
-    dropped_stats: dict[str, list[int]] = {}
-    for key in ("statistics", "partition-statistics"):
-        kept_entries = []
-        for e in raw.get(key, []):
-            if e.get("snapshot-id") in expired_ids:
-                dropped_stats.setdefault(key, []).append(e.get("snapshot-id"))
-                if delete_files and e.get("statistics-path"):
-                    doomed.append(e["statistics-path"])
-            else:
-                kept_entries.append(e)
-        if kept_entries:
-            raw[key] = kept_entries
-        else:
-            raw.pop(key, None)
-    raw["refs"] = {name: r.to_json_dict() for name, r in surviving_refs.items()}
+    dropped_stats = [
+        (key, e)
+        for key, entries in (
+            ("statistics", md.statistics),
+            ("partition-statistics", md.partition_statistics),
+        )
+        for e in entries
+        if e.get("snapshot-id") in expired_ids
+    ]
+    if delete_files:
+        doomed.extend(e["statistics-path"] for _, e in dropped_stats)
     # a kept snapshot whose parent was expired keeps the dangling
     # parent-snapshot-id, matching Iceberg (history() just stops there)
-    new_md = parse_metadata(raw)
     from .refs import _ref_update
     from .write import commit_metadata_update
 
@@ -375,13 +363,10 @@ def expire_snapshots(
         for name, r in surviving_refs.items()
         if md.refs.get(name) != r
     ] + [
-        # catalog-routed commits replay granular actions, not our raw
-        # dict: the stats registrations must be dropped explicitly
-        {"action": f"remove-{key}", "snapshot-id": sid}
-        for key, sids in dropped_stats.items()
-        for sid in sids
+        {"action": f"remove-{key}", "snapshot-id": e["snapshot-id"]}
+        for key, e in dropped_stats
     ]
-    table = commit_metadata_update(table, new_md, updates)
+    table = commit_metadata_update(table, updates)
     for path in doomed:
         _safe_remove(table, path)
     return table
@@ -1054,20 +1039,6 @@ def compute_table_stats(
         - (4 + sum(len(b) for b, _ in blobs)),
         "blob-metadata": metas,
     }
-    md = table.metadata
-    raw = md.to_json_dict()
-    kept = [
-        s
-        for s in md.statistics
-        if s.get("snapshot-id") != snap.snapshot_id
-    ]
-    raw["statistics"] = kept + [stats_file]
-    import time as _time
-
-    raw["last-updated-ms"] = int(_time.time() * 1000)
-    from .metadata import parse_metadata as _parse
-
-    new_md = _parse(raw)
     updates = [
         {
             "action": "set-statistics",
@@ -1075,7 +1046,7 @@ def compute_table_stats(
             "statistics": stats_file,
         }
     ]
-    return commit_metadata_update(table, new_md, updates)
+    return commit_metadata_update(table, updates)
 
 
 def table_ndv(table: Table) -> dict[str, int]:

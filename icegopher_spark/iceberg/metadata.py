@@ -1,5 +1,6 @@
 """Table metadata: V1/V2 JSON parse, validation, serialization;
-snapshots, refs (branches/tags), sort orders, snapshot log.
+snapshots, refs (branches/tags), sort orders, snapshot log; and
+apply_updates, the one place a commit changes metadata.
 
 Reference semantics: table/metadata.go (interface 31-50, parse dispatch
 70-89, preValidate 183-210/284-311, validate 212-273), table/
@@ -11,11 +12,12 @@ Python dataclasses.
 from __future__ import annotations
 
 import json
+import time
 from dataclasses import dataclass, field as dfield
 from typing import Any
 
 from .schema import Schema
-from .transforms import PartitionSpec, parse_transform
+from .transforms import PartitionSpec
 
 MAIN_BRANCH = "main"
 
@@ -76,6 +78,9 @@ class Snapshot:
     # (Iceberg spec v3 snapshot field `first-row-id`); None on v1/v2
     # tables and on snapshots committed before the upgrade.
     first_row_id: int | None = None
+    # V3: the row ids this snapshot assigned (spec `added-rows`), so a
+    # commit advances next-row-id to first_row_id + added_rows
+    added_rows: int | None = None
 
     @property
     def operation(self) -> str | None:
@@ -92,6 +97,7 @@ class Snapshot:
             parent_snapshot_id=obj.get("parent-snapshot-id"),
             schema_id=obj.get("schema-id"),
             first_row_id=obj.get("first-row-id"),
+            added_rows=obj.get("added-rows"),
         )
 
     def to_json_dict(self) -> dict:
@@ -108,6 +114,8 @@ class Snapshot:
             out["schema-id"] = self.schema_id
         if self.first_row_id is not None:
             out["first-row-id"] = self.first_row_id
+        if self.added_rows is not None:
+            out["added-rows"] = self.added_rows
         return out
 
 
@@ -368,3 +376,121 @@ def parse_metadata(data: bytes | str | dict) -> TableMetadata:
     if isinstance(data, (bytes, str)):
         data = json.loads(data)
     return TableMetadata(data)
+
+
+class CommitFailedError(Exception):
+    """Optimistic-concurrency conflict (reference rest.go:51-52)."""
+
+
+def apply_updates(
+    md: TableMetadata, requirements: list[dict], updates: list[dict]
+) -> TableMetadata:
+    """Apply one commit, given as the Iceberg REST UpdateTableRequest's
+    requirements and update actions, to ``md``; return the new
+    metadata. Every metadata change goes through here: a filesystem
+    table applies the list to its loaded metadata, a pointer-swap
+    catalog (SQL, Hive, Glue, DynamoDB) to the metadata its pointer
+    names. A failed requirement, or an added snapshot whose id or
+    sequence number is already taken (a stale writer), raises
+    CommitFailedError. ``last-updated-ms`` is the added snapshot's
+    timestamp, else now."""
+    for req in requirements:
+        kind = req.get("type")
+        if kind == "assert-table-uuid":
+            have, want = md.table_uuid, req["uuid"]
+        elif kind == "assert-ref-snapshot-id":
+            ref = md.refs.get(req["ref"])
+            have, want = ref.snapshot_id if ref else None, req.get("snapshot-id")
+        else:
+            raise ValueError(f"unsupported requirement {kind!r}")
+        if have != want:
+            raise CommitFailedError(f"{kind} failed: expected {want}, found {have}")
+
+    raw = md.to_json_dict()
+    added = [u["snapshot"] for u in updates if u.get("action") == "add-snapshot"]
+    now = raw["last-updated-ms"] = (
+        added[-1]["timestamp-ms"] if added else int(time.time() * 1000)
+    )
+    for upd in updates:
+        action = upd.get("action")
+        if action == "add-snapshot":
+            snap = upd["snapshot"]
+            if any(
+                s["snapshot-id"] == snap["snapshot-id"] for s in raw["snapshots"]
+            ) or snap["sequence-number"] <= raw.get("last-sequence-number", 0):
+                raise CommitFailedError(
+                    "snapshot id/sequence collision with a concurrent "
+                    "commit; refresh and retry"
+                )
+            raw["snapshots"].append(snap)
+            raw["last-sequence-number"] = snap["sequence-number"]
+            if snap.get("first-row-id") is not None:
+                raw["next-row-id"] = snap["first-row-id"] + snap.get("added-rows", 0)
+        elif action == "set-snapshot-ref":
+            name = upd["ref-name"]
+            raw["refs"][name] = {
+                k: v for k, v in upd.items() if k not in ("action", "ref-name")
+            }
+            if name == MAIN_BRANCH:
+                raw["current-snapshot-id"] = upd["snapshot-id"]
+                # snapshot-log tracks the main lineage only: a staged
+                # branch commit is not what the table was at that time
+                raw["snapshot-log"] = raw["snapshot-log"] + [
+                    {"snapshot-id": upd["snapshot-id"], "timestamp-ms": now}
+                ]
+        elif action == "remove-snapshot-ref":
+            raw["refs"].pop(upd["ref-name"], None)
+        elif action == "remove-snapshots":
+            gone = set(upd["snapshot-ids"])
+            for key in ("snapshots", "snapshot-log"):
+                raw[key] = [e for e in raw[key] if e["snapshot-id"] not in gone]
+        elif action == "add-schema":
+            raw["schemas"].append(upd["schema"])
+            raw["last-column-id"] = max(
+                raw["last-column-id"], upd.get("last-column-id", 0)
+            )
+        elif action == "set-current-schema":
+            raw["current-schema-id"] = upd["schema-id"]
+        elif action == "add-spec":
+            raw["partition-specs"].append(upd["spec"])
+            raw["last-partition-id"] = max(
+                raw["last-partition-id"], upd.get("last-partition-id", 0)
+            )
+        elif action == "set-default-spec":
+            raw["default-spec-id"] = upd["spec-id"]
+        elif action == "add-sort-order":
+            raw["sort-orders"].append(upd["sort-order"])
+        elif action == "set-default-sort-order":
+            raw["default-sort-order-id"] = upd["sort-order-id"]
+        elif action == "upgrade-format-version":
+            if upd["format-version"] < raw["format-version"]:
+                raise ValueError(
+                    f"cannot downgrade format version {raw['format-version']}"
+                    f" -> {upd['format-version']}"
+                )
+            raw["format-version"] = upd["format-version"]
+            if raw["format-version"] >= 3:
+                raw.setdefault("next-row-id", 0)
+        elif action == "set-properties":
+            raw["properties"] = {**raw["properties"], **upd["updates"]}
+        elif action == "remove-properties":
+            raw["properties"] = {
+                k: v for k, v in raw["properties"].items() if k not in upd["removals"]
+            }
+        elif action in ("set-statistics", "set-partition-statistics"):
+            key = action[len("set-"):]
+            entry = upd.get(key)
+            if not entry or entry.get("snapshot-id") is None:
+                # a junk entry would be persisted forever
+                raise ValueError(f"{action} requires an entry with a snapshot-id")
+            raw[key] = [
+                e for e in raw.get(key, []) if e["snapshot-id"] != entry["snapshot-id"]
+            ] + [entry]
+        elif action in ("remove-statistics", "remove-partition-statistics"):
+            key = action[len("remove-"):]
+            raw[key] = [
+                e for e in raw.get(key, []) if e["snapshot-id"] != upd["snapshot-id"]
+            ]
+        else:
+            raise ValueError(f"unsupported update action {action!r}")
+    return parse_metadata(raw)

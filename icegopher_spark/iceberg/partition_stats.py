@@ -27,7 +27,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .manifests import DataFileContent, ManifestContent, fetch_entries, read_manifest_list
+from .manifests import DataFileContent, fetch_entries, read_manifest_list
 from .table import Table, strip_file_scheme
 
 
@@ -199,17 +199,8 @@ def compute_partition_stats(table: Table, snapshot_id: int | None = None) -> Tab
         "statistics-path": path,
         "file-size-in-bytes": len(data),
     }
-    from .metadata import parse_metadata
-
-    raw = md.to_json_dict()
-    raw["partition-statistics"] = [
-        e for e in md.partition_statistics if e.get("snapshot-id") != snap.snapshot_id
-    ] + [entry]
-    new_md = parse_metadata(raw)
     return commit_metadata_update(
-        table,
-        new_md,
-        [{"action": "set-partition-statistics", "partition-statistics": entry}],
+        table, [{"action": "set-partition-statistics", "partition-statistics": entry}]
     )
 
 

@@ -13,9 +13,9 @@ expiration.
 
 from __future__ import annotations
 
-import time
+from dataclasses import replace
 
-from .metadata import MAIN_BRANCH, Snapshot, SnapshotRef, TableMetadata, parse_metadata
+from .metadata import MAIN_BRANCH, Snapshot, SnapshotRef, TableMetadata
 from .table import Table
 
 
@@ -39,10 +39,6 @@ def _commit_refs(table: Table, refs: dict[str, SnapshotRef]) -> Table:
     from .write import commit_metadata_update
 
     md = table.metadata
-    raw = md.to_json_dict()
-    raw["refs"] = {name: r.to_json_dict() for name, r in refs.items()}
-    raw["last-updated-ms"] = int(time.time() * 1000)
-    new_md = parse_metadata(raw)
     updates = [
         _ref_update(name, r)
         for name, r in refs.items()
@@ -52,7 +48,7 @@ def _commit_refs(table: Table, refs: dict[str, SnapshotRef]) -> Table:
         for name in md.refs
         if name not in refs
     ]
-    return commit_metadata_update(table, new_md, updates)
+    return commit_metadata_update(table, updates)
 
 
 def _resolve_snapshot(table: Table, snapshot_id: int | None) -> int:
@@ -124,14 +120,7 @@ def replace_ref(table: Table, name: str, snapshot_id: int) -> Table:
     refs = dict(table.metadata.refs)
     if name not in refs:
         raise ValueError(f"ref {name!r} not found")
-    old = refs[name]
-    refs[name] = SnapshotRef(
-        _resolve_snapshot(table, snapshot_id),
-        old.snapshot_ref_type,
-        min_snapshots_to_keep=old.min_snapshots_to_keep,
-        max_snapshot_age_ms=old.max_snapshot_age_ms,
-        max_ref_age_ms=old.max_ref_age_ms,
-    )
+    refs[name] = replace(refs[name], snapshot_id=_resolve_snapshot(table, snapshot_id))
     return _commit_refs(table, refs)
 
 
@@ -195,30 +184,12 @@ def rollback_to(table: Table, snapshot_id: int) -> Table:
     reachable through the snapshot list until expiration — rollback is
     itself reversible. Metadata-only: one version-file CAS."""
     target = _resolve_snapshot(table, snapshot_id)
-    if table.metadata.snapshot_by_id(target) is None:
-        raise ValueError(f"unknown snapshot {target}")
-    md = table.metadata
-    raw = md.to_json_dict()
-    refs = dict(md.refs)
-    old = refs.get("main")
-    refs["main"] = SnapshotRef(
-        target,
-        "branch",
-        min_snapshots_to_keep=old.min_snapshots_to_keep if old else None,
-        max_snapshot_age_ms=old.max_snapshot_age_ms if old else None,
-        # main never age-expires, but dropping the property on rollback
-        # would silently rewrite user-set metadata (r9 review)
-        max_ref_age_ms=old.max_ref_age_ms if old else None,
-    )
-    raw["refs"] = {name: r.to_json_dict() for name, r in refs.items()}
-    raw["current-snapshot-id"] = target
-    raw["last-updated-ms"] = int(time.time() * 1000)
-    raw.setdefault("snapshot-log", []).append(
-        {"snapshot-id": target, "timestamp-ms": raw["last-updated-ms"]}
-    )
-    new_md = parse_metadata(raw)
     from .write import commit_metadata_update
 
-    return commit_metadata_update(
-        table, new_md, [_ref_update("main", refs["main"])]
+    old = table.metadata.refs.get("main")
+    # keep main's retention settings: main never age-expires, but
+    # dropping them on rollback would rewrite user-set metadata (r9)
+    main = (
+        replace(old, snapshot_id=target) if old else SnapshotRef(target, "branch")
     )
+    return commit_metadata_update(table, [_ref_update("main", main)])

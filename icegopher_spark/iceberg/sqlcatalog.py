@@ -22,11 +22,13 @@ implemented REST, rest.go; this closes the 'sql' member of its
 CatalogType enum, table/catalog/catalog.go:16-24).
 
 The commit handler speaks the same (requirements, updates) protocol as
-the REST catalog so the write path (write.py::_commit_snapshot) is
-catalog-agnostic: requirements are verified against the LATEST
-metadata read from the DB row (not the writer's possibly-stale view),
-updates are applied, the new metadata JSON is written to the
-warehouse, and the pointer CAS-swaps.
+the REST catalog, so every metadata change (write.py::
+commit_metadata_update) is catalog-agnostic. apply_table_commit, below
+and shared with the Hive, Glue and DynamoDB catalogs, checks the
+requirements against the LATEST metadata read from the DB row (not the
+writer's possibly-stale view), applies the updates with
+metadata.apply_updates (the function filesystem tables use too), writes
+the new metadata JSON to the warehouse, and the pointer CAS-swaps.
 
 Scale posture: the catalog stores POINTERS only — metadata JSON, Avro
 manifests and parquet all live in the warehouse (object store at
@@ -37,7 +39,6 @@ to 100 TB+ tables.
 
 from __future__ import annotations
 
-import json
 import os
 import sqlite3
 import uuid
@@ -50,185 +51,29 @@ from .catalog import (
     NoSuchTableError,
     to_identifier,
 )
-from .metadata import SnapshotRef, parse_metadata
+from .metadata import TableMetadata, apply_updates
 from .table import Table
 
 _EXISTS_KEY = "exists"  # marker row so empty namespaces persist (JDBC catalog convention)
 
 
 def apply_table_commit(
-    expected: str, table: Table, requirements: list[dict], updates: list[dict]
-) -> tuple[Table, object, str]:
-    """Shared (requirements, updates) commit application for
-    pointer-swap catalogs (SQL, Hive): verify every requirement against
-    the CURRENT metadata read from ``expected`` (not the writer's
-    possibly-stale view), apply the update actions, write the new
-    metadata JSON next to the table, and return (base_table,
-    new_metadata, new_metadata_path). The caller performs its own
-    atomic pointer compare-and-swap and raises CommitFailedError when
-    the swap loses."""
-    from .write import CommitFailedError
-
+    expected: str, requirements: list[dict], updates: list[dict]
+) -> tuple[TableMetadata, str]:
+    """One commit for the pointer-swap catalogs (SQL, Hive, Glue,
+    DynamoDB): read the metadata the pointer ``expected`` names (not
+    the writer's possibly-stale view), apply the requirements and
+    updates to it (metadata.apply_updates) and write the result next to
+    the table. Returns (new_metadata, new_metadata_path); the caller
+    swaps its pointer and raises CommitFailedError when the swap
+    loses."""
     base = Table.from_location(expected)
-    md = base.metadata
-
-    for req in requirements:
-        kind = req.get("type")
-        if kind == "assert-table-uuid":
-            if md.table_uuid != req["uuid"]:
-                raise CommitFailedError("table UUID changed")
-        elif kind == "assert-ref-snapshot-id":
-            ref = md.refs.get(req.get("ref", "main"))
-            have = ref.snapshot_id if ref is not None else None
-            if have != req.get("snapshot-id"):
-                raise CommitFailedError(
-                    f"ref {req.get('ref')!r} moved: expected"
-                    f" {req.get('snapshot-id')}, found {have}"
-                )
-        else:
-            raise CatalogError(f"unsupported requirement {kind!r}")
-
-    raw = md.to_json_dict()
-    for upd in updates:
-        action = upd.get("action")
-        if action == "add-snapshot":
-            snap = upd["snapshot"]
-            # snap ids/seqs were computed from the WRITER's possibly
-            # stale metadata; the ref requirement only proves the
-            # target branch didn't move. A commit to branch B after
-            # someone committed to main would re-use main's new id —
-            # snapshot_by_id would then resolve B to main's snapshot
-            # (r6 review). Collision = stale writer: CAS-fail it.
-            have_ids = {
-                sn.get("snapshot-id") for sn in raw.get("snapshots", [])
-            }
-            if snap["snapshot-id"] in have_ids or snap.get(
-                "sequence-number", 0
-            ) <= raw.get("last-sequence-number", 0):
-                raise CommitFailedError(
-                    "snapshot id/sequence collision with a concurrent "
-                    "commit; refresh and retry"
-                )
-            raw["snapshots"] = raw.get("snapshots", []) + [snap]
-            raw["last-sequence-number"] = max(
-                raw.get("last-sequence-number", 0), snap.get("sequence-number", 0)
-            )
-            raw["last-updated-ms"] = snap.get("timestamp-ms", raw.get("last-updated-ms"))
-        elif action == "set-snapshot-ref":
-            refs = dict(raw.get("refs", {}))
-            refs[upd["ref-name"]] = SnapshotRef(
-                upd["snapshot-id"],
-                upd.get("type", "branch"),
-                min_snapshots_to_keep=upd.get("min-snapshots-to-keep"),
-                max_snapshot_age_ms=upd.get("max-snapshot-age-ms"),
-                max_ref_age_ms=upd.get("max-ref-age-ms"),
-            ).to_json_dict()
-            raw["refs"] = refs
-            if upd["ref-name"] == "main":
-                raw["current-snapshot-id"] = upd["snapshot-id"]
-                # ref-ONLY commits (rollback / fast-forward send no
-                # add-snapshot) must stamp NOW: reusing the stale
-                # last-updated-ms backdates the snapshot-log entry
-                # and as-of time travel between the prior commit
-                # and the rollback resolves to the rollback target
-                # instead of what was current then (r6 review)
-                if not any(
-                    u.get("action") == "add-snapshot" for u in updates
-                ):
-                    import time as _time
-
-                    raw["last-updated-ms"] = int(_time.time() * 1000)
-                # snapshot-log tracks the MAIN lineage only (same
-                # rule as the local commit path, write.py): logging
-                # branch-staged snapshots here polluted as-of time
-                # travel and history() with unpublished commits (r6)
-                raw.setdefault("snapshot-log", []).append(
-                    {
-                        "snapshot-id": upd["snapshot-id"],
-                        "timestamp-ms": raw.get("last-updated-ms", 0),
-                    }
-                )
-        elif action == "remove-snapshot-ref":
-            refs = dict(raw.get("refs", {}))
-            refs.pop(upd["ref-name"], None)
-            raw["refs"] = refs
-        elif action == "remove-snapshots":
-            gone = set(upd.get("snapshot-ids", []))
-            raw["snapshots"] = [
-                sn
-                for sn in raw.get("snapshots", [])
-                if sn.get("snapshot-id") not in gone
-            ]
-            raw["snapshot-log"] = [
-                e
-                for e in raw.get("snapshot-log", [])
-                if e.get("snapshot-id") not in gone
-            ]
-        elif action == "add-schema":
-            raw["schemas"] = raw.get("schemas", []) + [upd["schema"]]
-            if "last-column-id" in upd:
-                raw["last-column-id"] = max(
-                    raw.get("last-column-id", 0), upd["last-column-id"]
-                )
-        elif action == "set-current-schema":
-            raw["current-schema-id"] = upd["schema-id"]
-        elif action == "add-spec":
-            raw["partition-specs"] = raw.get("partition-specs", []) + [upd["spec"]]
-            if "last-partition-id" in upd:
-                raw["last-partition-id"] = max(
-                    raw.get("last-partition-id", 0), upd["last-partition-id"]
-                )
-        elif action == "set-default-spec":
-            raw["default-spec-id"] = upd["spec-id"]
-        elif action == "set-properties":
-            raw["properties"] = {**raw.get("properties", {}), **upd["updates"]}
-        elif action == "remove-properties":
-            props = dict(raw.get("properties", {}))
-            for k in upd.get("removals", []):
-                props.pop(k, None)
-            raw["properties"] = props
-        elif action == "set-partition-statistics":
-            entry = upd["partition-statistics"]
-            raw["partition-statistics"] = [
-                e
-                for e in raw.get("partition-statistics", [])
-                if e.get("snapshot-id") != entry.get("snapshot-id")
-            ] + [entry]
-        elif action == "remove-partition-statistics":
-            raw["partition-statistics"] = [
-                e
-                for e in raw.get("partition-statistics", [])
-                if e.get("snapshot-id") != upd.get("snapshot-id")
-            ]
-        elif action == "set-statistics":
-            entry = upd.get("statistics") or upd.get("statistics-file")
-            if not entry or entry.get("snapshot-id") is None:
-                # a snapshot-id-only (deprecated) or empty payload
-                # would persist a junk {} entry forever — reject
-                raise CatalogError(
-                    "set-statistics requires a statistics file entry "
-                    "with a snapshot-id"
-                )
-            raw["statistics"] = [
-                e
-                for e in raw.get("statistics", [])
-                if e.get("snapshot-id") != entry.get("snapshot-id")
-            ] + [entry]
-        elif action == "remove-statistics":
-            raw["statistics"] = [
-                e
-                for e in raw.get("statistics", [])
-                if e.get("snapshot-id") != upd.get("snapshot-id")
-            ]
-        else:
-            raise CatalogError(f"unsupported update action {action!r}")
-    new_md = parse_metadata(raw)
-
-    loc = md.location or os.path.dirname(os.path.dirname(expected))
+    new_md = apply_updates(base.metadata, requirements, updates)
+    loc = new_md.location or os.path.dirname(os.path.dirname(expected))
     version = _parse_version(expected) + 1
     new_path = f"{loc}/metadata/{version:05d}-{uuid.uuid4().hex[:12]}.metadata.json"
-    base.io.write(_local(new_path), json.dumps(new_md.to_json_dict()).encode())
-    return base, new_md, new_path
+    base.io.write(_local(new_path), new_md.to_json().encode())
+    return new_md, new_path
 
 
 class SqlCatalog:
@@ -401,9 +246,7 @@ class SqlCatalog:
         from .write import CommitFailedError
 
         expected = self._pointer(table.identifier)
-        base, new_md, new_path = apply_table_commit(
-            expected, table, requirements, updates
-        )
+        new_md, new_path = apply_table_commit(expected, requirements, updates)
 
         ns, tbl = self._split(table.identifier)
         cur = self._db.execute(

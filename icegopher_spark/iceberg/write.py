@@ -12,6 +12,7 @@ driver-side metadata.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 import uuid as _uuid
@@ -40,11 +41,14 @@ from .metadata import (
     OP_APPEND,
     OP_DELETE,
     OP_OVERWRITE,
+    CommitFailedError,
     Snapshot,
     SnapshotRef,
     TableMetadata,
+    apply_updates,
     parse_metadata,
 )
+from .refs import _ref_update
 from .schema import Schema
 from .table import Table, read_tasks, strip_file_scheme_col
 from .transforms import PartitionSpec
@@ -62,10 +66,6 @@ from .types import (
     TimestampType,
     TimestampTzType,
 )
-
-
-class CommitFailedError(Exception):
-    """Optimistic-concurrency conflict (reference rest.go:51-52)."""
 
 
 def create_table(
@@ -170,21 +170,21 @@ def commit_with_retry(table: Table, fn, attempts: int = 3) -> Table:
     raise AssertionError("unreachable")
 
 
-def commit_metadata_update(table, new_md, updates, requirements=None):
-    """Route a prepared metadata replacement through the table's catalog
-    (granular update actions; the pointer swap is the CATALOG's) when
-    one owns the pointer, else CAS the filesystem version chain with
-    ``new_md``. Before this, refs/evolve/expire commits always took the
-    version-hint path, so on SQL/REST-catalog tables the change was
-    written to storage but the catalog pointer never moved — the next
-    load_table() silently lost it (r6 review)."""
+def commit_metadata_update(table, updates, requirements=None):
+    """Commit one metadata change, given as Iceberg update actions (the
+    REST UpdateTableRequest; ``requirements`` default to the table's
+    uuid). A catalog that owns the pointer gets the list and does the
+    swap; a filesystem table applies it to its loaded metadata
+    (metadata.apply_updates) and CASes the next version file, whose
+    create-exclusive write detects a concurrent committer."""
+    reqs = requirements or [
+        {"type": "assert-table-uuid", "uuid": table.metadata.table_uuid}
+    ]
     cat = getattr(table, "catalog", None)
     if cat is not None and hasattr(cat, "commit_table"):
-        reqs = requirements or [
-            {"type": "assert-table-uuid", "uuid": table.metadata.table_uuid}
-        ]
         return cat.commit_table(table, reqs, updates)
-    location = table.metadata.location
+    new_md = apply_updates(table.metadata, reqs, updates)
+    location = new_md.location
     version = _loaded_version(table)
     _commit_metadata(table.io, location, new_md, expected_version=version)
     table.metadata = new_md
@@ -1568,12 +1568,8 @@ def _commit_snapshot(
             m.first_row_id = next_row_id
             next_row_id += consumed
 
-    branch_ref = md.refs.get(branch)
-    parent_id = (
-        branch_ref.snapshot_id
-        if branch != "main" and branch_ref is not None
-        else md.current_snapshot_id
-    )
+    # a new branch forks from main's head
+    parent_id = existing_ref.snapshot_id if existing_ref else md.current_snapshot_id
     list_path = f"{location}/metadata/snap-{snap_id}-{_uuid.uuid4().hex}.avro"
     io.write(
         list_path,
@@ -1628,73 +1624,32 @@ def _commit_snapshot(
         },
         schema_id=schema.schema_id,
         first_row_id=snap_first_row_id,
+        added_rows=(
+            next_row_id - snap_first_row_id if snap_first_row_id is not None else None
+        ),
     )
 
-    raw = md.to_json_dict()
-    raw["snapshots"] = raw.get("snapshots", []) + [snapshot.to_json_dict()]
-    raw["last-sequence-number"] = seq
-    raw["last-updated-ms"] = ts_ms
-    if next_row_id is not None:
-        raw["next-row-id"] = next_row_id
-    raw["refs"] = {
-        **{k: v.to_json_dict() for k, v in md.refs.items()},
-        branch: SnapshotRef(snap_id, "branch").to_json_dict(),
-    }
-    if branch == "main":
-        raw["current-snapshot-id"] = snap_id
-        # snapshot-log tracks the CURRENT (main) lineage only
-        raw.setdefault("snapshot-log", []).append(
-            {"snapshot-id": snap_id, "timestamp-ms": ts_ms}
-        )
-    new_md = parse_metadata(raw)
-
-    cat = getattr(table, "catalog", None)
-    if cat is not None and hasattr(cat, "commit_table"):
-        if next_row_id is not None and next_row_id != md.next_row_id:
-            # the UpdateTableRequest actions we send carry the snapshot
-            # (with its first-row-id) but not the advanced next-row-id;
-            # a server that doesn't compute it v3-side would hand the
-            # next commit an overlapping id range. Refuse loudly rather
-            # than corrupt lineage silently.
-            raise NotImplementedError(
-                "row-lineage id assignment through a catalog commit is "
-                "not supported; v3 lineage tables must be "
-                "filesystem-committed"
-            )
-        # REST commit (Iceberg REST spec UpdateTableRequest): the server
-        # enforces the requirement atomically and returns authoritative
-        # metadata; a concurrent writer gets 409 → CommitFailedError
-        # (reference enumerates ErrCommitFailed, rest.go:51-52).
-        requirements = [
-            {"type": "assert-table-uuid", "uuid": md.table_uuid},
-            {
-                "type": "assert-ref-snapshot-id",
-                "ref": branch,
-                # for a branch that doesn't exist yet, assert absence
-                # (snapshot-id null per the REST spec) — sending main's
-                # head (the snapshot PARENT) made the first commit to a
-                # new branch always fail CAS on catalog tables (r6)
-                "snapshot-id": branch_ref.snapshot_id
-                if branch != "main" and branch_ref is not None
-                else (md.current_snapshot_id if branch == "main" else None),
-            },
-        ]
-        updates = [
-            {"action": "add-snapshot", "snapshot": snapshot.to_json_dict()},
-            {
-                "action": "set-snapshot-ref",
-                "ref-name": branch,
-                "type": "branch",
-                "snapshot-id": snap_id,
-            },
-        ]
-        return cat.commit_table(table, requirements, updates)
-
-    version = _loaded_version(table)
-    _commit_metadata(io, location, new_md, expected_version=version)
-    table.metadata = new_md
-    table.metadata_location = _version_path(location, version + 1)
-    return table
+    # a branch keeps its retention settings when its head moves
+    ref = (
+        dataclasses.replace(existing_ref, snapshot_id=snap_id)
+        if existing_ref is not None
+        else SnapshotRef(snap_id, "branch")
+    )
+    # the branch must still be where this writer found it; for a new
+    # branch that is absent (snapshot-id null per the REST spec)
+    requirements = [
+        {"type": "assert-table-uuid", "uuid": md.table_uuid},
+        {
+            "type": "assert-ref-snapshot-id",
+            "ref": branch,
+            "snapshot-id": existing_ref.snapshot_id if existing_ref else None,
+        },
+    ]
+    updates = [
+        {"action": "add-snapshot", "snapshot": snapshot.to_json_dict()},
+        _ref_update(branch, ref),
+    ]
+    return commit_metadata_update(table, updates, requirements)
 
 
 def append(
