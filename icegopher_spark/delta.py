@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from . import session_cache
+from .iceberg.io import load_io
 
 __all__ = [
     "DeltaSnapshot",
@@ -181,20 +182,18 @@ _CP_V2 = re.compile(
 _CP_ANY = re.compile(r"^(\d{20})\.checkpoint\.")
 
 
-def _read_last_checkpoint(table_path: str) -> dict | None:
+def _read_last_checkpoint(io, table_path: str) -> dict | None:
     """Parse `_delta_log/_last_checkpoint` ({version, size, parts?});
     absent or unparsable → None (the protocol calls it a hint — the
     listing below is the authority, but when the hint IS present its
     version/parts are cross-validated against the files found)."""
-    p = os.path.join(_log_dir(table_path), "_last_checkpoint")
     try:
-        with open(p, encoding="utf-8") as f:
-            return json.load(f)
+        return json.loads(io.read(os.path.join(_log_dir(table_path), "_last_checkpoint")))
     except (OSError, ValueError):
         return None
 
 
-def _complete_checkpoints(table_path: str) -> dict[int, list[str]]:
+def _complete_checkpoints(table_path: str, names: list[str]) -> dict[int, list[str]]:
     """version → sorted checkpoint part paths, COMPLETE sets only.
 
     * single-part `<v>.checkpoint.parquet` → that one file;
@@ -209,12 +208,14 @@ def _complete_checkpoints(table_path: str) -> dict[int, list[str]]:
       determinism;
     * any other `<v>.checkpoint.*` name → loud refusal BY NAME, not
       via the protocol row it may carry.
+
+    ``names`` is one listing of the log directory.
     """
     d = _log_dir(table_path)
     singles: dict[int, str] = {}
     multi: dict[int, dict[int, tuple[int, str]]] = {}
     v2: dict[int, list[str]] = {}
-    for fn in os.listdir(d):
+    for fn in names:
         m = _CP_SINGLE.match(fn)
         if m:
             singles[int(m.group(1))] = os.path.join(d, fn)
@@ -245,28 +246,32 @@ def _complete_checkpoints(table_path: str) -> dict[int, list[str]]:
     for v, cands in v2.items():
         if v not in out:
             out[v] = [sorted(cands)[0]]
-    return out
+    return dict(sorted(out.items()))
 
 
-def _list_log(table_path: str) -> tuple[list[int], list[int]]:
-    """(sorted json commit versions, sorted COMPLETE checkpoint
-    versions)."""
-    commits = set()
-    for fn in os.listdir(_log_dir(table_path)):
-        if _is_commit_json(fn):
-            commits.add(_version_of(fn))
-    return sorted(commits), sorted(_complete_checkpoints(table_path))
+def _list_log(io, table_path: str) -> tuple[list[int], dict[int, list[str]]]:
+    """From ONE listing of the log (r10 review #7: re-listing per
+    helper tripled every scan): (sorted json commit versions,
+    {version: part paths} of the COMPLETE checkpoints, in version
+    order)."""
+    names = io.list_dir(_log_dir(table_path))
+    commits = sorted(_version_of(fn) for fn in names if _is_commit_json(fn))
+    return commits, _complete_checkpoints(table_path, names)
 
 
-def _checkpoint_paths(table_path: str, version: int) -> list[str]:
-    """All parquet parts of the checkpoint at `version` (1 or N files),
-    complete sets only."""
-    cps = _complete_checkpoints(table_path)
-    if version not in cps:
-        raise FileNotFoundError(
-            f"checkpoint {version} incomplete or missing in _delta_log"
-        )
-    return cps[version]
+def _commit_actions(
+    io, table_path: str, version: int, name: str | None = None
+) -> list[dict]:
+    """The actions of JSON commit ``<version>.json`` (or of the log file
+    ``name``, e.g. a JSON V2 checkpoint), in file order. Raises
+    FileNotFoundError when the file is absent; each caller words its
+    own missing-commit error."""
+    path = os.path.join(_log_dir(table_path), name or f"{version:020d}.json")
+    return [
+        json.loads(line)
+        for line in io.read(path).decode("utf-8").split("\n")
+        if line.strip()
+    ]
 
 
 def _refuse(feature: str, where: str) -> None:
@@ -396,21 +401,7 @@ def _new_state() -> dict:
     }
 
 
-def _apply_commit_lines(state: dict, commit_path: str) -> None:
-    """Apply ONE commit's actions IN FILE ORDER, with state keyed by
-    (path, dv uniqueId) — matching delta-spark's InMemoryLogReplay
-    exactly: for the SAME (path, dv) key the last action wins, while a
-    DV swap's remove(old dv) and add(new dv) touch different keys and
-    therefore resolve identically in either serialization order."""
-    with open(commit_path, encoding="utf-8") as f:
-        for line in f:
-            if line.strip():
-                _apply_action(state, json.loads(line))
-
-
-def _replay_checkpoint(
-    state: dict, table_path: str, version: int, paths: list[str] | None = None
-) -> None:
+def _replay_checkpoint(state: dict, io, table_path: str, version: int, paths: list[str]) -> None:
     """Seed replay state from a checkpoint (protocol § "Checkpoints" +
     § "V2 Spec"): one row per action.  Classic parquet checkpoints
     carry `add`/`remove`/`metaData`/`protocol` struct columns; V2
@@ -422,17 +413,18 @@ def _replay_checkpoint(
     rows seed the tombstone map WITHOUT touching the file state (a
     checkpoint remove must not cancel a checkpoint add: both describe
     the already-reconciled state at `version`)."""
-    for part in (paths or _checkpoint_paths(table_path, version)):
+    for part in paths:
         if _CP_V2.match(os.path.basename(part)):
-            _replay_v2_checkpoint(state, table_path, version, part)
+            _replay_v2_checkpoint(state, io, table_path, version, part)
         else:
-            _replay_checkpoint_rows(state, _parquet_action_rows(part))
+            _replay_checkpoint_rows(state, _parquet_action_rows(io, part))
 
 
-def _parquet_action_rows(path: str) -> list[dict]:
+def _parquet_action_rows(io, path: str) -> list[dict]:
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    return pq.read_table(path).to_pylist()
+    return pq.read_table(pa.BufferReader(io.read(path))).to_pylist()
 
 
 def _replay_checkpoint_rows(state: dict, rows: list[dict]) -> None:
@@ -453,9 +445,7 @@ def _replay_checkpoint_rows(state: dict, rows: list[dict]) -> None:
             state["tombstones"][(rm["path"], _dv_unique_id(dv))] = rm
 
 
-def _replay_v2_checkpoint(
-    state: dict, table_path: str, version: int, part: str
-) -> None:
+def _replay_v2_checkpoint(state: dict, io, table_path: str, version: int, part: str) -> None:
     """Replay one uuid-named V2 checkpoint file: validate its
     `checkpointMetadata` (the version stamp must match the filename —
     a copied/renamed checkpoint would otherwise seed the wrong state),
@@ -463,10 +453,9 @@ def _replay_v2_checkpoint(
     `_delta_log/_sidecars/` (file actions only, add + remove-as-
     tombstone, same semantics as classic checkpoint rows)."""
     if part.endswith(".json"):
-        with open(part, encoding="utf-8") as f:
-            rows = [json.loads(line) for line in f if line.strip()]
+        rows = _commit_actions(io, table_path, version, os.path.basename(part))
     else:
-        rows = _parquet_action_rows(part)
+        rows = _parquet_action_rows(io, part)
     cms = [
         row["checkpointMetadata"]
         for row in rows
@@ -494,13 +483,14 @@ def _replay_v2_checkpoint(
         sp = sc["path"]
         if not os.path.isabs(sp):
             sp = os.path.join(sidecar_dir, sp)
-        if not os.path.exists(sp):
+        try:
+            _replay_checkpoint_rows(state, _parquet_action_rows(io, sp))
+        except FileNotFoundError:
             raise FileNotFoundError(
                 f"V2 checkpoint {os.path.basename(part)} references sidecar "
                 f"{sc['path']}, missing under _delta_log/_sidecars — "
                 "refusing (partially vacuumed checkpoint?)"
-            )
-        _replay_checkpoint_rows(state, _parquet_action_rows(sp))
+            ) from None
 
 
 def _strip_mapping_metadata(field_json: dict) -> dict:
@@ -554,28 +544,29 @@ def _mapped_schemas(schema_json: dict) -> tuple[dict, dict, bool]:
     return walk(schema_json, False), walk(schema_json, True), renamed
 
 
-def _commit_timestamp(table_path: str, version: int) -> int:
+def _commit_timestamp(
+    io, table_path: str, version: int, actions: list[dict] | None = None
+) -> int:
     """Commit time in ms, in the protocol's precedence order:
     `commitInfo.inCommitTimestamp` when the writer recorded one
     (§ In-Commit Timestamps: the authoritative, monotonic clock —
     file mtimes and wall-clock `timestamp` are explicitly unreliable
     on ICT tables), else `commitInfo.timestamp` (survives file
-    copies), else file mtime (the protocol's stated fallback)."""
-    p = os.path.join(_log_dir(table_path), f"{version:020d}.json")
-    with open(p, encoding="utf-8") as f:
-        for line in f:
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            ci = action.get("commitInfo")
-            if ci and "inCommitTimestamp" in ci:
-                return int(ci["inCommitTimestamp"])
-            if ci and "timestamp" in ci:
-                return int(ci["timestamp"])
-    return int(os.path.getmtime(p) * 1000)
+    copies), else file mtime (the protocol's stated fallback).
+    ``actions`` saves a re-read when the caller already has them."""
+    if actions is None:
+        actions = _commit_actions(io, table_path, version)
+    for action in actions:
+        ci = action.get("commitInfo")
+        if ci and "inCommitTimestamp" in ci:
+            return int(ci["inCommitTimestamp"])
+        if ci and "timestamp" in ci:
+            return int(ci["timestamp"])
+    return io.info(os.path.join(_log_dir(table_path), f"{version:020d}.json")).mtime_ms
 
 
 def _resolve_version(
+    io,
     table_path: str,
     commits: list[int],
     checkpoints: list[int],
@@ -595,7 +586,7 @@ def _resolve_version(
     # semantics as Iceberg's snapshot-as-of and Delta's own resolver)
     best = None
     for v in commits:
-        if _commit_timestamp(table_path, v) <= timestamp_ms:
+        if _commit_timestamp(io, table_path, v) <= timestamp_ms:
             best = v
     if best is None:
         raise ValueError(
@@ -617,24 +608,16 @@ def load_delta(
     checkpoint itself is a columnar parquet read).  No data file is
     opened.
     """
-    log_dir = _log_dir(table_path)
-    if not os.path.isdir(log_dir):
-        raise FileNotFoundError(f"not a Delta table (no _delta_log): {table_path}")
-    # ONE directory listing per load (r10 review #7: _list_log + the
-    # _last_checkpoint cross-check + checkpoint replay each re-listed;
-    # ×N versions in vacuum_candidates that tripled every scan)
-    cp_map = _complete_checkpoints(table_path)
-    commits = sorted(
-        _version_of(fn) for fn in os.listdir(log_dir) if _is_commit_json(fn)
-    )
-    checkpoints = sorted(cp_map)
+    io = load_io(table_path)
+    commits, cp_map = _list_log(io, table_path)
+    checkpoints = list(cp_map)
     if not commits and not checkpoints:
-        raise FileNotFoundError(f"empty _delta_log: {table_path}")
+        raise FileNotFoundError(f"not a Delta table (empty or no _delta_log): {table_path}")
     # _last_checkpoint is a hint, but when present it must be
     # SATISFIABLE: if it names a version whose parquet parts are not
     # all on disk (partial vacuum/copy), seeding from an older
     # checkpoint could silently mask the hole — refuse instead
-    last_cp = _read_last_checkpoint(table_path)
+    last_cp = _read_last_checkpoint(io, table_path)
     if last_cp is not None and "version" in last_cp:
         lv = int(last_cp["version"])
         if lv not in cp_map:
@@ -650,13 +633,13 @@ def load_delta(
                 f"_last_checkpoint says checkpoint {lv} has "
                 f"{want_parts} part(s) but {have_parts} found — refusing"
             )
-    target = _resolve_version(table_path, commits, checkpoints, version, timestamp_ms)
+    target = _resolve_version(io, table_path, commits, checkpoints, version, timestamp_ms)
 
     # newest checkpoint ≤ target seeds the state; JSON replays the rest
     start_cp = max((c for c in checkpoints if c <= target), default=None)
     state = _new_state()
     if start_cp is not None:
-        _replay_checkpoint(state, table_path, start_cp, paths=cp_map[start_cp])
+        _replay_checkpoint(state, io, table_path, start_cp, cp_map[start_cp])
     replay_from = (start_cp + 1) if start_cp is not None else 0
     commit_set = set(commits)
     for v in range(replay_from, target + 1):
@@ -667,7 +650,12 @@ def load_delta(
                 f"commit {v} missing from _delta_log (log has a hole; "
                 f"earliest checkpoint covering it: {start_cp})"
             )
-        _apply_commit_lines(state, os.path.join(log_dir, f"{v:020d}.json"))
+        # IN FILE ORDER, with state keyed by (path, dv uniqueId) — as
+        # delta-spark's InMemoryLogReplay: for the SAME key the last
+        # action wins, while a DV swap's remove(old dv) and add(new dv)
+        # touch different keys and resolve alike in either order
+        for action in _commit_actions(io, table_path, v):
+            _apply_action(state, action)
 
     meta = state["metaData"]
     if meta is None:
@@ -1130,23 +1118,23 @@ def vacuum_candidates(
     is never a candidate — same guard as Iceberg orphan GC).
 
     Returns absolute paths; deletion is the caller's decision.  Driver
-    cost is metadata-scale plus one directory walk — the same contract
-    as `iceberg/maintenance.py::orphan_files`, and like it, the walk
-    would become a distributed listing on an object store.
+    cost is metadata-scale plus one prefix listing — the same contract
+    as `iceberg/maintenance.py::orphan_files`.
     """
     import time as _time
 
     if now_ms is None:
         now_ms = int(_time.time() * 1000)
     cutoff_ms = now_ms - retention_ms
-    commits, checkpoints = _list_log(table_path)
+    io = load_io(table_path)
+    commits, checkpoints = _list_log(io, table_path)
     latest = max([*commits, *checkpoints])
 
     # live set of the current version, plus every version still inside
     # the retention window (their files must survive for time travel)
     protected_versions = {latest}
     for v in commits:
-        if _commit_timestamp(table_path, v) >= cutoff_ms:
+        if _commit_timestamp(io, table_path, v) >= cutoff_ms:
             protected_versions.add(v)
     referenced: set[str] = set()
     for v in sorted(protected_versions):
@@ -1163,31 +1151,21 @@ def vacuum_candidates(
             if d.get("storageType") in ("u", "p"):
                 referenced.add(os.path.abspath(dv_store_path(table_path, d)))
 
-    root = os.path.abspath(table_path)
-    log_root = os.path.abspath(_log_dir(table_path))
+    log_root = os.path.abspath(_log_dir(table_path)) + os.sep
     out: list[str] = []
-    for dirpath, _dirs, files in os.walk(root):
-        if os.path.abspath(dirpath).startswith(log_root):
-            continue  # the transaction log is never vacuumed
-        for fn in files:
-            # data files AND orphaned deletion-vector stores (a DV .bin
-            # becomes unreferenced when a later DV supersedes it or
-            # OPTIMIZE folds it away)
-            if not (
-                fn.endswith(".parquet")
-                or (fn.startswith("deletion_vector_") and fn.endswith(".bin"))
-            ):
-                continue
-            p = os.path.abspath(os.path.join(dirpath, fn))
-            if p in referenced:
-                continue
-            try:
-                if os.path.getmtime(p) * 1000 > cutoff_ms:
-                    continue
-            except OSError:
-                continue
-            out.append(p)
-    return sorted(out)
+    for f in io.list_prefix(os.path.abspath(table_path)):
+        fn = os.path.basename(f.path)
+        # data files AND orphaned deletion-vector stores (a DV .bin
+        # becomes unreferenced when a later DV supersedes it or
+        # OPTIMIZE folds it away); the transaction log is never vacuumed
+        if f.path.startswith(log_root) or not (
+            fn.endswith(".parquet")
+            or (fn.startswith("deletion_vector_") and fn.endswith(".bin"))
+        ):
+            continue
+        if f.path not in referenced and f.mtime_ms <= cutoff_ms:
+            out.append(f.path)
+    return out
 
 
 def vacuum_delta(
@@ -1225,24 +1203,26 @@ def vacuum_delta(
     from .delta_write import _check_writer_protocol
 
     _check_writer_protocol(load_delta(table_path), "vacuum")
-    victims = vacuum_candidates(table_path, retention_ms, now_ms=now_ms)
+    io = load_io(table_path)
     deleted: list[str] = []
-    for p in victims:
+    for p in vacuum_candidates(table_path, retention_ms, now_ms=now_ms):
         try:
-            os.remove(p)
+            io.remove(p)
             deleted.append(p)
         except OSError:
             continue  # raced with another vacuum — already gone
-    # prune now-empty data directories (never the log)
-    log_root = os.path.abspath(_log_dir(table_path))
-    for dirpath, dirs, files in os.walk(os.path.abspath(table_path), topdown=False):
-        if dirpath.startswith(log_root) or dirpath == os.path.abspath(table_path):
-            continue
-        if not dirs and not files:
-            try:
-                os.rmdir(dirpath)
-            except OSError:
-                pass
+    # prune the data directories the deletes emptied, deepest first
+    # (candidates never live under the log)
+    root = os.path.abspath(table_path) + os.sep
+    emptied = set()
+    for p in deleted:
+        d = os.path.dirname(p)
+        while d.startswith(root):
+            emptied.add(d)
+            d = os.path.dirname(d)
+    for d in sorted(emptied, key=len, reverse=True):
+        if not io.list_prefix(d):
+            io.remove_dir(d)
     return deleted
 
 
@@ -1272,13 +1252,13 @@ def _classify_changes(
     replays from the newest checkpoint below the range so removed
     files' partitionValues/DVs are known at removal time.  Shared by
     the batch CDF read and the CDF stream."""
-    commits, checkpoints = _list_log(table_path)
-    log_dir = _log_dir(table_path)
+    io = load_io(table_path)
+    _, checkpoints = _list_log(io, table_path)
 
     start_cp = max((c for c in checkpoints if c < starting_version), default=None)
     state = _new_state()
     if start_cp is not None:
-        _replay_checkpoint(state, table_path, start_cp)
+        _replay_checkpoint(state, io, table_path, start_cp, checkpoints[start_cp])
     replay_from = (start_cp + 1) if start_cp is not None else 0
 
     schema_json = json.dumps(json.loads(snap.schema.json()), sort_keys=True)
@@ -1288,58 +1268,55 @@ def _classify_changes(
     cdc: dict[int, list[tuple[str, dict]]] = {}
 
     for v in range(replay_from, end + 1):
-        p = os.path.join(log_dir, f"{v:020d}.json")
-        if not os.path.exists(p):
+        try:
+            actions = _commit_actions(io, table_path, v)
+        except FileNotFoundError:
             if v < starting_version and v in checkpoints:
                 continue  # pre-range, checkpoint-covered
             raise FileNotFoundError(
                 f"CDF: commit {v} missing from _delta_log — per-commit "
                 "changes cannot be attributed (vacuumed log?)"
-            )
+            ) from None
         in_range = v >= starting_version
         v_adds: list[dict] = []
         # path → (pv at removal, old dv descriptor or None)
         v_removes: dict[str, tuple[dict, dict | None]] = {}
         v_cdc: list[dict] = []
-        with open(p, encoding="utf-8") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if a.get("cdc") is not None:
-                    v_cdc.append(a["cdc"])
-                    continue
-                if in_range and a.get("metaData") is not None:
-                    ms = a["metaData"].get("schemaString")
-                    if ms and json.dumps(json.loads(ms), sort_keys=True) != schema_json:
+        for a in actions:
+            if a.get("cdc") is not None:
+                v_cdc.append(a["cdc"])
+                continue
+            if in_range and a.get("metaData") is not None:
+                ms = a["metaData"].get("schemaString")
+                if ms and json.dumps(json.loads(ms), sort_keys=True) != schema_json:
+                    raise ValueError(
+                        f"CDF: commit {v} changes the table schema inside "
+                        "the requested range; split the read at that version"
+                    )
+            if a.get("remove") is not None and in_range:
+                rm = a["remove"]
+                rp = rm["path"]
+                if rm.get("dataChange", True):
+                    # replay state keyed (path, dv uniqueId): prefer
+                    # the instance the remove names, else the sole
+                    # live instance (pv is path-consistent anyway)
+                    by_dv = state["files"].get(rp) or {}
+                    rm_dv = _normalize_dv(rm.get("deletionVector"))
+                    entry = by_dv.get(_dv_unique_id(rm_dv)) or (
+                        next(iter(by_dv.values())) if by_dv else None
+                    )
+                    pv = rm.get("partitionValues") or (entry[0] if entry else None)
+                    if pv is None:
                         raise ValueError(
-                            f"CDF: commit {v} changes the table schema inside "
-                            "the requested range; split the read at that version"
+                            f"CDF: remove of {rp} at commit {v} predates "
+                            "the replayable log — cannot recover its "
+                            "partition values"
                         )
-                if a.get("remove") is not None and in_range:
-                    rm = a["remove"]
-                    rp = rm["path"]
-                    if rm.get("dataChange", True):
-                        # replay state keyed (path, dv uniqueId): prefer
-                        # the instance the remove names, else the sole
-                        # live instance (pv is path-consistent anyway)
-                        by_dv = state["files"].get(rp) or {}
-                        rm_dv = _normalize_dv(rm.get("deletionVector"))
-                        entry = by_dv.get(_dv_unique_id(rm_dv)) or (
-                            next(iter(by_dv.values())) if by_dv else None
-                        )
-                        pv = rm.get("partitionValues") or (entry[0] if entry else None)
-                        if pv is None:
-                            raise ValueError(
-                                f"CDF: remove of {rp} at commit {v} predates "
-                                "the replayable log — cannot recover its "
-                                "partition values"
-                            )
-                        dv_old = rm_dv or (entry[1] if entry else None)
-                        v_removes[rp] = (dict(pv), dv_old)
-                if a.get("add") is not None and in_range and a["add"].get("dataChange", True):
-                    v_adds.append(a["add"])
-                _apply_action(state, a)
+                    dv_old = rm_dv or (entry[1] if entry else None)
+                    v_removes[rp] = (dict(pv), dv_old)
+            if a.get("add") is not None and in_range and a["add"].get("dataChange", True):
+                v_adds.append(a["add"])
+            _apply_action(state, a)
         if not in_range:
             continue
         if v_cdc:
@@ -1435,7 +1412,7 @@ def read_changes(
     """
     from pyspark.sql.types import LongType, StringType, StructField
 
-    commits, checkpoints = _list_log(table_path)
+    commits, checkpoints = _list_log(load_io(table_path), table_path)
     if not commits and not checkpoints:
         raise FileNotFoundError(f"empty _delta_log: {table_path}")
     latest = max([*commits, *checkpoints])
@@ -1512,46 +1489,25 @@ def delta_history(table_path: str) -> list[dict]:
     (from commitInfo when present), and action counts.  Driver-side,
     metadata-scale (JSON only; checkpoint-only versions appear with
     operation 'UNKNOWN (checkpoint-only)')."""
-    commits, checkpoints = _list_log(table_path)
+    io = load_io(table_path)
+    commits, checkpoints = _list_log(io, table_path)
     if not commits and not checkpoints:
         raise FileNotFoundError(f"empty _delta_log: {table_path}")
     out: list[dict] = []
     for v in sorted(set(commits) | set(checkpoints), reverse=True):
-        p = os.path.join(_log_dir(table_path), f"{v:020d}.json")
-        if not os.path.exists(p):
-            out.append(
-                {
-                    "version": v,
-                    "timestamp": None,
-                    "operation": "UNKNOWN (checkpoint-only)",
-                    "n_adds": None,
-                    "n_removes": None,
-                }
-            )
+        row = {"version": v, "timestamp": None, "operation": "UNKNOWN (checkpoint-only)"}
+        if v not in commits:
+            out.append({**row, "n_adds": None, "n_removes": None})
             continue
-        op, ts, n_add, n_rm = None, None, 0, 0
-        with open(p, encoding="utf-8") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                ci = a.get("commitInfo")
-                if ci:
-                    op = ci.get("operation", op)
-                    ts = ci.get("inCommitTimestamp", ci.get("timestamp", ts))
-                if a.get("add") is not None:
-                    n_add += 1
-                if a.get("remove") is not None:
-                    n_rm += 1
-        if ts is None:
-            ts = int(os.path.getmtime(p) * 1000)
+        actions = _commit_actions(io, table_path, v)
+        ops = [a["commitInfo"].get("operation") for a in actions if a.get("commitInfo")]
         out.append(
             {
-                "version": v,
-                "timestamp": ts,
-                "operation": op or "UNKNOWN",
-                "n_adds": n_add,
-                "n_removes": n_rm,
+                **row,
+                "timestamp": _commit_timestamp(io, table_path, v, actions),
+                "operation": next((op for op in reversed(ops) if op), "UNKNOWN"),
+                "n_adds": sum(a.get("add") is not None for a in actions),
+                "n_removes": sum(a.get("remove") is not None for a in actions),
             }
         )
     return out

@@ -35,6 +35,7 @@ import uuid as _uuid
 
 import numpy as np
 
+from .iceberg.io import load_io
 from .iceberg.puffin import DV_MAGIC, decode_dv_blob, deserialize_roaring64, dv_blob
 
 __all__ = [
@@ -108,9 +109,7 @@ def dv_store_path(table_path: str, descriptor: dict) -> str:
         prefix, enc = poi[:-20], poi[-20:]
         u = _uuid.UUID(bytes=z85decode(enc)[:16])
         name = f"deletion_vector_{u}.bin"
-        return os.path.join(table_path, prefix, name) if prefix else os.path.join(
-            table_path, name
-        )
+        return os.path.join(table_path, prefix, name)
     raise ValueError(f"not an on-disk DV storageType: {st!r}")
 
 
@@ -162,7 +161,7 @@ def decode_dv_spec(spec: dict) -> np.ndarray:
         pos = deserialize_roaring64(body, 4)
     else:
         path = spec["file"]
-        with open(path, "rb") as f:
+        with load_io(path).open_input(path) as f:
             version = f.read(1)
             if version != bytes([_DV_FILE_VERSION]):
                 raise ValueError(
@@ -232,16 +231,12 @@ def write_dv_file(
     per the protocol: 1-byte version, then the framed blob."""
     blob, card = dv_blob(positions)
     u = _uuid.uuid4()
-    d = os.path.join(table_path, prefix) if prefix else table_path
-    os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, f"deletion_vector_{u}.bin"), "wb") as f:
-        f.write(bytes([_DV_FILE_VERSION]))
-        offset = f.tell()
-        f.write(blob)
+    path = os.path.join(table_path, prefix, f"deletion_vector_{u}.bin")
+    load_io(path).write(path, bytes([_DV_FILE_VERSION]) + blob)
     return {
         "storageType": "u",
         "pathOrInlineDv": prefix + z85encode(u.bytes),
-        "offset": offset,
+        "offset": 1,  # after the 1-byte format version
         # sizeInBytes = magic+vector (the blob minus its 4-byte length
         # prefix and 4-byte CRC), matching delta-spark
         "sizeInBytes": len(blob) - 8,

@@ -8,7 +8,7 @@ Scope:
     (hive-layout partitioning), then one atomic JSON commit listing
     add (and for overwrite, remove) actions with per-file
     ``partitionValues`` and numRecords stats
-  * optimistic concurrency: the commit file is created with O_EXCL, so
+  * optimistic concurrency: the commit file is put-if-absent, so
     two writers racing to version N get exactly one winner (same
     contract the protocol specifies for the log store)
   * ``write_checkpoint`` — classic single-part parquet checkpoint +
@@ -32,14 +32,14 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .delta import _decoded_positions_df, _list_log, _log_dir, load_delta
+from .delta import _commit_timestamp, _decoded_positions_df, _list_log, _log_dir, load_delta
+from .iceberg.io import load_io
 
 __all__ = [
     "create_delta_table",
@@ -73,9 +73,10 @@ def _commit(
     actions: list[dict],
     configuration: dict | None = None,
 ) -> None:
-    """Atomic commit: O_EXCL create of the next version file. A loser
-    in a version race gets FileExistsError and must re-plan (the
-    protocol's put-if-absent log-store contract).
+    """Atomic commit: put-if-absent of the next version file
+    (``io.create``). A loser in a version race gets FileExistsError and
+    must re-plan (the protocol's log-store contract); a crash mid-write
+    leaves no torn ``<version>.json``.
 
     When the table enables In-Commit Timestamps
     (delta.enableInCommitTimestamps=true, § ICT), commitInfo leads the
@@ -85,6 +86,7 @@ def _commit(
     properties — inCommitTimestampEnablementVersion/-Timestamp — are
     the enabling USER's job via set_properties; this writer stamps
     whatever the configuration says.)"""
+    io = load_io(table_path)
     now = int(time.time() * 1000)
     ci: dict = {"timestamp": now, "operation": "icegopher-delta-write"}
     if (configuration or {}).get(
@@ -92,17 +94,16 @@ def _commit(
     ).lower() == "true":
         prev = 0
         if version > 0:
-            from .delta import _commit_timestamp
-
             try:
-                prev = _commit_timestamp(table_path, version - 1)
+                prev = _commit_timestamp(io, table_path, version - 1)
             except OSError:
                 prev = 0  # pre-checkpoint commit vacuumed — clock rules
         ci["inCommitTimestamp"] = max(now, prev + 1)
-    path = os.path.join(_log_dir(table_path), f"{version:020d}.json")
     lines = [json.dumps({"commitInfo": ci})] + [json.dumps(a) for a in actions]
-    with open(path, "x", encoding="utf-8") as f:
-        f.write("\n".join(lines) + "\n")
+    io.create(
+        os.path.join(_log_dir(table_path), f"{version:020d}.json"),
+        ("\n".join(lines) + "\n").encode("utf-8"),
+    )
 
 
 def create_delta_table(
@@ -135,8 +136,7 @@ def create_delta_table(
                 f"writer serializes only {sorted(_PARTITIONABLE)} partition "
                 "values exactly — make it a data column instead"
             )
-    os.makedirs(_log_dir(table_path), exist_ok=True)
-    if os.listdir(_log_dir(table_path)):
+    if load_io(table_path).list_dir(_log_dir(table_path)):
         raise FileExistsError(f"{table_path} already has a _delta_log")
     conf = dict(configuration or {})
     proto = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -221,55 +221,58 @@ def _stage_and_collect(
     actions. Files stay where Spark put them (hive layout for
     partitioned tables) — the log's partitionValues, parsed from the
     layout THIS writer controls, are what readers trust."""
-    import urllib.parse
-
     import pyarrow.parquet as pq
 
-    stage = f"data-{uuid.uuid4().hex[:12]}"
-    out_dir = os.path.join(table_path, stage)
+    io = load_io(table_path)
+    out_dir = os.path.join(table_path, f"data-{uuid.uuid4().hex[:12]}")
     writer = df.write.mode("error")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(out_dir)
 
     adds: list[dict] = []
-    for dirpath, _dirs, files in os.walk(out_dir):
-        # partition values from the hive dirs under the staging root
-        rel_dir = os.path.relpath(dirpath, out_dir)
-        pv: dict[str, str | None] = {}
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                k, _, v = seg.partition("=")
-                pv[k] = (
-                    None
-                    if v == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(v)
-                )
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            full = os.path.join(dirpath, fn)
-            rel = os.path.relpath(full, table_path)
-            try:
-                stats = json.dumps(_footer_stats(pq.ParquetFile(full)))
-            except Exception:  # noqa: BLE001
-                # stats are advisory; pyarrow cannot parse some logical
-                # types Spark writes (VARIANT) — skip rather than fail
-                # the whole commit
-                stats = None
-            add = {
-                "path": rel.replace(os.sep, "/"),
-                "partitionValues": {c: pv.get(c) for c in part_cols},
-                "size": os.path.getsize(full),
-                "modificationTime": int(os.path.getmtime(full) * 1000),
-                "dataChange": True,
-            }
-            if stats is not None:
-                add["stats"] = stats
-            adds.append({"add": add})
-    if not adds:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    for f, rel, pv in _staged_files(io, table_path, out_dir):
+        try:
+            with io.open_input(f.path) as fh:
+                stats = json.dumps(_footer_stats(pq.ParquetFile(fh)))
+        except Exception:  # noqa: BLE001
+            # stats are advisory; pyarrow cannot parse some logical
+            # types Spark writes (VARIANT) — skip rather than fail
+            # the whole commit
+            stats = None
+        add = {
+            "path": rel,
+            "partitionValues": {c: pv.get(c) for c in part_cols},
+            "size": f.size,
+            "modificationTime": f.mtime_ms,
+            "dataChange": True,
+        }
+        if stats is not None:
+            add["stats"] = stats
+        adds.append({"add": add})
     return adds
+
+
+def _staged_files(io, table_path: str, out_dir: str) -> list:
+    """(FileInfo, table-relative path, hive partition values) for each
+    parquet file a Spark write committed under ``out_dir`` — the values
+    parsed from the layout THIS writer controls. An empty staging dir
+    is removed."""
+    import urllib.parse
+
+    out = []
+    for f in io.list_prefix(out_dir):
+        if not f.path.endswith(".parquet"):
+            continue
+        pv: dict[str, str | None] = {}
+        rel_dir = os.path.relpath(os.path.dirname(f.path), out_dir)
+        for seg in rel_dir.split(os.sep) if rel_dir != "." else []:
+            k, _, v = seg.partition("=")
+            pv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else urllib.parse.unquote(v)
+        out.append((f, os.path.relpath(f.path, table_path).replace(os.sep, "/"), pv))
+    if not out:
+        io.remove_dir(out_dir)
+    return out
 
 
 def _cdf_enabled(snap) -> bool:
@@ -288,47 +291,23 @@ def _stage_cdc(spark: SparkSession, table_path: str, snap, cdc_df: DataFrame) ->
     by definition); partition values ride in the action like adds.
     The write is Spark-distributed (same hive staging as data files);
     the driver touches one metadata row per cdc file."""
-    import urllib.parse
-
     data, part_phys = _to_physical(snap, cdc_df, extra_cols=("_change_type",))
-    stage = os.path.join("_change_data", f"cdc-{uuid.uuid4().hex[:12]}")
-    out_dir = os.path.join(table_path, stage)
+    out_dir = os.path.join(table_path, "_change_data", f"cdc-{uuid.uuid4().hex[:12]}")
     writer = data.write.mode("error")
     if part_phys:
         writer = writer.partitionBy(*part_phys)
     writer.parquet(out_dir)
-
-    actions: list[dict] = []
-    for dirpath, _dirs, files in os.walk(out_dir):
-        rel_dir = os.path.relpath(dirpath, out_dir)
-        pv: dict[str, str | None] = {}
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                k, _, v = seg.partition("=")
-                pv[k] = (
-                    None
-                    if v == "__HIVE_DEFAULT_PARTITION__"
-                    else urllib.parse.unquote(v)
-                )
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            full = os.path.join(dirpath, fn)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": os.path.relpath(full, table_path).replace(
-                            os.sep, "/"
-                        ),
-                        "partitionValues": {c: pv.get(c) for c in part_phys},
-                        "size": os.path.getsize(full),
-                        "dataChange": False,
-                    }
-                }
-            )
-    if not actions:
-        shutil.rmtree(out_dir, ignore_errors=True)
-    return actions
+    return [
+        {
+            "cdc": {
+                "path": rel,
+                "partitionValues": {c: pv.get(c) for c in part_phys},
+                "size": f.size,
+                "dataChange": False,
+            }
+        }
+        for f, rel, pv in _staged_files(load_io(table_path), table_path, out_dir)
+    ]
 
 
 def _footer_stats(pf) -> dict:
@@ -642,7 +621,7 @@ _DELETED_FILE_RETENTION_DEFAULT_MS = 7 * 24 * 3600 * 1000  # protocol default
 
 
 def _next_version(table_path: str) -> int:
-    commits, checkpoints = _list_log(table_path)
+    commits, checkpoints = _list_log(load_io(table_path), table_path)
     return max([*commits, *checkpoints]) + 1
 
 
@@ -730,6 +709,7 @@ def write_checkpoint(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    io = load_io(table_path)
     snap = load_delta(table_path, version=version)
     v = snap.version
     pv_t = pa.map_(pa.string(), pa.string())
@@ -801,11 +781,12 @@ def write_checkpoint(
             # DV-carrying adds carry wide-bounds stats (protocol:
             # tightBounds=false) — numRecords is the PHYSICAL count
             st = {**st, "tightBounds": False}
+        fi = io.info(p)
         row = {
             "path": os.path.relpath(p, table_path).replace(os.sep, "/"),
             "partitionValues": [(k, val) for k, val in pv.items() if val is not None],
-            "size": os.path.getsize(p),
-            "modificationTime": int(os.path.getmtime(p) * 1000),
+            "size": fi.size,
+            "modificationTime": fi.mtime_ms,
             "dataChange": False,
             "stats": json.dumps(st) if st else None,
         }
@@ -923,6 +904,14 @@ def write_checkpoint(
             offset += len(rows)
         return pa.table(cols), total
 
+    def _put(path: str, tbl) -> None:
+        # serialized whole, then installed atomically: a crash
+        # mid-encode leaves no torn checkpoint, which
+        # _complete_checkpoints would trust by its name
+        sink = pa.BufferOutputStream()
+        pq.write_table(tbl, sink)
+        io.write(path, sink.getvalue().to_pybytes())
+
     # txn rows MUST ride (protocol: dropping them resets every sink's
     # exactly-once watermark); domainMetadata rides verbatim (same loss
     # class); removes are the retention tombstones filtered above
@@ -947,14 +936,13 @@ def write_checkpoint(
         u = str(uuid.uuid4())
         # file actions go to ONE sidecar; everything else tops the
         # uuid-named checkpoint with a checkpointMetadata stamp
-        sc_dir = os.path.join(log_dir, "_sidecars")
-        os.makedirs(sc_dir, exist_ok=True)
         sc_name = f"{u}.parquet"
-        sc_path = os.path.join(sc_dir, sc_name)
+        sc_path = os.path.join(log_dir, "_sidecars", sc_name)
         sc_tbl, n_sc = _diagonal(
             [("add", add_t, rows_add), ("remove", rm_t, rows_rm)]
         )
-        pq.write_table(sc_tbl, sc_path)
+        _put(sc_path, sc_tbl)
+        sc_info = io.info(sc_path)
         cm_t = pa.struct([("version", pa.int64())])
         sc_t = pa.struct(
             [
@@ -965,8 +953,8 @@ def write_checkpoint(
         )
         sc_row = {
             "path": sc_name,
-            "sizeInBytes": os.path.getsize(sc_path),
-            "modificationTime": int(os.path.getmtime(sc_path) * 1000),
+            "sizeInBytes": sc_info.size,
+            "modificationTime": sc_info.mtime_ms,
         }
         top_tbl, n_top = _diagonal(
             [
@@ -978,9 +966,7 @@ def write_checkpoint(
                 ("sidecar", sc_t, [sc_row]),
             ]
         )
-        pq.write_table(
-            top_tbl, os.path.join(log_dir, f"{v:020d}.checkpoint.{u}.parquet")
-        )
+        _put(os.path.join(log_dir, f"{v:020d}.checkpoint.{u}.parquet"), top_tbl)
         n = n_top + n_sc
     else:
         tbl, n = _diagonal(
@@ -993,9 +979,9 @@ def write_checkpoint(
                 ("remove", rm_t, rows_rm),
             ]
         )
-        pq.write_table(tbl, os.path.join(log_dir, f"{v:020d}.checkpoint.parquet"))
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as f:
-        json.dump({"version": v, "size": n}, f)  # parts omitted: single-part
+        _put(os.path.join(log_dir, f"{v:020d}.checkpoint.parquet"), tbl)
+    # parts omitted: single-part
+    io.write(os.path.join(log_dir, "_last_checkpoint"), json.dumps({"version": v, "size": n}).encode())
     return v
 
 
@@ -1164,8 +1150,10 @@ def _dv_swap_actions(
             }
         )
     now_ms = int(time.time() * 1000)
+    io = load_io(table_path)
     for r in dv_rows:
         abs_path, pv = uri_info[r["_file_path"]]
+        fi = io.info(abs_path)
         rel = os.path.relpath(abs_path, table_path).replace(os.sep, "/")
         old_dv = snap.deletion_vectors.get(abs_path)
         rm = {
@@ -1183,8 +1171,8 @@ def _dv_swap_actions(
                 "add": {
                     "path": rel,
                     "partitionValues": dict(pv),
-                    "size": os.path.getsize(abs_path),
-                    "modificationTime": int(os.path.getmtime(abs_path) * 1000),
+                    "size": fi.size,
+                    "modificationTime": fi.mtime_ms,
                     "dataChange": True,
                     # bounds over a superset of the live rows — sound
                     # for skipping (may under-skip, never misreads);
@@ -1244,9 +1232,11 @@ def optimize_delta(
     _check_writer_protocol(snap, "optimize")
 
     # group live files by partition tuple; pick small-file groups
+    io = load_io(table_path)
+    size = {p: io.info(p).size for p, _ in snap.files}
     groups: dict[tuple, list[tuple[str, dict]]] = {}
     for p, pv in snap.files:
-        if os.path.getsize(p) < target_file_bytes:
+        if size[p] < target_file_bytes:
             groups.setdefault(tuple(sorted(pv.items())), []).append((p, pv))
     victims = [g for g in groups.values() if len(g) >= min_files]
     if not victims:
@@ -1269,7 +1259,7 @@ def optimize_delta(
         position_masks=masks,
         partition_name_map=_partition_name_map(snap),
     )
-    total = sum(os.path.getsize(p) for p, _ in flat)
+    total = sum(size[p] for p, _ in flat)
     n_out = max(1, math.ceil(total / target_file_bytes))
     df = (
         df.repartition(n_out, *snap.partition_columns)
@@ -1409,6 +1399,7 @@ def restore_delta(table_path: str, version: int) -> int:
     Deletion vectors ride along: a file restored WITH its old DV
     descriptor masks exactly the rows it masked then.  Driver-only,
     metadata-scale."""
+    io = load_io(table_path)
     snap_now = load_delta(table_path)
     _check_writer_protocol(snap_now, "restore")
     snap_old = load_delta(table_path, version=version)
@@ -1446,16 +1437,18 @@ def restore_delta(table_path: str, version: int) -> int:
         if p in now_files and now_files[p] == (pv, dv):
             continue  # unchanged live file
         rel = os.path.relpath(p, table_path).replace(os.sep, "/")
-        if not os.path.exists(p):
+        try:
+            fi = io.info(p)
+        except FileNotFoundError:
             raise FileNotFoundError(
                 f"restore target version {version} references {rel}, which "
                 "was vacuumed — cannot restore"
-            )
+            ) from None
         add = {
             "path": rel,
             "partitionValues": dict(pv),
-            "size": os.path.getsize(p),
-            "modificationTime": int(os.path.getmtime(p) * 1000),
+            "size": fi.size,
+            "modificationTime": fi.mtime_ms,
             "dataChange": True,
         }
         st = snap_old.file_stats.get(p)
@@ -1978,7 +1971,6 @@ def link_iceberg_to_delta(
             d = _w(dp, pos)
             return pd.DataFrame([{"path": key[0], **d}])
 
-        os.makedirs(delta_path, exist_ok=True)
         rows = all_pos.groupBy("path").applyInPandas(_mk_dv, out_schema).collect()
         deletes_by_file = {
             r["path"]: {
@@ -1992,8 +1984,8 @@ def link_iceberg_to_delta(
         }
 
     schema = iceberg_table.scan().to_df(spark).schema
-    os.makedirs(_log_dir(delta_path), exist_ok=True)
-    if [f for f in os.listdir(_log_dir(delta_path)) if f.endswith(".json")]:
+    io = load_io(delta_path)
+    if [f for f in io.list_dir(_log_dir(delta_path)) if f.endswith(".json")]:
         raise FileExistsError(f"{delta_path} already has a _delta_log")
     proto = (
         {
@@ -2020,11 +2012,12 @@ def link_iceberg_to_delta(
     ]
     for t in sorted(tasks, key=lambda t: t.file.file_path):
         abs_path = strip_file_scheme(t.file.file_path)
+        fi = io.info(abs_path)
         add = {
             "path": abs_path,  # absolute: zero-copy link
             "partitionValues": {},
-            "size": int(t.file.file_size_in_bytes or os.path.getsize(abs_path)),
-            "modificationTime": int(os.path.getmtime(abs_path) * 1000),
+            "size": int(t.file.file_size_in_bytes or fi.size),
+            "modificationTime": fi.mtime_ms,
             "dataChange": True,
         }
         dv = deletes_by_file.get(abs_path)

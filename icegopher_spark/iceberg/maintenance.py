@@ -197,7 +197,7 @@ def compact_data_files(
         partition = dict(pkey)
         group_pairs = [
             (f"{out}/{fn}", partition)
-            for fn in sorted(os.listdir(out))
+            for fn in sorted(table.io.list_dir(out))
             if fn.endswith(ext)
         ]
         # batch wrapper: ORC/Avro rewrites keep their column stats
@@ -379,18 +379,6 @@ def _safe_remove(table: Table, path: str) -> None:
         pass
 
 
-def _list_recursive(location: str) -> list[str]:
-    """List every file under a table location. Local-FS implementation
-    (os.walk); an object store would swap in a prefix listing — the
-    orphan algorithm is identical."""
-    root = strip_scheme(location)
-    out: list[str] = []
-    for dirpath, _dirs, files in os.walk(root):
-        for fn in files:
-            out.append(os.path.join(dirpath, fn))
-    return out
-
-
 DEFAULT_ORPHAN_AGE_MS = 3 * 24 * 3600 * 1000  # Iceberg's 3-day default
 
 
@@ -413,12 +401,12 @@ def orphan_files(
         table = table.refresh()
     if older_than_ms is None:
         older_than_ms = DEFAULT_ORPHAN_AGE_MS
-    cutoff_s = _time.time() - older_than_ms / 1000.0
+    cutoff_ms = int(_time.time() * 1000) - older_than_ms
     md = table.metadata
     referenced: set[str] = set()
     location = strip_scheme(md.location)
     # metadata plane: every versioned metadata json + version hint
-    for fn in os.listdir(os.path.join(location, "metadata")):
+    for fn in table.io.list_dir(os.path.join(location, "metadata")):
         if fn.endswith(".metadata.json") or fn == "version-hint.text":
             referenced.add(os.path.join(location, "metadata", fn))
     # registered statistics files are LIVE metadata, not orphans —
@@ -437,7 +425,8 @@ def orphan_files(
     # Spark write artifacts that are never referenced but expected
     noise = ("_SUCCESS", ".crc", "_started", "_committed")
     orphans = []
-    for path in _list_recursive(md.location):
+    for fi in table.io.list_prefix(md.location):
+        path = fi.path
         if path in referenced:
             continue
         if f"{os.sep}_cache{os.sep}" in path:
@@ -448,13 +437,10 @@ def orphan_files(
         base = os.path.basename(path)
         if base == "_SUCCESS" or base.endswith(".crc") or any(base.startswith(n) for n in noise):
             continue
-        try:
-            if os.path.getmtime(path) > cutoff_s:
-                continue  # too young: may belong to an in-flight commit
-        except OSError:
-            continue  # vanished mid-listing → someone owns it; skip
+        if fi.mtime_ms > cutoff_ms:
+            continue  # too young: may belong to an in-flight commit
         orphans.append(path)
-    return sorted(orphans)
+    return orphans
 
 
 def orphan_files_distributed(
@@ -493,13 +479,13 @@ def orphan_files_distributed(
         table = table.refresh()
     if older_than_ms is None:
         older_than_ms = DEFAULT_ORPHAN_AGE_MS
-    cutoff_s = _time.time() - older_than_ms / 1000.0
+    cutoff_ms = int(_time.time() * 1000) - older_than_ms
     md = table.metadata
     location = strip_scheme(md.location)
 
     # --- driver side: metadata plane + stats + manifest lists ---------
     small_refs: set[str] = set()
-    for fn in os.listdir(os.path.join(location, "metadata")):
+    for fn in table.io.list_dir(os.path.join(location, "metadata")):
         if fn.endswith(".metadata.json") or fn == "version-hint.text":
             small_refs.add(os.path.join(location, "metadata", fn))
     for e in [*md.statistics, *md.partition_statistics]:
@@ -547,49 +533,25 @@ def orphan_files_distributed(
     for p in reachable_parts[1:]:
         reachable = reachable.unionByName(p)
 
-    # --- executor side: parallel tree walk with mtimes -----------------
-    root = location
-    top_files: list[tuple[str, float]] = []
-    top_dirs: list[str] = []
-    for name in sorted(os.listdir(root)):
-        full = os.path.join(root, name)
-        if os.path.isdir(full):
-            top_dirs.append(full)
-        else:
-            try:
-                top_files.append((full, os.path.getmtime(full)))
-            except OSError:
-                pass  # vanished mid-listing → someone owns it
+    # --- executor side: one prefix listing per top-level entry ---------
+    tops = [os.path.join(location, n) for n in sorted(table.io.list_dir(location))]
 
     def _walk(batches):
         import pandas as pd
 
-        for pdf in batches:
-            paths: list[str] = []
-            mtimes: list[float] = []
-            for d in pdf["dir"]:
-                for dirpath, _dirs, files in os.walk(d):
-                    for fn in files:
-                        fp = os.path.join(dirpath, fn)
-                        try:
-                            mt = os.path.getmtime(fp)
-                        except OSError:
-                            continue
-                        paths.append(fp)
-                        mtimes.append(mt)
-            yield pd.DataFrame({"path": paths, "mtime": mtimes})
+        from .io import load_io
 
-    listing_parts = [
-        spark.createDataFrame(top_files or [], "path string, mtime double")
-    ]
-    if top_dirs:
-        ddf = spark.createDataFrame(
-            [(d,) for d in top_dirs], "dir string"
-        ).repartition(min(len(top_dirs), sc_parallelism))
-        listing_parts.append(ddf.mapInPandas(_walk, "path string, mtime double"))
-    listing = listing_parts[0]
-    for p in listing_parts[1:]:
-        listing = listing.unionByName(p)
+        for pdf in batches:
+            found = [f for d in pdf["dir"] for f in load_io(d, props).list_prefix(d)]
+            yield pd.DataFrame(
+                {"path": [f.path for f in found], "mtime": [f.mtime_ms for f in found]}
+            )
+
+    listing = (
+        spark.createDataFrame([(d,) for d in tops], "dir string")
+        .repartition(max(1, min(len(tops), sc_parallelism)))
+        .mapInPandas(_walk, "path string, mtime long")
+    )
 
     base = F.element_at(F.split(F.col("path"), os.sep), -1)
     candidates = (
@@ -601,7 +563,7 @@ def orphan_files_distributed(
         .filter(~base.startswith(".crc"))
         .filter(~base.startswith("_started"))
         .filter(~base.startswith("_committed"))
-        .filter(F.col("mtime") <= F.lit(cutoff_s))
+        .filter(F.col("mtime") <= F.lit(cutoff_ms))
     )
     orphans = (
         candidates.join(reachable.distinct(), "path", "left_anti")

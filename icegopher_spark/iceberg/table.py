@@ -104,6 +104,25 @@ class FileScanTask:
         return int(self.length / self.file.file_size_in_bytes * self.file.record_count)
 
 
+def version_path(location: str, version: int) -> str:
+    return f"{location}/metadata/v{version}.metadata.json"
+
+
+def current_version(io: FileIO, location: str) -> int:
+    """Newest metadata version of a filesystem table: the version hint,
+    stepped forward while the next version file exists (0 when neither
+    exists). A commit that crashed after its version file landed but
+    before the hint was rewritten leaves the hint one behind; trusting
+    it would aim every later commit at a taken version. Iceberg's
+    HadoopTableOperations reads the same way. ``create`` is atomic, so
+    a version file that exists is complete."""
+    hint = f"{location}/metadata/version-hint.text"
+    version = int(io.read(hint).decode().strip()) if io.exists(hint) else 0
+    while io.exists(version_path(location, version + 1)):
+        version += 1
+    return version
+
+
 class Table:
     """An Iceberg table bound to a FileIO and (optionally) a catalog."""
 
@@ -131,9 +150,7 @@ class Table:
         io = load_io(metadata_location, properties)
         loc = metadata_location
         if not loc.endswith(".json"):
-            hint_path = loc.rstrip("/") + "/metadata/version-hint.text"
-            version = int(io.read(hint_path).decode().strip())
-            loc = loc.rstrip("/") + f"/metadata/v{version}.metadata.json"
+            loc = version_path(loc.rstrip("/"), current_version(io, loc.rstrip("/")))
         md = parse_metadata(io.read(loc))
         return cls(("static",), md, loc, io=io)
 

@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io import LocalFileIO, strip_scheme
+from .io import load_io, strip_scheme
 from .literals import Literal, literal_to_bytes
 from .manifests import (
     DataFile,
@@ -50,7 +50,7 @@ from .metadata import (
 )
 from .refs import _ref_update
 from .schema import Schema
-from .table import Table, read_tasks, strip_file_scheme_col
+from .table import Table, current_version, read_tasks, strip_file_scheme_col, version_path
 from .transforms import PartitionSpec
 from .types import (
     BinaryType,
@@ -115,20 +115,9 @@ def create_table(
     if format_version >= 3:
         md["next-row-id"] = 0
     meta = parse_metadata(md)
-    io = LocalFileIO()
+    io = load_io(location)
     _commit_metadata(io, location, meta, expected_version=0)
-    return Table(("local", os.path.basename(location)), meta, _version_path(location, 1), io=io)
-
-
-def _version_path(location: str, version: int) -> str:
-    return f"{location}/metadata/v{version}.metadata.json"
-
-
-def _current_version(io, location: str) -> int:
-    hint = f"{location}/metadata/version-hint.text"
-    if not io.exists(hint):
-        return 0
-    return int(io.read(hint).decode().strip())
+    return Table(("local", os.path.basename(location)), meta, version_path(location, 1), io=io)
 
 
 _VERSION_RE = __import__("re").compile(r"/v(\d+)\.metadata\.json$")
@@ -141,7 +130,7 @@ def _loaded_version(table: Table) -> int:
     m = _VERSION_RE.search(table.metadata_location or "")
     if m:
         return int(m.group(1))
-    return _current_version(table.io, table.metadata.location)
+    return current_version(table.io, table.metadata.location)
 
 
 def commit_with_retry(table: Table, fn, attempts: int = 3) -> Table:
@@ -188,34 +177,22 @@ def commit_metadata_update(table, updates, requirements=None):
     version = _loaded_version(table)
     _commit_metadata(table.io, location, new_md, expected_version=version)
     table.metadata = new_md
-    table.metadata_location = _version_path(location, version + 1)
+    table.metadata_location = version_path(location, version + 1)
     return table
 
 
 def _commit_metadata(io, location: str, md: TableMetadata, expected_version: int) -> int:
-    """Atomic metadata swap: version files are create-once (O_EXCL), so
-    a concurrent committer loses and must retry after refresh —
-    optimistic concurrency without a lock service.
-
-    LOCAL filesystem only (O_EXCL has no S3 equivalent): an s3://
-    location refuses loudly instead of writing the version file into a
-    literal local './s3:/...' directory while the hint goes to S3 — a
-    split, unloadable table (r6 review). Remote tables commit through
-    a catalog (commit_metadata_update routes there first)."""
-    from urllib.parse import urlparse
-
-    if urlparse(location).scheme in ("s3", "s3a", "s3n"):
-        raise NotImplementedError(
-            f"filesystem commit requires a local location, got {location}; "
-            "use a catalog (REST/SQL) for object-store tables — the "
-            "version-file CAS needs create-exclusive, which S3 lacks"
-        )
+    """Atomic metadata swap: version files are create-once
+    (``io.create``, put-if-absent), so a concurrent committer loses and
+    must retry after refresh — optimistic concurrency without a lock
+    service. The version file is the commit point; the hint only
+    speeds up finding it (``table.current_version`` steps past a stale
+    one). Object stores refuse in ``S3FileIO.create``: remote tables
+    commit through a catalog (commit_metadata_update routes there
+    first)."""
     new_version = expected_version + 1
-    path = strip_scheme(_version_path(location, new_version))
-    os.makedirs(os.path.dirname(path), exist_ok=True)
     try:
-        with open(path, "xb") as f:  # fails if someone committed first
-            f.write(md.to_json().encode())
+        io.create(version_path(location, new_version), md.to_json().encode())
     except FileExistsError as e:
         raise CommitFailedError(
             f"version {new_version} already exists; refresh and retry"
@@ -225,11 +202,11 @@ def _commit_metadata(io, location: str, md: TableMetadata, expected_version: int
 
 
 # --------------------------------------------------------------------------
-def _footer_num_rows(local_path: str) -> int:
-    return _footer_summary(local_path)[0]
+def _footer_num_rows(path: str) -> int:
+    return _footer_summary(load_io(path), path)[0]
 
 
-def _footer_summary(local_path: str) -> tuple[int, list[str]]:
+def _footer_summary(io, path: str) -> tuple[int, list[str]]:
     """(FileMetaData.num_rows, top-level column names) from a parquet
     footer by a minimal thrift COMPACT-protocol walk — used only when
     pyarrow cannot open the footer (unrecognized logical types, e.g.
@@ -238,11 +215,11 @@ def _footer_summary(local_path: str) -> tuple[int, list[str]]:
     skipped byte-exactly. Column names matter because lineage-
     preserving rewrites record their materialized _row_id columns via
     value_counts — stats the fallback must reconstruct (r8 review)."""
-    with open(local_path, "rb") as fh:
+    with io.open_input(path) as fh:
         fh.seek(-8, 2)
         tail = fh.read(8)
         if tail[4:] != b"PAR1":
-            raise ValueError(f"{local_path}: not a parquet file")
+            raise ValueError(f"{path}: not a parquet file")
         flen = int.from_bytes(tail[:4], "little")
         fh.seek(-(8 + flen), 2)
         buf = fh.read(flen)
@@ -614,18 +591,21 @@ def collect_data_file(
     the distributed stats pass (``file_stats`` from
     ``_orc_avro_file_stats``; stats are optional in the spec — absent
     bounds just mean less pruning)."""
+    io = load_io(path)
+    size = io.info(path).size
     if path.endswith(".orc"):
         import pyarrow.orc as po
 
-        of = po.ORCFile(strip_scheme(path))
+        with io.open_input(path) as fh:
+            nrows = po.ORCFile(fh).nrows
         vc = nc = nanc = lo = up = None
         if file_stats:
             vc, nc, nanc, lo, up = _counts_and_bounds(schema, file_stats)
         return DataFile(
             file_path=path,
             file_format="ORC",
-            record_count=of.nrows,
-            file_size_in_bytes=os.path.getsize(strip_scheme(path)),
+            record_count=nrows,
+            file_size_in_bytes=size,
             partition=partition,
             value_counts=vc,
             null_value_counts=nc,
@@ -645,7 +625,7 @@ def collect_data_file(
             file_path=path,
             file_format="AVRO",
             record_count=count_ocf_rows(strip_scheme(path)),
-            file_size_in_bytes=os.path.getsize(strip_scheme(path)),
+            file_size_in_bytes=size,
             partition=partition,
             value_counts=vc,
             null_value_counts=nc,
@@ -656,7 +636,8 @@ def collect_data_file(
     import pyarrow.parquet as pq
 
     try:
-        f = pq.ParquetFile(strip_scheme(path))
+        with io.open_input(path) as fh:
+            meta = pq.ParquetFile(fh).metadata
     except OSError:
         # pyarrow refuses footers carrying logical types it doesn't know
         # (today: the parquet `variant` annotation Spark writes for
@@ -674,7 +655,7 @@ def collect_data_file(
             ROW_ID_FIELD_ID as _RIF,
         )
 
-        nrows, top_names = _footer_summary(strip_scheme(path))
+        nrows, top_names = _footer_summary(io, path)
         # lineage-preserving rewrites materialize _row_id physically and
         # are DETECTED via value_counts under the reserved ids — losing
         # that here would make the id allocator re-consume and scans
@@ -689,12 +670,11 @@ def collect_data_file(
             file_path=path,
             file_format="PARQUET",
             record_count=nrows,
-            file_size_in_bytes=os.path.getsize(strip_scheme(path)),
+            file_size_in_bytes=size,
             partition=partition,
             value_counts=vc,
             null_value_counts=nc,
         )
-    meta = f.metadata
     name_to_field = {field.name: field for field in schema.fields}
     # Reserved V3 lineage columns (materialized by lineage-preserving
     # rewrites, e.g. compaction): count them under the reserved field
@@ -849,7 +829,7 @@ def collect_data_file(
     return DataFile(
         file_path=path,
         record_count=meta.num_rows,
-        file_size_in_bytes=os.path.getsize(strip_scheme(path)),
+        file_size_in_bytes=size,
         partition=partition,
         column_sizes=column_sizes or None,
         value_counts=value_counts or None,
@@ -946,9 +926,8 @@ def _write_data_files(
     partition — the rewrite_data_files sort-strategy layout."""
     spec = table.spec
     schema = table.schema
-    # catalog tables carry file:// locations; local fs ops need plain paths
+    # catalog tables carry file:// locations; recorded paths are plain
     data_dir = strip_scheme(data_dir)
-    os.makedirs(data_dir, exist_ok=True)
     # align the incoming frame to the table schema (column order + types)
     # so e.g. a decimal literal lands as the declared double — writers
     # must never produce files whose physical types drift from the schema
@@ -1038,7 +1017,7 @@ def _write_data_files(
         df.write.mode("overwrite").format(fmt).save(out)
         return [
             (f"{out}/{f}", {})
-            for f in sorted(os.listdir(out))
+            for f in sorted(table.io.list_dir(out))
             if f.endswith(ext)
         ]
     # partitioned: materialize transform columns, write with partitionBy.
@@ -1094,8 +1073,8 @@ def _write_data_files(
 
         # hive-style dirs written executor-side under a task-attempt
         # staging protocol; harvest ONLY the promoted paths it returns
-        # (an os.walk would also pick up files a failed/speculative
-        # attempt left behind)
+        # (a recursive listing would also pick up files a failed/
+        # speculative attempt left behind)
         files = sorted(write_avro_files(staged, schema, out, partition_cols=names))
     else:
         (
@@ -1106,12 +1085,7 @@ def _write_data_files(
         )
         # Spark's committer has already cleaned up failed attempts; the
         # final tree contains only committed files
-        files = sorted(
-            os.path.join(root, fn)
-            for root, _dirs, fns in os.walk(out)
-            for fn in fns
-            if fn.endswith(ext)
-        )
+        files = [f.path for f in table.io.list_prefix(out) if f.path.endswith(ext)]
     pairs: list[tuple[str, dict[str, Any]]] = []
     for path in files:
         rel = os.path.relpath(os.path.dirname(path), out)
@@ -1705,11 +1679,11 @@ def _write_pos_delete_files(table: Table, matches: DataFrame) -> list[DataFile]:
     matches.coalesce(1).write.mode("overwrite").parquet(out_dir)
 
     delete_files = []
-    for fn in sorted(os.listdir(out_dir)):
-        if not fn.endswith(".parquet"):
+    for fi in table.io.list_prefix(out_dir):
+        if not fi.path.endswith(".parquet"):
             continue
-        path = f"{out_dir}/{fn}"
-        meta = pq.ParquetFile(path).metadata
+        with table.io.open_input(fi.path) as fh:
+            meta = pq.ParquetFile(fh).metadata
         if meta.num_rows == 0:
             continue
         # file_path is column 0 of the delete file layout
@@ -1731,10 +1705,10 @@ def _write_pos_delete_files(table: Table, matches: DataFrame) -> list[DataFile]:
             }
         delete_files.append(
             DataFile(
-                file_path=path,
+                file_path=fi.path,
                 content=DataFileContent.POSITION_DELETES,
                 record_count=meta.num_rows,
-                file_size_in_bytes=os.path.getsize(path),
+                file_size_in_bytes=fi.size,
                 partition={},
                 # path bounds let the planner skip non-overlapping data
                 # files (reference scanner.go:162-193 bounds check)
@@ -2071,19 +2045,19 @@ def _write_eq_delete_files(
     keys_df.select(*key_columns).distinct().coalesce(1).write.mode("overwrite").parquet(out_dir)
 
     delete_files = []
-    for fn in sorted(os.listdir(out_dir)):
-        if not fn.endswith(".parquet"):
+    for fi in table.io.list_prefix(out_dir):
+        if not fi.path.endswith(".parquet"):
             continue
-        path = f"{out_dir}/{fn}"
-        meta = pq.ParquetFile(path).metadata
+        with table.io.open_input(fi.path) as fh:
+            meta = pq.ParquetFile(fh).metadata
         if meta.num_rows == 0:
             continue
         delete_files.append(
             DataFile(
-                file_path=path,
+                file_path=fi.path,
                 content=DataFileContent.EQUALITY_DELETES,
                 record_count=meta.num_rows,
-                file_size_in_bytes=os.path.getsize(path),
+                file_size_in_bytes=fi.size,
                 partition={},
                 equality_ids=fids,
             )
@@ -2400,7 +2374,8 @@ def add_files(
             # branches; pq.ParquetFile on them raised magic-byte errors
             # before the commit even started (r6)
             continue
-        have = {c.split(".")[0] for c in pq.ParquetFile(strip_scheme(p)).schema_arrow.names}
+        with table.io.open_input(p) as fh:
+            have = {c.split(".")[0] for c in pq.ParquetFile(fh).schema_arrow.names}
         missing = [n for n in required if n not in have]
         if missing:
             raise ValueError(f"file {p} lacks required fields {missing}")

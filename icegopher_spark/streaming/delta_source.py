@@ -138,8 +138,9 @@ class _DeltaStreamReader(DataSourceStreamReader):
 
     def _latest_version(self) -> int:
         from ..delta import _list_log
+        from ..iceberg.io import load_io
 
-        commits, checkpoints = _list_log(self.location)
+        commits, checkpoints = _list_log(load_io(self.location), self.location)
         return max([*commits, *checkpoints])
 
     def latestOffset(self) -> dict:
@@ -269,35 +270,35 @@ class _DeltaStreamReader(DataSourceStreamReader):
                 "stream to pick up the new schema"
             )
 
-        log_dir = os.path.join(self.location, "_delta_log")
+        from ..delta import _commit_actions
+        from ..iceberg.io import load_io
+
+        io = load_io(self.location)
         for v in range(start["version"] + 1, end["version"] + 1):
-            cpath = os.path.join(log_dir, f"{v:020d}.json")
-            if not os.path.exists(cpath):
+            try:
+                actions = _commit_actions(io, self.location, v)
+            except FileNotFoundError:
                 raise FileNotFoundError(
                     f"Delta stream: commit {v} missing (vacuumed log?) — "
                     "cannot attribute adds per version; restart the stream"
-                )
+                ) from None
             adds, removes = [], 0
-            with open(cpath, encoding="utf-8") as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    a = json.loads(line)
-                    # dataChange=false actions (OPTIMIZE/compaction)
-                    # move bytes, not rows — transparent to an append
-                    # stream, exactly as delta-spark filters them
-                    if a.get("remove") and a["remove"].get("dataChange", True):
-                        removes += 1
-                    add = a.get("add")
-                    if add and add.get("dataChange", True):
-                        adds.append(add)
-                    if a.get("metaData") is not None:
-                        ms = a["metaData"].get("schemaString")
-                        if ms and json.loads(ms) != json.loads(schema_json):
-                            raise ValueError(
-                                f"Delta stream: commit {v} changes the table "
-                                "schema mid-stream; restart the stream"
-                            )
+            for a in actions:
+                # dataChange=false actions (OPTIMIZE/compaction)
+                # move bytes, not rows — transparent to an append
+                # stream, exactly as delta-spark filters them
+                if a.get("remove") and a["remove"].get("dataChange", True):
+                    removes += 1
+                add = a.get("add")
+                if add and add.get("dataChange", True):
+                    adds.append(add)
+                if a.get("metaData") is not None:
+                    ms = a["metaData"].get("schemaString")
+                    if ms and json.loads(ms) != json.loads(schema_json):
+                        raise ValueError(
+                            f"Delta stream: commit {v} changes the table "
+                            "schema mid-stream; restart the stream"
+                        )
             if removes:
                 if self.skip_change:
                     continue  # user opted out of change commits entirely

@@ -98,7 +98,7 @@ def test_expire_snapshots_failed_commit_deletes_nothing(spark, tmp_path, lineite
     # ADVICE#2: files must survive a lost CAS race.
     t = _mk(tmp_path, "day", lineitem)
     t = W.append(t, lineitem.limit(50))
-    before = M._list_recursive(t.metadata.location)
+    before = [f.path for f in t.io.list_prefix(t.metadata.location)]
 
     def boom(*a, **k):
         raise W.CommitFailedError("concurrent commit")
@@ -108,7 +108,7 @@ def test_expire_snapshots_failed_commit_deletes_nothing(spark, tmp_path, lineite
     monkeypatch.setattr(W, "_commit_metadata", boom)
     with pytest.raises(W.CommitFailedError):
         M.expire_snapshots(t, retain_last=1, delete_files=True)
-    after = M._list_recursive(t.metadata.location)
+    after = [f.path for f in t.io.list_prefix(t.metadata.location)]
     missing = set(before) - set(after)
     assert not missing, f"files deleted despite failed commit: {missing}"
 

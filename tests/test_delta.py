@@ -500,9 +500,10 @@ def test_ict_timestamp_travel_prefers_in_commit_timestamp(spark):
     LATEST version for any instant >= _T0."""
     from icegopher_spark.delta import _commit_timestamp
     from icegopher_spark.delta_queries import _T0, delta_ict_fixture_path
+    from icegopher_spark.iceberg.io import load_io
 
     loc = delta_ict_fixture_path(SF)
-    assert _commit_timestamp(loc, 3) == _T0 + 3000
+    assert _commit_timestamp(load_io(loc), loc, 3) == _T0 + 3000
     assert load_delta(loc, timestamp_ms=_T0 + 1000).version == 1
     assert load_delta(loc, timestamp_ms=_T0 + 2500).version == 2
     # history surfaces ICT too

@@ -750,8 +750,9 @@ def test_v2_checkpoint_json_file_not_a_commit(v2cp_loc, tmp_path):
     with open(os.path.join(d, fn), "w") as f:
         f.write(json.dumps({"checkpointMetadata": {"version": 99}}) + "\n")
     from icegopher_spark.delta import _list_log
+    from icegopher_spark.iceberg.io import load_io
 
-    commits, checkpoints = _list_log(loc)
+    commits, checkpoints = _list_log(load_io(loc), loc)
     assert 99 not in commits
     assert 99 in checkpoints
 
